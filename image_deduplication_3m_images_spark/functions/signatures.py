@@ -17,7 +17,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     IntegerType,
     LongType,
@@ -28,14 +27,6 @@ from pyspark.sql.types import (
 
 from image_deduplication_3m_images_spark.config import MINHASH_PRIME, DedupConfig
 from image_deduplication_3m_images_spark.functions.signature_core import HORNER_C
-
-SIGNATURE_STRUCT = StructType(
-    [
-        StructField("n_shingles", IntegerType(), False),
-        StructField("minhash", ArrayType(LongType(), False), False),
-        StructField("simhash", LongType(), False),
-    ]
-)
 
 _BIT_COLS = np.arange(64, dtype=np.uint64)[None, :]
 
@@ -222,19 +213,14 @@ def _batch_signatures(texts: pd.Series, cfg: DedupConfig) -> pd.DataFrame:
     )
 
 
-EXTRACT_SIGNATURE_STRUCT = StructType(
-    [StructField("text", StringType(), False)] + list(SIGNATURE_STRUCT.fields)
-)
-
-# Packed variant: Arrow/Catalyst conversion of LIST columns costs ~4us per
+# Packed layout: Arrow/Catalyst conversion of LIST columns costs ~4us per
 # ELEMENT (measured: returning array<long>(128) for 100k docs = 55 s vs 0.3 s
-# for scalars) — so the hot pipeline returns the 128 MinHash values as ONE
+# for scalars) — so the signature UDF returns the 128 MinHash values as ONE
 # 1 KiB binary cell.  Big-endian packing so `hex(substring(...))` unpacks
 # JVM-side; band keys are NOT computed in Python at all — they are derived
 # from the packed binary by `band_keys_from_packed_expr` (codegen).
 PACKED_SIGNATURE_STRUCT = StructType(
     [
-        StructField("text", StringType(), False),
         StructField("n_shingles", IntegerType(), False),
         StructField("simhash", LongType(), False),
         StructField("minhash_bin", BinaryType(), False),
@@ -242,139 +228,72 @@ PACKED_SIGNATURE_STRUCT = StructType(
 )
 
 
-def make_extract_signature_packed_udf(cfg: DedupConfig):
-    """Fused ``html -> struct<text,n_shingles,simhash,minhash_bin>`` — the
-    hot-pipeline variant (see PACKED_SIGNATURE_STRUCT rationale)."""
+def make_packed_signature_udf(cfg: DedupConfig, from_html: bool):
+    """Pandas UDF returning ``struct<n_shingles,simhash,minhash_bin>``.
+
+    ``from_html=True`` (pipeline, stream): the input is raw html, extracted
+    in the same Arrow round-trip and returned as a leading ``text`` field.
+    Feeding the raw extraction *expression* into several consumers would
+    make Catalyst's project-collapse re-evaluate it per consumer (measured
+    3-6x the cost); fusing emits ``text`` as a materialized column instead.
+    ``from_html=False`` (query catalog): the input is already text.
+    """
     from image_deduplication_3m_images_spark.functions.text import _extract_text_pd
 
-    @F.pandas_udf(PACKED_SIGNATURE_STRUCT)
-    def packed_udf(html: pd.Series) -> pd.DataFrame:
-        texts = _extract_text_pd(html)
+    fields = list(PACKED_SIGNATURE_STRUCT.fields)
+    if from_html:
+        fields.insert(0, StructField("text", StringType(), False))
+
+    @F.pandas_udf(StructType(fields))
+    def packed_udf(col: pd.Series) -> pd.DataFrame:
+        texts = _extract_text_pd(col) if from_html else col
         sig = _batch_signatures(texts, cfg)
-        mh_bin = [m.astype(">i8").tobytes() for m in sig["minhash"]]
-        return pd.DataFrame(
+        out = pd.DataFrame(
             {
-                "text": texts.reset_index(drop=True),
                 "n_shingles": sig["n_shingles"],
                 "simhash": sig["simhash"],
-                "minhash_bin": mh_bin,
+                "minhash_bin": [m.astype(">i8").tobytes() for m in sig["minhash"]],
             }
         )
+        if from_html:
+            out.insert(0, "text", texts.reset_index(drop=True))
+        return out
 
     return packed_udf
 
 
-def band_keys_from_packed_expr(minhash_bin, cfg: DedupConfig):
+def band_keys_from_packed_expr(minhash_bin: str, cfg: DedupConfig):
     """array<long> of the 16 LSH band keys, computed ENTIRELY JVM-side from
-    the packed MinHash binary: each key = first 15 hex chars of md5 of the
-    '_'-joined decimal signature slice — EXACTLY ``band_key_expr`` in
-    operators/lsh.py and the DuckDB oracle's bands CTE (byte-equality is
-    pinned in tests/test_packed_signatures.py).  ``conv(hex(substring))``
-    unpacks each value straight to its decimal string, so the whole chain
-    (unpack -> join -> md5 -> truncate) stays inside whole-stage codegen —
-    no per-row Python anywhere in the band-key path (VERDICT r3 item 4:
-    the old Python ``_band_keys`` loop was 16 interpreter-level md5 calls
-    per document inside the hot signature UDF).
+    the packed MinHash binary column named ``minhash_bin``: each key = first
+    15 hex chars of md5 of the '_'-joined decimal signature slice — EXACTLY
+    the DuckDB oracle's bands CTE,
+    ``('0x' || substr(md5(array_to_string(slice, '_')), 1, 15))::BIGINT``
+    (60 bits keeps the value inside a signed BIGINT; equality with the
+    Python reference is pinned in tests/test_packed_signatures.py).
+    ``conv(hex(substring))`` unpacks each value straight to its decimal
+    string, so the whole chain (unpack -> join -> md5 -> truncate) stays
+    inside whole-stage codegen — no per-row Python in the band-key path.
 
-    ``minhash_bin`` may be a column NAME (preferred): the whole array is
-    then rendered as ONE SQL string and parsed JVM-side in a single call —
-    the compositional Column form issued ~500 driver py4j round trips
-    (measured 0.5-0.9 s of pure driver time per invocation, paid by every
-    ``run_dedupe`` call and every streaming micro-batch); the parsed
-    expression tree is the same function-for-function chain, and
-    string-vs-Column equality is pinned in tests/test_packed_signatures.py.
-    A Column argument still takes the compositional path."""
+    The whole array is rendered as ONE SQL string and parsed JVM-side in a
+    single call: a compositional Column form issued ~500 driver py4j round
+    trips (measured 0.5-0.9 s of pure driver time per invocation, paid by
+    every ``run_dedupe`` call and every streaming micro-batch)."""
     r = cfg.rows_per_band
+    # backtick-quote (escaping embedded backticks) so names needing quoting
+    # (spaces, reserved words) parse, and dotted names stay literal column
+    # references instead of resolving as struct-field access
+    col = "`" + minhash_bin.replace("`", "``") + "`"
 
-    if isinstance(minhash_bin, str):
-        # backtick-quote so names needing quoting (spaces, reserved words)
-        # parse, and dotted names stay literal column references instead of
-        # resolving as struct-field access
-        col = f"`{minhash_bin}`"
-
-        def dec_s(i: int) -> str:
-            # decimal STRING of the i-th packed uint64 (values < 2**61, so
-            # the unsigned hex interpretation matches str(v) exactly)
-            return f"conv(hex(substring({col}, {i * 8 + 1}, 8)), 16, 10)"
-
-        bands_sql = []
-        for b in range(cfg.bands):
-            joined = ", ".join(dec_s(b * r + j) for j in range(r))
-            bands_sql.append(
-                "cast(conv(substring(md5(cast(concat_ws('_', "
-                f"{joined}) as binary)), 1, 15), 16, 10) as bigint)"
-            )
-        return F.expr("array(" + ", ".join(bands_sql) + ")")
-
-    def dec(i: int):
+    def dec_s(i: int) -> str:
         # decimal STRING of the i-th packed uint64 (values < 2**61, so the
         # unsigned hex interpretation matches str(v) exactly)
-        return F.conv(F.hex(F.substring(minhash_bin, i * 8 + 1, 8)), 16, 10)
+        return f"conv(hex(substring({col}, {i * 8 + 1}, 8)), 16, 10)"
 
-    keys = []
+    bands_sql = []
     for b in range(cfg.bands):
-        joined = F.concat_ws("_", *[dec(b * r + j) for j in range(r)])
-        keys.append(
-            F.conv(F.substring(F.md5(joined.cast("binary")), 1, 15), 16, 10).cast(
-                "long"
-            )
+        joined = ", ".join(dec_s(b * r + j) for j in range(r))
+        bands_sql.append(
+            "cast(conv(substring(md5(cast(concat_ws('_', "
+            f"{joined}) as binary)), 1, 15), 16, 10) as bigint)"
         )
-    return F.array(*keys)
-
-
-def unpack_band_keys_expr(band_keys_bin, bands: int):
-    """JVM-side unpack: binary(16*8) -> array<long> of band keys via
-    hex(substring) + conv — no Python, no per-element Arrow cost."""
-    return F.array(
-        *[
-            F.conv(F.hex(F.substring(band_keys_bin, b * 8 + 1, 8)), 16, 10).cast(
-                "long"
-            )
-            for b in range(bands)
-        ]
-    )
-
-
-def make_signature_udf(cfg: DedupConfig):
-    """Returns a pandas UDF ``text -> struct<n_shingles,minhash,simhash>``."""
-
-    @F.pandas_udf(SIGNATURE_STRUCT)
-    def signature_udf(texts: pd.Series) -> pd.DataFrame:
-        return _batch_signatures(texts, cfg)
-
-    return signature_udf
-
-
-def make_extract_signature_udf(cfg: DedupConfig):
-    """Fused ``html -> struct<text,n_shingles,minhash,simhash>`` pandas UDF.
-
-    One Arrow round-trip does extraction AND signatures: feeding the raw
-    extraction *expression* into several consumers would make Catalyst's
-    project-collapse re-evaluate it per consumer (measured 3-6x the cost);
-    fusing emits ``text`` as a materialized column instead.  Reference
-    analog: extract-once-use-everywhere
-    (``/root/reference/modules/memory_efficient_deduplication.py:233-247``).
-    """
-    from image_deduplication_3m_images_spark.functions.text import _extract_text_pd
-
-    @F.pandas_udf(EXTRACT_SIGNATURE_STRUCT)
-    def extract_signature_udf(html: pd.Series) -> pd.DataFrame:
-        texts = _extract_text_pd(html)
-        out = _batch_signatures(texts, cfg)
-        out.insert(0, "text", texts.reset_index(drop=True))
-        return out
-
-    return extract_signature_udf
-
-
-def with_signatures(df, cfg: DedupConfig, text_col: str = "text"):
-    """Project signature columns onto ``df`` (one wide row per doc — the
-    reference's feature dict becomes explicit columns, SURVEY.md §1.2).
-    """
-    sig = make_signature_udf(cfg)(F.col(text_col)).alias("sig")
-    return df.select("*", sig).select(
-        "*",
-        F.col("sig.n_shingles").alias("n_shingles"),
-        F.col("sig.minhash").alias("minhash"),
-        F.col("sig.simhash").alias("simhash"),
-    ).drop("sig")
+    return F.expr("array(" + ", ".join(bands_sql) + ")")

@@ -17,46 +17,15 @@ from pyspark.sql import functions as F
 from image_deduplication_3m_images_spark.config import DedupConfig
 
 
-def band_key_expr(minhash_col, band_id: int, rows_per_band: int):
-    """60-bit integer key for one band: md5 of '_'-joined signature values.
+def explode_bands(sig_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(id, band_keys) -> (id, band_id, band_key).
 
-    Mirrored exactly in the DuckDB oracle:
-    ``('0x' || substr(md5(array_to_string(slice, '_')), 1, 15))::BIGINT``.
-    60 bits (15 hex chars) keeps the value inside a signed 64-bit BIGINT.
+    ``band_keys`` (array<long>) is derived JVM-side from the packed MinHash
+    by ``band_keys_from_packed_expr`` — a plain posexplode here: whole-stage
+    codegen, no shuffle yet.
     """
-    lo = band_id * rows_per_band + 1  # slice() is 1-based
-    sl = F.slice(minhash_col, lo, rows_per_band)
-    joined = F.concat_ws("_", F.transform(sl, lambda x: x.cast("string")))
-    return F.conv(F.substring(F.md5(joined.cast("binary")), 1, 15), 16, 10).cast("long")
-
-
-def explode_bands(sig_df: DataFrame, cfg: DedupConfig, id_col: str = "doc_id") -> DataFrame:
-    """(id, minhash | band_keys | band_keys_bin) -> (id, band_id, band_key).
-
-    Three input shapes: the pipeline table carries precomputed ``band_keys``
-    (array<long>, computed JVM-side by ``band_keys_from_packed_expr``);
-    legacy checkpointed tables may carry ``band_keys_bin`` (binary-packed,
-    unpacked with hex/conv); otherwise keys are derived from the ``minhash``
-    array with md5/conv column exprs.  Either way: whole-stage codegen, no
-    shuffle yet.
-    """
-    if "band_keys" in sig_df.columns:
-        keys = F.col("band_keys")
-    elif "band_keys_bin" in sig_df.columns:
-        from image_deduplication_3m_images_spark.functions.signatures import (
-            unpack_band_keys_expr,
-        )
-
-        keys = unpack_band_keys_expr(F.col("band_keys_bin"), cfg.bands)
-    else:
-        keys = F.array(
-            *[
-                band_key_expr(F.col("minhash"), b, cfg.rows_per_band)
-                for b in range(cfg.bands)
-            ]
-        )
     return sig_df.select(
-        F.col(id_col), F.posexplode(keys).alias("band_id", "band_key")
+        F.col(id_col), F.posexplode("band_keys").alias("band_id", "band_key")
     )
 
 
@@ -125,7 +94,7 @@ def candidate_pairs(
 
     Returns (id_a, id_b, n_bands) with id_a < id_b, distinct.
     """
-    flat = explode_bands(sig_df, cfg, id_col)
+    flat = explode_bands(sig_df, id_col)
     if max_bucket_hint is not None and max_bucket_hint <= cfg.bucket_star_cap:
         grouped = flat.groupBy("band_id", "band_key").agg(
             F.sort_array(F.collect_list(id_col)).alias("ids")
@@ -221,25 +190,26 @@ def hot_bucket_probe(
     size, and at (say) 100M rows a 3000-member bucket would land ~1.5
     sampled members — a ~22% chance of zero, and a miss routes the plan
     to the fast path whose per-bucket pair expansion is O(B^2).  The
-    ``reps_df``: optional pre-collapsed representative frame (id + band
-    keys, one row per distinct text) — when the probe is EXACT
-    (fraction >= 1, i.e. small inputs) the caller's rep frame is the
-    identical groupBy.  NOTE: the probe's collect is its own action, so
-    the sha shuffle is only actually shared with the caller's later
-    consumption if the caller PERSISTS reps_df across both actions (the
-    pipeline does, gated on ``PROBE_TARGET_SAMPLE``); ignored when
-    sampling (the sampled path must collapse after sampling).  The sampled fraction has a floor (see the miss-cap math below —
+    sampled fraction therefore has a floor (see the miss-cap math below —
     the cap scales with a user-raised ``bucket_star_cap``): any bucket the
     fast path could not absorb (> ~_PROBE_MISS_CAP members,
     ~C(cap,2)=8.4M pairs in one task) lands >= ~10 expected sampled
     members ABOVE the decision threshold, P(miss) <= e^-10, AT ANY corpus
-    size — while the probe stays
-    ~400x cheaper than the exact profile.  Buckets between star_cap and
-    _PROBE_MISS_CAP may still slip, which is bounded-harmless (their
-    collect_list and pair counts are capped by construction).  Being
-    wrong in the other direction just runs the general tiers on a clean
-    corpus — correct, slightly slower.  The probe result is logged to
+    size — while the probe stays ~400x cheaper than the exact profile.
+    Buckets between star_cap and _PROBE_MISS_CAP may still slip, which is
+    bounded-harmless (their collect_list and pair counts are capped by
+    construction).  Being wrong in the other direction just runs the
+    general tiers on a clean corpus — correct, slightly slower.  The probe result is logged to
     lineage, so tier activation is never silent.
+
+    ``reps_df``: optional pre-collapsed representative frame (id + band
+    keys, one row per distinct text).  When the probe is EXACT (fraction
+    >= 1, i.e. small inputs) the caller's rep frame is the identical
+    groupBy and is used instead; ignored when sampling (the sampled path
+    must collapse after sampling).  NOTE: the probe's collect is its own
+    action, so the sha shuffle is only actually shared with the caller's
+    later consumption if the caller PERSISTS reps_df across both actions
+    (the pipeline does, gated on ``PROBE_TARGET_SAMPLE``).
     """
     # The miss condition is sample_max <= star_cap * fraction (not zero
     # sampled members), so the floor must keep a miss-cap-sized bucket's
@@ -269,7 +239,7 @@ def hot_bucket_probe(
             F.min(id_col).alias(id_col), F.first("band_keys").alias("band_keys")
         )
     row = (
-        explode_bands(reps, cfg, id_col)
+        explode_bands(reps, id_col)
         .groupBy("band_id", "band_key")
         .agg(F.count(F.lit(1)).alias("n"))
         .agg(F.max("n").alias("m"))
@@ -295,7 +265,7 @@ def hot_bucket_stats(sig_df: DataFrame, cfg: DedupConfig, id_col: str = "doc_id"
     reference analog: the uninstrumented bucket skip at deduplication.py:314-317).
     """
     return (
-        explode_bands(sig_df, cfg, id_col)
+        explode_bands(sig_df, id_col)
         .groupBy("band_id", "band_key")
         .agg(F.count(F.lit(1)).alias("bucket_size"))
         .groupBy()

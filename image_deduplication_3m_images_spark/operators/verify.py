@@ -9,17 +9,15 @@ mapping (SURVEY.md §2.3):
   * J4 SimHash Hamming distance  <- global-embedding cosine
   * J7 exact-substring containment <- local keypoint verification
 
-J3/J4 are pure codegen'd column expressions over the joined signatures; J7 is
-the single place both texts are needed — built-in ``contains`` on the joined
-texts (JVM fast path) or an Arrow-batched ``mapInPandas`` variant for very
-long documents (the "suffix-array" slot; CPython's Boyer-Moore-ish ``in`` is
-the per-batch kernel).
+J3 is one batch-vectorized Arrow kernel over the packed MinHash binaries;
+J4 is a codegen'd column expression over the joined signatures; J7 is the
+single place both texts are needed — built-in ``contains`` on the joined
+texts (JVM fast path).
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -82,7 +80,7 @@ def join_signatures(
     pairs: DataFrame,
     sig_df: DataFrame,
     id_col: str = "doc_id",
-    cols=("minhash", "simhash"),
+    cols=("minhash_bin", "simhash"),
     prefilter_broadcast: bool = False,
 ) -> DataFrame:
     """Attach both sides' signatures to (id_a, id_b) pairs.
@@ -110,44 +108,8 @@ def join_signatures(
     return pairs.join(a, "id_a").join(b, "id_b")
 
 
-def sig_matches_expr(mh_a, mh_b):
-    """Number of equal MinHash positions (int) — integer-exact, so the oracle
-    comparison never hits float drift.  jaccard_est = matches / num_perm.
-    """
-    return F.aggregate(
-        F.zip_with(mh_a, mh_b, lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-
-
 def hamming_expr(sh_a, sh_b):
     return F.bit_count(sh_a.bitwiseXOR(sh_b))
-
-
-def sig_matches_packed_expr(bin_a, bin_b, num_perm: int = 128):
-    """Equal-position count over big-endian-packed MinHash binaries as a
-    PURE column expression: 128 binary-substring equality compares summed.
-
-    MEASURED AND REJECTED as the pipeline default: at num_perm=128 the
-    deep Add chain is codegen-hostile (pages e2e 11-13 s -> 33-67 s in a
-    same-window A/B at 20k docs), so ``verify_pairs`` keeps the
-    batch-vectorized Arrow kernel (``sig_matches_packed``), which the same
-    A/B measured at full speed.  Kept, tested (byte-equality with the
-    kernel is pinned in tests/test_packed_signatures.py), and documented
-    for narrow signatures (num_perm <= ~32), where a short expression
-    chain beats an Arrow round-trip."""
-    import functools
-    import operator
-
-    return functools.reduce(
-        operator.add,
-        (
-            (F.substring(bin_a, j * 8 + 1, 8) == F.substring(bin_b, j * 8 + 1, 8))
-            .cast("int")
-            for j in range(num_perm)
-        ),
-    )
 
 
 _MATCHES_PACKED = None
@@ -180,21 +142,51 @@ def sig_matches_packed(bin_a, bin_b):
     return _MATCHES_PACKED(bin_a, bin_b)
 
 
+def _sim_ok(cfg: DedupConfig):
+    # OR-of-evidence verdict: MinHash Jaccard is the primary test; a tight
+    # SimHash Hamming radius rescues near-identical docs whose MinHash was
+    # unlucky; containment (added by the callers) rescues boilerplate-
+    # wrapped/contained true dups.  (The reference's conjunctive stage
+    # cascade over-filters light edits — its stage-2 color pass rejecting
+    # true dups was a documented bug class, in the reference's
+    # MEMORY_FIXES_SUMMARY.md.)
+    min_matches = math.ceil(cfg.jaccard_threshold * cfg.num_perm)  # 0.7*128 -> 90
+    return (F.col("sig_matches") >= F.lit(min_matches)) | (
+        F.col("hamming") <= F.lit(cfg.hamming_max)
+    )
+
+
+def _evidence():
+    """(sig_matches, hamming) over assembled ``<col>_a``/``<col>_b`` sides."""
+    return [
+        sig_matches_packed(F.col("minhash_bin_a"), F.col("minhash_bin_b")).alias(
+            "sig_matches"
+        ),
+        hamming_expr(F.col("simhash_a"), F.col("simhash_b")).alias("hamming"),
+    ]
+
+
+def _contains():
+    """containment = one text is an exact substring of the other (J7)."""
+    return F.contains(F.col("text_b"), F.col("text_a")) | F.contains(
+        F.col("text_a"), F.col("text_b")
+    )
+
+
 def verify_pairs(
     pairs: DataFrame,
     sig_df: DataFrame,
     cfg: DedupConfig,
     id_col: str = "doc_id",
-    texts_df: DataFrame | None = None,
-    text_col: str = "text",
-    use_arrow_containment: bool = False,
     prefilter_broadcast: bool = False,
     defer_containment: bool = False,
     release: list | None = None,
 ) -> DataFrame:
     """candidate pairs -> verified pairs with evidence columns.
 
-    verdict: ``verified = (jaccard_est >= t AND hamming <= h) OR containment``
+    ``sig_df`` carries ``minhash_bin``, ``simhash`` and ``text`` per id.
+
+    verdict: ``verified = (jaccard_est >= t OR hamming <= h) OR containment``
     — containment rescues true dups whose extra boilerplate dilutes Jaccard
     (FIXTURES.md containment pairs), mirroring how the reference's local-
     feature stage rescued crops/edits that global cosine rejected.
@@ -203,9 +195,9 @@ def verify_pairs(
     pair set is small enough to broadcast (the pipeline's byte guard
     decides); the corpus then never shuffles.
 
-    ``defer_containment`` (pipeline fast path; requires prefilter_broadcast
-    and texts): containment is a RESCUE term — it can only flip the verdict
-    of pairs that FAIL the signature tests.  With defer on, the first pass
+    ``defer_containment`` (pipeline fast path; requires prefilter_broadcast):
+    containment is a RESCUE term — it can only flip the verdict of pairs
+    that FAIL the signature tests.  With defer on, the first pass
     assembles only signatures (text never rides the wide shuffle), and only
     the failing residue (a fraction of the pairs) gets a second, text-only
     assembly.  The ``verified`` flag is bit-identical to the full form;
@@ -219,77 +211,16 @@ def verify_pairs(
     LRU — fine for one-shot jobs, but a long-lived driver calling this per
     micro-batch would accumulate one dead cached frame per call.
     """
-    with_text = texts_df is not None
-    packed = "minhash_bin" in sig_df.columns
-    mh_col = "minhash_bin" if packed else "minhash"
-    if defer_containment and with_text and prefilter_broadcast and (
-        text_col in sig_df.columns
-    ):
-        return _verify_deferred(
-            pairs, sig_df, cfg, id_col, text_col, mh_col, use_arrow_containment,
-            release=release,
-        )
-    if with_text and text_col in sig_df.columns:
-        # one join per side carrying signatures AND text together — half the
-        # shuffles of separate signature/text joins
-        joined = join_signatures(
-            pairs, sig_df, id_col, cols=(mh_col, "simhash", text_col),
-            prefilter_broadcast=prefilter_broadcast,
-        )
-    else:
-        joined = join_signatures(
-            pairs, sig_df, id_col, cols=(mh_col, "simhash"),
-            prefilter_broadcast=prefilter_broadcast,
-        )
-    if packed:
-        matches = sig_matches_packed(F.col("minhash_bin_a"), F.col("minhash_bin_b"))
-    else:
-        matches = sig_matches_expr(F.col("minhash_a"), F.col("minhash_b"))
-    evidence = [
-        matches.alias("sig_matches"),
-        hamming_expr(F.col("simhash_a"), F.col("simhash_b")).alias("hamming"),
-    ]
-    if with_text and text_col in sig_df.columns:
-        contain = F.contains(
-            F.col(f"{text_col}_b"), F.col(f"{text_col}_a")
-        ) | F.contains(F.col(f"{text_col}_a"), F.col(f"{text_col}_b"))
-        if use_arrow_containment:
-            out = joined.select(
-                "id_a",
-                "id_b",
-                *evidence,
-                F.col(f"{text_col}_a").alias("_text_a"),
-                F.col(f"{text_col}_b").alias("_text_b"),
-            )
-            out = _arrow_containment(out)
-        else:
-            out = joined.select(
-                "id_a", "id_b", *evidence, contain.alias("containment")
-            )
-        min_matches = math.ceil(cfg.jaccard_threshold * cfg.num_perm)
-        sim_ok = (F.col("sig_matches") >= F.lit(min_matches)) | (
-            F.col("hamming") <= F.lit(cfg.hamming_max)
-        )
-        return out.withColumn("verified", sim_ok | F.col("containment"))
-
-    out = joined.select("id_a", "id_b", *evidence)
-    # OR-of-evidence verdict: MinHash Jaccard is the primary test; a tight
-    # SimHash Hamming radius rescues near-identical docs whose MinHash was
-    # unlucky; containment rescues boilerplate-wrapped/contained true dups.
-    # (The reference's conjunctive stage cascade over-filters light edits —
-    # its stage-2 color pass rejecting true dups was a documented bug class,
-    # /root/reference/MEMORY_FIXES_SUMMARY.md.)
-    min_matches = math.ceil(cfg.jaccard_threshold * cfg.num_perm)  # 0.7*128 -> 90
-    sim_ok = (F.col("sig_matches") >= F.lit(min_matches)) | (
-        F.col("hamming") <= F.lit(cfg.hamming_max)
+    if defer_containment and prefilter_broadcast:
+        return _verify_deferred(pairs, sig_df, cfg, id_col, release=release)
+    # one join per side carrying signatures AND text together — half the
+    # shuffles of separate signature/text joins
+    joined = join_signatures(
+        pairs, sig_df, id_col, cols=("minhash_bin", "simhash", "text"),
+        prefilter_broadcast=prefilter_broadcast,
     )
-    if texts_df is None:
-        return out.withColumn("containment", F.lit(False)).withColumn(
-            "verified", sim_ok
-        )
-
-    out = with_containment(out, texts_df, id_col, text_col, use_arrow_containment)
-    return out.withColumn("verified", sim_ok | F.col("containment"))
+    out = joined.select("id_a", "id_b", *_evidence(), _contains().alias("containment"))
+    return out.withColumn("verified", _sim_ok(cfg) | F.col("containment"))
 
 
 def _verify_deferred(
@@ -297,16 +228,13 @@ def _verify_deferred(
     sig_df: DataFrame,
     cfg: DedupConfig,
     id_col: str,
-    text_col: str,
-    mh_col: str,
-    use_arrow_containment: bool,
     release: list | None = None,
 ) -> DataFrame:
     """Two-pass verification: signatures first, text only for the residue.
 
-    Pass A: melt-assemble (minhash, simhash) — ONE narrow corpus scan, text
-    never shuffles — then the signature verdict.  The narrow result (four
-    scalar columns per pair) is persisted and materialized ONCE so the
+    Pass A: melt-assemble (minhash_bin, simhash) — ONE narrow corpus scan,
+    text never shuffles — then the signature verdict.  The narrow result
+    (four scalar columns per pair) is persisted and materialized ONCE so the
     residue branch and the final join both read the cache instead of
     re-running the corpus scan.
 
@@ -319,98 +247,26 @@ def _verify_deferred(
     it is left to Spark's LRU — one dead frame per call on a long-lived
     driver).
     """
-    matches_fn = sig_matches_packed if mh_col == "minhash_bin" else sig_matches_expr
     assembled = melt_assemble(
-        pairs.select("id_a", "id_b"), sig_df, id_col, (mh_col, "simhash")
+        pairs.select("id_a", "id_b"), sig_df, id_col, ("minhash_bin", "simhash")
     )
-    min_matches = math.ceil(cfg.jaccard_threshold * cfg.num_perm)
-    pass_a = assembled.select(
-        "id_a",
-        "id_b",
-        matches_fn(F.col(f"{mh_col}_a"), F.col(f"{mh_col}_b")).alias("sig_matches"),
-        hamming_expr(F.col("simhash_a"), F.col("simhash_b")).alias("hamming"),
-    ).withColumn(
-        "_sim_ok",
-        (F.col("sig_matches") >= F.lit(min_matches))
-        | (F.col("hamming") <= F.lit(cfg.hamming_max)),
+    pass_a = assembled.select("id_a", "id_b", *_evidence()).withColumn(
+        "_sim_ok", _sim_ok(cfg)
     ).persist()
     pass_a.count()  # materialize once, before the plan forks below
     if release is not None:
         release.append(pass_a)
 
     residue = pass_a.where(~F.col("_sim_ok")).select("id_a", "id_b")
-    resid_texts = melt_assemble(residue, sig_df, id_col, (text_col,))
-    if use_arrow_containment:
-        rescued = _arrow_containment(
-            resid_texts.select(
-                "id_a",
-                "id_b",
-                F.col(f"{text_col}_a").alias("_text_a"),
-                F.col(f"{text_col}_b").alias("_text_b"),
-            )
-        )
-    else:
-        rescued = resid_texts.select(
-            "id_a",
-            "id_b",
-            (
-                F.contains(F.col(f"{text_col}_b"), F.col(f"{text_col}_a"))
-                | F.contains(F.col(f"{text_col}_a"), F.col(f"{text_col}_b"))
-            ).alias("containment"),
-        )
-    return (
-        pass_a.join(rescued, ["id_a", "id_b"], "left")
-        .select(
-            "id_a",
-            "id_b",
-            "sig_matches",
-            "hamming",
-            F.coalesce("containment", F.lit(False)).alias("containment"),
-            (F.col("_sim_ok") | F.coalesce("containment", F.lit(False))).alias(
-                "verified"
-            ),
-        )
+    rescued = melt_assemble(residue, sig_df, id_col, ("text",)).select(
+        "id_a", "id_b", _contains().alias("containment")
     )
-
-
-def _arrow_containment(df: DataFrame) -> DataFrame:
-    """Arrow-batched containment kernel over a frame with _text_a/_text_b.
-
-    The "suffix-array slot": CPython's two-way/Boyer-Moore `in` is the
-    per-batch substring kernel; swap in a suffix-automaton here for
-    pathological long-doc workloads.
-    """
-    schema = df.drop("_text_a", "_text_b").schema.add("containment", "boolean")
-
-    def _kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            a = pdf["_text_a"]
-            b = pdf["_text_b"]
-            pdf = pdf.drop(columns=["_text_a", "_text_b"])
-            pdf["containment"] = [(x in y) or (y in x) for x, y in zip(a, b)]
-            yield pdf
-
-    return df.mapInPandas(_kernel, schema)
-
-
-def with_containment(
-    pairs: DataFrame,
-    texts_df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    use_arrow: bool = False,
-) -> DataFrame:
-    """containment = one text is an exact substring of the other (J7).
-
-    Only ever evaluated on candidate pairs (post-LSH), never all pairs.
-    """
-    ta = texts_df.select(F.col(id_col).alias("id_a"), F.col(text_col).alias("_text_a"))
-    tb = texts_df.select(F.col(id_col).alias("id_b"), F.col(text_col).alias("_text_b"))
-    joined = pairs.join(ta, "id_a").join(tb, "id_b")
-    if not use_arrow:
-        contain = F.contains(F.col("_text_b"), F.col("_text_a")) | F.contains(
-            F.col("_text_a"), F.col("_text_b")
-        )
-        return joined.withColumn("containment", contain).drop("_text_a", "_text_b")
-
-    return _arrow_containment(joined)
+    containment = F.coalesce("containment", F.lit(False))
+    return pass_a.join(rescued, ["id_a", "id_b"], "left").select(
+        "id_a",
+        "id_b",
+        "sig_matches",
+        "hamming",
+        containment.alias("containment"),
+        (F.col("_sim_ok") | containment).alias("verified"),
+    )

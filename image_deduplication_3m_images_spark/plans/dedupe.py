@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from image_deduplication_3m_images_spark.config import DedupConfig
 from image_deduplication_3m_images_spark.functions.signatures import (
     band_keys_from_packed_expr,
-    make_extract_signature_packed_udf,
+    make_packed_signature_udf,
 )
 from image_deduplication_3m_images_spark.functions.text import (
     canonical_url_expr,
@@ -37,7 +37,10 @@ from image_deduplication_3m_images_spark.operators.lsh import (
     hot_bucket_probe,
 )
 from image_deduplication_3m_images_spark.operators.verify import verify_pairs
-from image_deduplication_3m_images_spark.session import hadoop_delete
+from image_deduplication_3m_images_spark.session import (
+    broadcast_fits,
+    hadoop_delete,
+)
 from image_deduplication_3m_images_spark.sources.checkpoint import make_catalog
 
 ID = "url"
@@ -50,9 +53,9 @@ def build_signatures(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
     only its own extraction; the input's text column, when present, is the
     oracle the tests compare against — per-row invariant).  Extraction and
     signatures are fused into a single pandas UDF so the html is decoded once
-    and the text is materialized once (see make_extract_signature_udf).
+    and the text is materialized once (see make_packed_signature_udf).
     """
-    udf = make_extract_signature_packed_udf(cfg)
+    udf = make_packed_signature_udf(cfg, from_html=True)
     sig = pages.select(ID, udf(F.col("html")).alias("sig")).select(
         ID,
         F.col("sig.text").alias("text"),
@@ -221,22 +224,24 @@ def run_dedupe(
         probe_exact = n_sig_rows <= PROBE_TARGET_SAMPLE
         if probe_exact:
             rep_bands = rep_bands.persist()
-        bucket_profile = hot_bucket_probe(
-            signatures.select("sid", "text_sha256", "band_keys"),
-            cfg,
-            n_rows=n_sig_rows,
-            reps_df=rep_bands if probe_exact else None,
-        )
-        hint = None if bucket_profile["hot_detected"] else 0
-        cands = stage(
-            "candidate_pairs",
-            lambda: candidate_pairs(
-                rep_bands, cfg, id_col="sid", max_bucket_hint=hint
-            ),
-            extra=bucket_profile,
-        )
-        if probe_exact:
-            rep_bands.unpersist(blocking=False)
+        try:
+            bucket_profile = hot_bucket_probe(
+                signatures.select("sid", "text_sha256", "band_keys"),
+                cfg,
+                n_rows=n_sig_rows,
+                reps_df=rep_bands if probe_exact else None,
+            )
+            hint = None if bucket_profile["hot_detected"] else 0
+            cands = stage(
+                "candidate_pairs",
+                lambda: candidate_pairs(
+                    rep_bands, cfg, id_col="sid", max_bucket_hint=hint
+                ),
+                extra=bucket_profile,
+            )
+        finally:
+            if probe_exact:
+                rep_bands.unpersist(blocking=False)
 
     # Verification: the pairs table is usually tiny relative to the corpus —
     # broadcast it so the signatures side is filtered MAP-SIDE (no wide
@@ -258,39 +263,36 @@ def run_dedupe(
     # melt form: 2 broadcast rows per pair, each (3 longs + flag) + row
     # overhead — conservative per-pair constant
     est_bytes = n_pairs * 96
-    # a broadcast is built once but fetched+held PER EXECUTOR: guard the
-    # CLUSTER-WIDE cost, not just the object size (VERDICT r4 item 1b)
-    from image_deduplication_3m_images_spark.session import executor_count
-
-    n_exec = executor_count(spark)
-    small_pairs = est_bytes < 256 * 1024 * 1024 and est_bytes * n_exec < 1 << 30
+    small_pairs = broadcast_fits(spark, est_bytes)
     pairs_in = F.broadcast(cands) if small_pairs else cands
     _vp_release: list = []
-    verified = stage(
-        "verified_pairs",
-        lambda: verify_pairs(
-            pairs_in,
-            signatures,
-            cfg,
-            id_col="sid",
-            texts_df=signatures.select("sid", "text"),
-            # when pairs are broadcastable, the single-scan melt assembly
-            # runs and the corpus-wide table never shuffles (see verify.py);
-            # defer_containment keeps text out of the wide shuffle entirely —
-            # only the sim-failing residue pays a text assembly.  The
-            # checkpointed `containment` column is therefore the rescue
-            # verdict (False for sim-passing pairs); `verified` is identical
-            # to the full form.
-            prefilter_broadcast=small_pairs,
-            defer_containment=small_pairs,
-            release=_vp_release,
-        ),
-    )
-    # the stage is checkpointed (written + re-read): verify's internal
-    # pass-A cache is dead weight now — without this, every run_dedupe call
-    # on a long-lived driver leaks one cached frame
-    for _df in _vp_release:
-        _df.unpersist(blocking=False)
+    try:
+        verified = stage(
+            "verified_pairs",
+            lambda: verify_pairs(
+                pairs_in,
+                signatures,
+                cfg,
+                id_col="sid",
+                # when pairs are broadcastable, the single-scan melt assembly
+                # runs and the corpus-wide table never shuffles (see
+                # verify.py); defer_containment keeps text out of the wide
+                # shuffle entirely — only the sim-failing residue pays a text
+                # assembly.  The checkpointed `containment` column is
+                # therefore the rescue verdict (False for sim-passing pairs);
+                # `verified` is identical to the full form.
+                prefilter_broadcast=small_pairs,
+                defer_containment=small_pairs,
+                release=_vp_release,
+            ),
+        )
+    finally:
+        # the stage is checkpointed (written + re-read), or it failed:
+        # verify's internal pass-A cache is dead weight either way — without
+        # this, every run_dedupe call on a long-lived driver leaks one
+        # cached frame
+        for _df in _vp_release:
+            _df.unpersist(blocking=False)
 
     # Reliable checkpoints only help when executors can die independently of
     # the driver; on local[*] masters (single JVM) localCheckpoint is equally

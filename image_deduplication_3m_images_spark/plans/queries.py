@@ -13,7 +13,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from image_deduplication_3m_images_spark.config import DedupConfig
-from image_deduplication_3m_images_spark.functions.signatures import with_signatures
+from image_deduplication_3m_images_spark.functions.signatures import (
+    band_keys_from_packed_expr,
+    make_packed_signature_udf,
+)
 from image_deduplication_3m_images_spark.functions.text import (
     fp64_expr,
     lang_scores_expr,
@@ -198,23 +201,21 @@ def _sig(spark, sf_dir) -> DataFrame:
     a cached DataFrame plays that role.  The cache is session-bound via
     _memo, so it dies with the session (no cross-session leak).
 
-    ``band_keys`` is precomputed INTO the cache (round 6): three consumers
-    (lsh_bands, the candidate stage, its profile job) each re-derived the
-    16 md5 band keys per row from the cached minhash; materializing the
-    array once makes every explode_bands call a plain posexplode — the
-    same once-not-per-consumer rationale as the pipeline's checkpointed
-    band_keys column (identical formula, byte-equality test-pinned)."""
-    from image_deduplication_3m_images_spark.operators.lsh import band_key_expr
+    Same packed layout as the pipeline's signatures table (``minhash_bin``
+    plus the JVM-derived ``band_keys``), so every consumer runs the same
+    band-key and match code as ``run_dedupe``.  ``band_keys`` is computed
+    INTO the cache: three consumers (lsh_bands, the candidate stage, its
+    profile job) would otherwise each re-derive the 16 md5 band keys per
+    row."""
 
     def build():
-        sig = with_signatures(_docs(spark, sf_dir), CFG)
-        keys = F.array(
-            *[
-                band_key_expr(F.col("minhash"), b, CFG.rows_per_band)
-                for b in range(CFG.bands)
-            ]
-        )
-        return sig.withColumn("band_keys", keys).cache()
+        udf = make_packed_signature_udf(CFG, from_html=False)
+        sig = _docs(spark, sf_dir).select(
+            "doc_id", "text", udf(F.col("text")).alias("sig")
+        ).select("doc_id", "text", "sig.*")
+        return sig.withColumn(
+            "band_keys", band_keys_from_packed_expr("minhash_bin", CFG)
+        ).cache()
 
     return _memo(spark, ("sig", sf_dir), build)
 
@@ -284,15 +285,23 @@ def q_lang_stats(spark, sf_dir):
 
 def q_signature_digest(spark, sf_dir):
     sig = _sig(spark, sf_dir)
+    # unpack the 128 big-endian values JVM-side (values < 2**61, so the
+    # unsigned hex -> decimal conversion is exact)
+    mh = F.expr(
+        f"transform(sequence(0, {CFG.num_perm - 1}), i -> "
+        "cast(conv(hex(substring(minhash_bin, i * 8 + 1, 8)), 16, 10) as bigint))"
+    )
     return sig.select(
+        "doc_id", "n_shingles", "simhash", mh.alias("mh")
+    ).select(
         "doc_id",
         F.col("n_shingles").cast("int").alias("n_shingles"),
-        F.array_min("minhash").alias("sig_min"),
+        F.array_min("mh").alias("sig_min"),
         F.aggregate(
-            "minhash", F.lit(0).cast("long"), lambda acc, x: acc + x
+            "mh", F.lit(0).cast("long"), lambda acc, x: acc + x
         ).alias("sig_sum"),
-        F.element_at("minhash", 1).alias("sig_first"),
-        F.element_at("minhash", CFG.num_perm).alias("sig_last"),
+        F.element_at("mh", 1).alias("sig_first"),
+        F.element_at("mh", CFG.num_perm).alias("sig_last"),
         F.col("simhash"),
     )
 
@@ -365,7 +374,7 @@ def q_exact_dedup(spark, sf_dir):
 
 
 def q_lsh_bands(spark, sf_dir):
-    return explode_bands(_sig(spark, sf_dir), CFG, id_col="doc_id").select(
+    return explode_bands(_sig(spark, sf_dir), id_col="doc_id").select(
         "doc_id", F.col("band_id").cast("int").alias("band_id"), "band_key"
     )
 
@@ -378,14 +387,13 @@ def q_candidate_pairs(spark, sf_dir):
 
 def _verified(spark, sf_dir) -> DataFrame:
     """Memoized verified-pairs stage (cached DataFrame): shared by
-    verified_pairs / dup_clusters / group_avg_sim over immutable testdata."""
+    verified_pairs / containment_pairs / dup_clusters / group_avg_sim over
+    immutable testdata."""
 
     def build():
         sig = _sig(spark, sf_dir)
         pairs = _cands(spark, sf_dir, sig)
-        return verify_pairs(
-            pairs, sig, CFG, id_col="doc_id", texts_df=_docs(spark, sf_dir)
-        ).cache()
+        return verify_pairs(pairs, sig, CFG, id_col="doc_id").cache()
 
     return _memo(spark, ("verified", sf_dir), build)
 
@@ -403,19 +411,9 @@ def q_verified_pairs(spark, sf_dir):
 
 
 def q_containment_pairs(spark, sf_dir):
-    """Same verdicts via the Arrow mapInPandas containment kernel (J7 UDF
-    path) — the oracle checks it against SQL ``contains``."""
-    sig = _sig(spark, sf_dir)
-    pairs = _cands(spark, sf_dir, sig).select("id_a", "id_b")
-    out = verify_pairs(
-        pairs.select("id_a", "id_b"),
-        sig,
-        CFG,
-        id_col="doc_id",
-        texts_df=_docs(spark, sf_dir),
-        use_arrow_containment=True,
-    )
-    return out.select("id_a", "id_b", "containment")
+    """J7 verdict per candidate pair — the catalog verifies without
+    deferral, so containment is evaluated on every pair."""
+    return _verified(spark, sf_dir).select("id_a", "id_b", "containment")
 
 
 def q_dup_clusters(spark, sf_dir):

@@ -130,6 +130,18 @@ def executor_count(spark: SparkSession) -> int:
         return 1
 
 
+def broadcast_fits(spark: SparkSession, est_bytes: float) -> bool:
+    """The one broadcast byte guard: the object must stay under 256 MiB AND
+    its cluster-wide cost (a broadcast is built once but fetched + held PER
+    EXECUTOR) under 1 GiB.  Callers fall back to a shuffle join otherwise —
+    the right plan for a pathological pair/band explosion, rather than an
+    OOMing broadcast."""
+    return (
+        est_bytes < 256 * 1024 * 1024
+        and est_bytes * executor_count(spark) < 1 << 30
+    )
+
+
 def hadoop_delete(spark: SparkSession, path: str) -> bool:
     """Recursively delete ``path`` via the Hadoop FileSystem API.
 

@@ -571,7 +571,7 @@ def ingest_neardup_batch(
             url_bloom_fpp,
             url_bloom_max_bytes,
         )
-    bands_new = explode_bands(sig_new.select(ID, "band_keys"), cfg, id_col=ID)
+    bands_new = explode_bands(sig_new.select(ID, "band_keys"), id_col=ID)
 
     if has_old:
         sig_all = cat.read("signatures").dropDuplicates([ID]).unionByName(sig_new)
@@ -591,14 +591,10 @@ def ingest_neardup_batch(
     # backfill batch (availableNow over a pre-existing directory delivers
     # the WHOLE backlog as one batch) falls back to a plain shuffle join,
     # which is the right plan at that size rather than an >8 GB broadcast.
-    from image_deduplication_3m_images_spark.session import executor_count
+    from image_deduplication_3m_images_spark.session import broadcast_fits
 
-    n_exec = executor_count(spark)
-    bands_rows = n_new * cfg.bands
-    bands_bytes = bands_rows * 64  # id + band_id + band_key longs + row overhead
-    small_bands = (
-        bands_bytes < 256 * 1024 * 1024 and bands_bytes * n_exec < 1 << 30
-    )
+    # id + band_id + band_key longs + row overhead
+    small_bands = broadcast_fits(spark, n_new * cfg.bands * 64)
     new_side = bands_new.select("band_id", "band_key", F.col(ID).alias("id_n"))
     pairs = (
         (F.broadcast(new_side) if small_bands else new_side)
@@ -625,14 +621,12 @@ def ingest_neardup_batch(
         F.avg(F.length("id_a") + F.length("id_b")).alias("avg_id_bytes"),
     ).collect()[0]
     est_bytes = (stats["n"] or 0) * ((stats["avg_id_bytes"] or 0.0) + 16)
-    # two-level like the batch guard: object size AND cluster-wide cost
-    small_pairs = est_bytes < 256 * 1024 * 1024 and est_bytes * n_exec < 1 << 30
+    small_pairs = broadcast_fits(spark, est_bytes)
     verified = verify_pairs(
         F.broadcast(pairs) if small_pairs else pairs,
         sig_all,
         cfg,
         id_col=ID,
-        texts_df=sig_all.select(ID, "text"),
         prefilter_broadcast=small_pairs,
     )
     new_edges = (

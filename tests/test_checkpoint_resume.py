@@ -205,3 +205,38 @@ def test_drop_removes_crash_leftovers_no_resurrection(spark, tmp_path):
     assert not os.path.isdir(p + "_old_cafe")
     assert not os.path.isdir(p + "_tmp_cafe")
     assert cat.read("t").count() == 1
+
+
+@pytest.mark.parametrize("failing_stage", ["candidate_pairs", "verified_pairs"])
+def test_failed_stage_leaves_no_cached_blocks(spark, tmp_path, monkeypatch, failing_stage):
+    """run_dedupe persists two intermediates: the representative band frame
+    across the skew probe and the candidate stage, and verify's deferred
+    pass-A frame across the verified stage.  A stage that raises must still
+    release them — a long-lived driver retrying failed runs would otherwise
+    accumulate one dead cached frame per attempt."""
+    import image_deduplication_3m_images_spark.plans.dedupe as dedupe
+
+    def persisted_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+    if failing_stage == "candidate_pairs":
+
+        def boom(*args, **kwargs):
+            raise RuntimeError("simulated candidate-stage failure")
+
+        monkeypatch.setattr(dedupe, "candidate_pairs", boom)
+    else:
+        real_verify = dedupe.verify_pairs
+
+        def boom(*args, **kwargs):
+            real_verify(*args, **kwargs)  # persists pass A into ``release``
+            raise RuntimeError("simulated verify-stage failure")
+
+        monkeypatch.setattr(dedupe, "verify_pairs", boom)
+
+    pages = pages_dataframe(spark, generate_pages(n_rows=120, seed=13))
+    before = persisted_ids()
+    with pytest.raises(RuntimeError, match="simulated"):
+        run_dedupe(spark, pages, str(tmp_path / "wh"), DedupConfig())
+    leaked = persisted_ids() - before
+    assert not leaked, f"failed run leaked cached RDD ids {sorted(leaked)}"

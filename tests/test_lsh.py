@@ -18,14 +18,15 @@ CFG = DedupConfig()  # cap 64, salt_factor 8 -> salted tier up to 512
 SIG_SCHEMA = StructType(
     [
         StructField("doc_id", LongType(), False),
-        StructField("minhash", ArrayType(LongType(), False), False),
+        StructField("band_keys", ArrayType(LongType(), False), False),
     ]
 )
 
 
 def _same_sig_df(spark, n, base=0):
-    sig = [1000 + j for j in range(CFG.num_perm)]
-    return spark.createDataFrame([(base + i, sig) for i in range(n)], SIG_SCHEMA)
+    """n docs with identical band keys: one bucket of size n per band."""
+    keys = [1000 + b for b in range(CFG.bands)]
+    return spark.createDataFrame([(base + i, keys) for i in range(n)], SIG_SCHEMA)
 
 
 def _pairs(spark, n):
@@ -65,13 +66,14 @@ def test_band_keys_deterministic(spark):
     from image_deduplication_3m_images_spark.operators.lsh import explode_bands
 
     sig = _same_sig_df(spark, 3)
-    a = {(r["doc_id"], r["band_id"]): r["band_key"] for r in explode_bands(sig, CFG, "doc_id").collect()}
-    b = {(r["doc_id"], r["band_id"]): r["band_key"] for r in explode_bands(sig, CFG, "doc_id").collect()}
+    a = {(r["doc_id"], r["band_id"]): r["band_key"] for r in explode_bands(sig, "doc_id").collect()}
+    b = {(r["doc_id"], r["band_id"]): r["band_key"] for r in explode_bands(sig, "doc_id").collect()}
     assert a == b
-    # identical signatures -> identical band keys across docs
-    keys0 = [a[(0, band)] for band in range(CFG.bands)]
-    keys1 = [a[(1, band)] for band in range(CFG.bands)]
-    assert keys0 == keys1
+    # band_id is the key's position in band_keys, for every doc
+    for doc in range(3):
+        assert [a[(doc, band)] for band in range(CFG.bands)] == [
+            1000 + band for band in range(CFG.bands)
+        ]
 
 
 def test_candidate_pairs_leaves_no_cached_blocks(spark):

@@ -173,3 +173,18 @@ def test_load_spread_thresholds(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(Q, "_RELATIONAL_SPREAD_ROWS", 1000)
     Q._MEMO.pop(("scan_parts", sf, "documents", False), None)
     assert Q.load(spark, sf, "documents", spread=False).rdd.getNumPartitions() > 1
+
+
+def test_broadcast_fits_guards_object_and_cluster_cost(spark, monkeypatch):
+    """One byte guard for every broadcast choice: under 256 MiB per object
+    AND under 1 GiB summed over the executors that each fetch a copy."""
+    import image_deduplication_3m_images_spark.session as session
+
+    mib = 1024 * 1024
+    monkeypatch.setattr(session, "executor_count", lambda _spark: 1)
+    assert session.broadcast_fits(spark, 0)
+    assert session.broadcast_fits(spark, 256 * mib - 1)
+    assert not session.broadcast_fits(spark, 256 * mib)
+    monkeypatch.setattr(session, "executor_count", lambda _spark: 8)
+    assert session.broadcast_fits(spark, 128 * mib - 1)
+    assert not session.broadcast_fits(spark, 128 * mib)

@@ -1,25 +1,26 @@
-"""Packed-signature equivalence: the hot pipeline returns MinHash/band keys
-as binary cells (Arrow list-conversion costs ~4us/element — measured 55 s per
-100k docs for array<long>(128)); these tests pin byte-level equivalence with
-the array path and the JVM band-key expression.
+"""Packed-signature layout: the signature UDF returns the 128 MinHash values
+as one big-endian 1 KiB binary cell (Arrow list-conversion costs
+~4us/element — measured 55 s per 100k docs for array<long>(128)); band keys
+and equal-position counts are derived from that cell.  These tests pin
+every derived value against the pure-Python reference
+(``signature_core.signature_py``).
 """
 
 from __future__ import annotations
+
+import hashlib
 
 import numpy as np
 from pyspark.sql import functions as F
 
 from image_deduplication_3m_images_spark.config import DedupConfig
+from image_deduplication_3m_images_spark.functions.signature_core import signature_py
 from image_deduplication_3m_images_spark.functions.signatures import (
     band_keys_from_packed_expr,
-    make_extract_signature_packed_udf,
-    make_extract_signature_udf,
+    make_packed_signature_udf,
 )
-from image_deduplication_3m_images_spark.operators.lsh import band_key_expr
-from image_deduplication_3m_images_spark.operators.verify import (
-    sig_matches_expr,
-    sig_matches_packed,
-)
+from image_deduplication_3m_images_spark.operators.verify import sig_matches_packed
+from image_deduplication_3m_images_spark.plans.dedupe import build_signatures
 from image_deduplication_3m_images_spark.sources.pages_fixture import (
     generate_pages,
     pages_dataframe,
@@ -28,133 +29,119 @@ from image_deduplication_3m_images_spark.sources.pages_fixture import (
 CFG = DedupConfig()
 
 
-def _both(spark, n=80):
-    pages = pages_dataframe(spark, generate_pages(n_rows=n, seed=5)).cache()
-    arr = pages.select(
-        "url", make_extract_signature_udf(CFG)(F.col("html")).alias("s")
-    ).select("url", "s.text", "s.n_shingles", "s.minhash", "s.simhash")
-    packed = pages.select(
-        "url", make_extract_signature_packed_udf(CFG)(F.col("html")).alias("s")
-    ).select("url", "s.text", "s.n_shingles", "s.minhash_bin", "s.simhash")
-    return arr, packed
+def _packed(spark, n=80):
+    pages = pages_dataframe(spark, generate_pages(n_rows=n, seed=5))
+    return build_signatures(pages, CFG).localCheckpoint(eager=True)
+
+
+def _ref_band_keys(minhash: list[int]) -> list[int]:
+    r = CFG.rows_per_band
+    return [
+        int(
+            hashlib.md5(
+                "_".join(map(str, minhash[b * r : (b + 1) * r])).encode()
+            ).hexdigest()[:15],
+            16,
+        )
+        for b in range(CFG.bands)
+    ]
 
 
 def test_packed_minhash_bytes_equal_array(spark):
-    arr, packed = _both(spark)
-    a = {r["url"]: r for r in arr.collect()}
-    p = {r["url"]: r for r in packed.collect()}
-    assert a.keys() == p.keys()
-    for url in a:
-        assert a[url]["text"] == p[url]["text"]
-        assert a[url]["n_shingles"] == p[url]["n_shingles"]
-        assert a[url]["simhash"] == p[url]["simhash"]
-        unpacked = np.frombuffer(p[url]["minhash_bin"], dtype=">i8").tolist()
-        assert unpacked == list(a[url]["minhash"])
+    """Both UDF inputs (html for the pipeline/stream, text for the query
+    catalog) pack exactly the reference's MinHash array, and carry the
+    reference's n_shingles and simhash."""
+    packed = _packed(spark)
+    from_text = packed.select(
+        "url", make_packed_signature_udf(CFG, from_html=False)("text").alias("s")
+    ).select("url", "s.*")
+    by_text = {r["url"]: r for r in from_text.collect()}
+    rows = packed.collect()
+    assert rows and by_text.keys() == {r["url"] for r in rows}
+    for r in rows:
+        ref = signature_py(r["text"], CFG)
+        for got in (r, by_text[r["url"]]):
+            assert got["n_shingles"] == ref["n_shingles"]
+            assert got["simhash"] == ref["simhash"]
+            unpacked = np.frombuffer(got["minhash_bin"], dtype=">i8").tolist()
+            assert unpacked == ref["minhash"]
 
 
-def test_packed_band_keys_equal_jvm_expr(spark):
-    """The packed-binary band-key expression (conv/hex unpack -> md5) must
-    byte-match the array-path band_key_expr formula (which the DuckDB oracle
-    mirrors)."""
-    arr, packed = _both(spark)
-    jvm = arr.select(
-        "url",
-        F.array(
-            *[band_key_expr(F.col("minhash"), b, CFG.rows_per_band) for b in range(CFG.bands)]
-        ).alias("keys"),
+def test_packed_band_keys_equal_python_reference(spark):
+    """The JVM band-key expression over the packed binary equals md5 of
+    the '_'-joined decimal slice, first 15 hex chars (the formula the
+    DuckDB oracle mirrors)."""
+    rows = _packed(spark).select("text", "band_keys").collect()
+    assert rows
+    for r in rows:
+        assert list(r["band_keys"]) == _ref_band_keys(
+            signature_py(r["text"], CFG)["minhash"]
+        )
+
+
+def test_band_keys_expr_escapes_backticks(spark):
+    """A column name containing a backtick still resolves to that column."""
+    rows = (
+        _packed(spark, n=20)
+        .select(F.col("minhash_bin").alias("mh`bin"), "band_keys")
+        .select(
+            "band_keys",
+            band_keys_from_packed_expr("mh`bin", CFG).alias("keys"),
+        )
+        .collect()
     )
-    unp = packed.select(
-        "url",
-        band_keys_from_packed_expr(F.col("minhash_bin"), CFG).alias("keys"),
-    )
-    a = {r["url"]: list(r["keys"]) for r in jvm.collect()}
-    b = {r["url"]: list(r["keys"]) for r in unp.collect()}
-    assert a == b
-    # the single-parse SQL-string form (what the pipeline passes) must be
-    # byte-identical to the compositional Column form
-    unp_s = packed.select(
-        "url",
-        band_keys_from_packed_expr("minhash_bin", CFG).alias("keys"),
-    )
-    c = {r["url"]: list(r["keys"]) for r in unp_s.collect()}
-    assert a == c
+    assert rows
+    for r in rows:
+        assert list(r["keys"]) == list(r["band_keys"])
 
 
 def test_packed_matches_equal_array_matches(spark):
-    arr, packed = _both(spark)
-    pa = arr.alias("x").crossJoin(arr.alias("y")).where(F.col("x.url") < F.col("y.url")).limit(200)
-    m1 = {
-        (r["xu"], r["yu"]): r["m"]
-        for r in pa.select(
-            F.col("x.url").alias("xu"), F.col("y.url").alias("yu"),
-            sig_matches_expr(F.col("x.minhash"), F.col("y.minhash")).alias("m"),
-        ).collect()
+    """The Arrow matches kernel equals a numpy equality count over the
+    reference MinHash arrays on every pair of the fixture."""
+    packed = _packed(spark)
+    ref = {
+        r["url"]: np.array(signature_py(r["text"], CFG)["minhash"])
+        for r in packed.select("url", "text").collect()
     }
-    pb = packed.alias("x").crossJoin(packed.alias("y")).where(F.col("x.url") < F.col("y.url")).limit(200)
-    m2 = {
-        (r["xu"], r["yu"]): r["m"]
-        for r in pb.select(
-            F.col("x.url").alias("xu"), F.col("y.url").alias("yu"),
-            sig_matches_packed(F.col("x.minhash_bin"), F.col("y.minhash_bin")).alias("m"),
-        ).collect()
-    }
-    shared = set(m1) & set(m2)
-    assert len(shared) >= 100
-    for k in shared:
-        assert m1[k] == m2[k]
-
-def test_packed_matches_expr_equals_arrow_kernel(spark):
-    """The pure-JVM substring-equality matches expression must byte-match
-    the Arrow kernel AND the array-path expression on every pair."""
-    from image_deduplication_3m_images_spark.operators.verify import (
-        sig_matches_packed_expr,
-    )
-
-    arr, packed = _both(spark)
-    pb = (
+    pairs = (
         packed.alias("x")
         .crossJoin(packed.alias("y"))
         .where(F.col("x.url") < F.col("y.url"))
-        .limit(300)
+        .select(
+            F.col("x.url").alias("xu"),
+            F.col("y.url").alias("yu"),
+            sig_matches_packed(
+                F.col("x.minhash_bin"), F.col("y.minhash_bin")
+            ).alias("m"),
+        )
+        .collect()
     )
-    rows = pb.select(
-        F.col("x.url").alias("xu"), F.col("y.url").alias("yu"),
-        sig_matches_packed(F.col("x.minhash_bin"), F.col("y.minhash_bin")).alias("m_udf"),
-        sig_matches_packed_expr(
-            F.col("x.minhash_bin"), F.col("y.minhash_bin"), CFG.num_perm
-        ).alias("m_expr"),
-    ).collect()
-    assert len(rows) >= 100
-    for r in rows:
-        assert r["m_udf"] == r["m_expr"], (r["xu"], r["yu"])
+    assert len(pairs) == len(ref) * (len(ref) - 1) // 2
+    # the fixture must reach beyond the trivial 0/128 counts
+    assert any(0 < r["m"] < CFG.num_perm for r in pairs)
+    for r in pairs:
+        assert r["m"] == int((ref[r["xu"]] == ref[r["yu"]]).sum()), r
 
 
 def test_pipeline_verify_stage_single_python_boundary(spark):
     """The verify stage's only Python is the ONE batch-vectorized Arrow
     matches kernel — hamming/containment/verdict are codegen exprs, and no
-    row-at-a-time BatchEvalPython ever appears.  (The zero-Python
-    expression variant was measured slower at 128 perms — see
-    sig_matches_packed_expr — so exactly one ArrowEvalPython is the
-    intended shape.)"""
-    from image_deduplication_3m_images_spark.config import DedupConfig
+    row-at-a-time BatchEvalPython ever appears.  (A zero-Python variant, 128
+    binary-substring compares summed in one expression, was measured slower
+    at 128 perms — pages e2e 11-13 s -> 33-67 s at 20k docs — so exactly one
+    ArrowEvalPython is the intended shape.)"""
     from image_deduplication_3m_images_spark.operators.verify import verify_pairs
-    from image_deduplication_3m_images_spark.plans.dedupe import build_signatures
-    from image_deduplication_3m_images_spark.sources.pages_fixture import (
-        generate_pages,
-        pages_dataframe,
-    )
     import io
     from contextlib import redirect_stdout
 
     pages = pages_dataframe(spark, generate_pages(n_rows=60, seed=5))
-    sig = build_signatures(pages, DedupConfig()).localCheckpoint(eager=True)
+    sig = build_signatures(pages, CFG).localCheckpoint(eager=True)
     pairs = spark.createDataFrame(
         [(r1, r2) for r1, r2 in zip(*[iter(sorted(x["url"] for x in sig.select("url").collect()))] * 2)][:10],
         ["id_a", "id_b"],
     )
     out = verify_pairs(
-        F.broadcast(pairs), sig, DedupConfig(), id_col="url",
-        texts_df=sig.select("url", "text"), prefilter_broadcast=True,
+        F.broadcast(pairs), sig, CFG, id_col="url", prefilter_broadcast=True
     )
     buf = io.StringIO()
     with redirect_stdout(buf):
@@ -174,14 +161,11 @@ def test_verify_deferred_containment_equivalent_verdicts(spark):
     (the rescue was not needed) — never the other way around."""
     from image_deduplication_3m_images_spark.operators.lsh import candidate_pairs
     from image_deduplication_3m_images_spark.operators.verify import verify_pairs
-    from image_deduplication_3m_images_spark.plans.dedupe import build_signatures
 
     pages = pages_dataframe(spark, generate_pages(n_rows=200, seed=7))
     sig = build_signatures(pages, CFG).localCheckpoint(eager=True)
     pairs = candidate_pairs(sig, CFG, id_col="url").select("id_a", "id_b")
-    kw = dict(
-        id_col="url", texts_df=sig.select("url", "text"), prefilter_broadcast=True
-    )
+    kw = dict(id_col="url", prefilter_broadcast=True)
     full = verify_pairs(F.broadcast(pairs), sig, CFG, **kw).collect()
     defer = verify_pairs(
         F.broadcast(pairs), sig, CFG, defer_containment=True, **kw

@@ -135,27 +135,25 @@ def test_verify_prefilter_semi_joins_before_equijoin(spark):
     item 1b) and a shuffled-hash build cannot spill (measured intermittent
     OOM on the 4 GB single-executor scaling leg).
     """
-    from image_deduplication_3m_images_spark.config import DedupConfig
-    from image_deduplication_3m_images_spark.functions.signatures import (
-        with_signatures,
-    )
     from image_deduplication_3m_images_spark.operators.verify import verify_pairs
 
     from pyspark.sql import functions as F
 
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
-    sig = with_signatures(docs, DedupConfig())
+    sig = Q._sig(spark, SF)
     pairs = spark.createDataFrame([(0, 1), (2, 3)], ["id_a", "id_b"])
     out = verify_pairs(
         F.broadcast(pairs), sig, DedupConfig(), id_col="doc_id",
-        texts_df=docs, prefilter_broadcast=True,
+        prefilter_broadcast=True,
     )
     plan = plan_of(out)
-    # melt shape: the corpus is scanned ONCE (exactly one parquet scan node
-    # in the tree), map-side joined against the broadcast melt
+    # melt shape: the corpus is read ONCE (exactly one scan of the cached
+    # signatures — the nested documents-cache scan under it does not
+    # count), map-side joined against the broadcast melt
     import re
 
-    scans = re.findall(r"\(\d+\) Scan parquet", plan)
+    scans = re.findall(
+        r"\(\d+\) InMemoryTableScan\nOutput \[\d+\]: \[[^\]]*minhash_bin", plan
+    )
     assert len(scans) == 1, plan[:2000]
     assert "BroadcastHashJoin" in plan, plan[:2000]
     # no wide sort-merge join of slivers (the pre-round-5 shape)
@@ -183,22 +181,15 @@ def test_hamming_block_pairs_single_shuffle_small_tier(spark):
     from image_deduplication_3m_images_spark.operators.dedup import (
         simhash_block_pairs,
     )
-    from image_deduplication_3m_images_spark.functions.signatures import (
-        with_signatures,
-    )
 
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
-    sig = with_signatures(docs, DedupConfig()).cache()
-    try:
-        sig.count()  # materialize so the tier branches share one input scan
-        plan = plan_of(simhash_block_pairs(sig, DedupConfig(), id_col="doc_id"))
-        assert "CartesianProduct" not in plan
-        assert plan.count("partial_collect_list") == 1, plan[:2000]
-        assert plan.count("hashpartitioning(id_a") == 1
-        # the cached signatures feed every branch — no UDF recompute per tier
-        assert "InMemoryTableScan" in plan
-    finally:
-        sig.unpersist()
+    # the catalog's cached signatures feed every tier branch
+    sig = Q._sig(spark, SF)
+    plan = plan_of(simhash_block_pairs(sig, DedupConfig(), id_col="doc_id"))
+    assert "CartesianProduct" not in plan
+    assert plan.count("partial_collect_list") == 1, plan[:2000]
+    assert plan.count("hashpartitioning(id_a") == 1
+    # the cached signatures feed every branch — no UDF recompute per tier
+    assert "InMemoryTableScan" in plan
 
 
 def test_embedding_neardup_bucket_join_shape(spark):
