@@ -11,8 +11,8 @@ explicit and persistable, and with the residual exact join kept, so the
 result is EXACT: bloom false positives cost shuffle bytes, never rows.
 
 Scale shape at 100 TB:
-- build: one scan of seen (plus a sizing count IF neither ``n_items`` nor
-  ``params`` is supplied — see ``build_bloom``); per-partition bitmaps are
+- build: one scan of seen (plus a sizing count IF ``n_items`` is not
+  supplied — see ``build_bloom``); per-partition bitmaps are
   OR-reduced by a depth-2 tree whose every level streams one bitmap at a
   time (``_or_reduce``), so peak residency on any reducer AND the driver
   is one bitmap + accumulator.
@@ -88,34 +88,25 @@ def build_bloom(
     key_col: str,
     n_items: int | None = None,
     fpp: float = 0.01,
-    params: tuple[int, int] | None = None,
 ) -> tuple[bytes, int, int]:
     """Bloom build over ``seen[key_col]``.  Returns ``(bitmap_bytes,
     m_bits, k)`` — a plain-bytes artifact a catalog can persist next to the
     snapshot it summarizes.
 
-    ONE scan when the layout is known up front — pass ``params`` (merge
-    into an existing bloom) or ``n_items`` (an estimate is fine: catalog
+    ONE scan when ``n_items`` is passed (an estimate is fine: catalog
     row-count stats, file sizes / avg row width; fpp degrades gracefully
-    if it is low).  With NEITHER given, sizing needs the count first, so
-    the default pays a counting scan AND the build scan — acceptable for
+    if it is low).  Without it, sizing needs the count first, so the
+    default pays a counting scan AND the build scan — acceptable for
     one-off builds, but at 100 TB callers should supply ``n_items``.
-
-    ``params=(m_bits, k)`` pins the layout so a new batch's bitmap can be
-    OR-merged into an EXISTING persisted bloom (same positions for the same
-    key — the incremental-maintenance path in ``streaming/incremental.py``).
 
     The scan emits ONE bitmap row per partition (``mapInPandas`` sees the
     whole partition's Arrow batches), and partials are OR-reduced with a
     depth-2 tree so a 100k-partition corpus ships 100k bitmaps to ~√100k
     reducers, not to the driver.
     """
-    if params is not None:
-        m_bits, k = params
-    else:
-        if n_items is None:
-            n_items = seen.count()
-        m_bits, k = bloom_params(n_items, fpp)
+    if n_items is None:
+        n_items = seen.count()
+    m_bits, k = bloom_params(n_items, fpp)
     n_bytes = m_bits // 8
 
     def _partition_bitmap(batches):

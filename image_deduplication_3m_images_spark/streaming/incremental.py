@@ -236,176 +236,6 @@ def sessionize_stream(
     return writer.start()
 
 
-_URL_BLOOM = "_url_bloom"
-
-
-def _load_url_bloom(cat) -> dict | None:
-    """Driver-side fetch of the persisted url-bloom artifact (one row, MBs
-    — an index structure, not data; same class as the 1-row profile aggs)."""
-    if not cat.exists(_URL_BLOOM):
-        return None
-    r = cat.read(_URL_BLOOM).collect()[0]
-    return {
-        "bitmap": bytes(r["bitmap"]),
-        "m_bits": int(r["m_bits"]),
-        "k": int(r["k"]),
-        "n_inserted": int(r["n_inserted"]),
-        "n_capacity": int(r["n_capacity"]),
-    }
-
-
-def _store_url_bloom(
-    spark, cat, bitmap: bytes, m_bits: int, k: int, n_inserted: int, n_capacity: int
-) -> None:
-    df = spark.createDataFrame(
-        [(bytearray(bitmap), m_bits, k, n_inserted, n_capacity)],
-        "bitmap binary, m_bits long, k long, n_inserted long, n_capacity long",
-    )
-    cat.write(df, _URL_BLOOM)  # atomic overwrite (tmp dir + rename)
-
-
-def _update_url_bloom(
-    spark,
-    cat,
-    new_ids: DataFrame,
-    n_new: int,
-    state: dict | None,
-    has_old: bool,
-    cfg,
-    expected: int,
-    fpp: float,
-    max_bytes: int,
-) -> None:
-    """Fold this batch's urls into the persisted bloom BEFORE the batch's
-    signature append commits, so the bloom is always a SUPERSET of ingested
-    urls (a crash between the bloom write and the signature append only
-    turns the replayed batch's rows into bloom hits, which the exact
-    anti-join then passes — false positives cost a scan, false negatives
-    would silently break first-write-wins, so the ordering rules them out).
-
-    Capacity policy: the artifact is sized for ``expected`` keys; when
-    inserts cross capacity it is REBUILT at the next power-of-two capacity
-    from the committed corpus (one column-pruned scan, O(log corpus) times
-    over a warehouse's lifetime) — unless that would exceed ``max_bytes``,
-    in which case the existing bitmap is kept (a saturated bloom degrades
-    fpp, never correctness) and the crossing is logged once to lineage.
-    A first creation already over ``max_bytes`` stores a DISABLED sentinel
-    (m_bits=0) so the decision — like the crossing — is made and logged
-    exactly once, not re-evaluated every micro-batch.
-
-    The ``n_inserted`` counter is replay-stable: against an existing bloom,
-    this batch's contribution is counted as its bloom-MISSES (ids the
-    bitmap has never seen), so a crash-replayed batch — whose urls were
-    inserted by the crashed attempt — adds ~0, not a second full count.
-    The fpp-fraction of genuinely-new ids probe positive and go uncounted,
-    so the counter runs ~fpp low; the 2x capacity headroom at (re)build
-    absorbs that bias.
-    """
-    from image_deduplication_3m_images_spark.operators.bloom import (
-        _hash_exprs,
-        bloom_params,
-        build_bloom,
-        might_contain_col,
-    )
-    from image_deduplication_3m_images_spark.plans.dedupe import ID
-
-    def _corpus_ids():
-        # no dropDuplicates: bloom insertion is idempotent, so the rebuild
-        # scan stays map-only (no corpus shuffle)
-        if has_old:
-            return cat.read("signatures").select(ID).unionByName(new_ids.select(ID))
-        return new_ids.select(ID)
-
-    if state is None:
-        # first creation (or self-heal of a pre-bloom warehouse): seed from
-        # everything committed so far plus this batch
-        n_committed = cat.row_count("signatures") if has_old else 0
-        n_total = n_committed + n_new
-        capacity = max(expected, 2 * n_total)
-        m_bits, k = bloom_params(capacity, fpp)
-        if m_bits // 8 > max_bytes:
-            cat.log_event(
-                "url_bloom_disabled",
-                cfg.config_hash(),
-                extra={"needed_bytes": m_bits // 8, "max_bytes": max_bytes},
-            )
-            # persist the decision: m_bits=0 sentinel keeps later batches
-            # from re-sizing and re-logging this every trigger; n_capacity
-            # records the max_bytes that drove it, so the sentinel gate is
-            # constant-time until the budget is actually raised
-            _store_url_bloom(spark, cat, b"", 0, 0, n_total, max_bytes)
-            return
-        bitmap, m_bits, k = build_bloom(_corpus_ids(), ID, params=(m_bits, k))
-        _store_url_bloom(spark, cat, bitmap, m_bits, k, n_total, capacity)
-        return
-
-    if state["m_bits"] == 0:
-        # disabled sentinel — but ``max_bytes`` may have been RAISED since
-        # the decision (ADVICE r5: the sentinel was permanent, leaving the
-        # routing off forever).  The sentinel's ``n_capacity`` field records
-        # the max_bytes that drove the disable (0 for pre-fix sentinels), so
-        # the common path — same budget as last time — stays a constant-time
-        # return; only a CHANGED budget pays the re-sizing (and at most once
-        # per change: a still-too-small budget is re-recorded below).
-        if max_bytes <= state["n_capacity"]:
-            return
-        n_committed = cat.row_count("signatures") if has_old else 0
-        n_total = n_committed + n_new
-        capacity = max(expected, 2 * n_total)
-        m_bits, k = bloom_params(capacity, fpp)
-        if m_bits // 8 > max_bytes:
-            # still too big: refresh the recorded budget so the next batch
-            # with this max_bytes returns at the constant-time gate above
-            _store_url_bloom(spark, cat, b"", 0, 0, state["n_inserted"], max_bytes)
-            return
-        bitmap, m_bits, k = build_bloom(_corpus_ids(), ID, params=(m_bits, k))
-        _store_url_bloom(spark, cat, bitmap, m_bits, k, n_total, capacity)
-        cat.log_event(
-            "url_bloom_reenabled",
-            cfg.config_hash(),
-            extra={"m_bits": m_bits, "max_bytes": max_bytes},
-        )
-        return
-
-    # replay-stable contribution (docstring): count this batch's bloom-MISSES
-    h1, h2 = _hash_exprs(ID)
-    probe = might_contain_col(spark, state["bitmap"], state["m_bits"], state["k"])
-    n_new = new_ids.where(~probe(h1, h2)).count()
-    n_ins = state["n_inserted"] + n_new
-    if n_ins > state["n_capacity"]:
-        cap2 = state["n_capacity"]
-        while cap2 < n_ins:
-            cap2 *= 2
-        m2, k2 = bloom_params(cap2, fpp)
-        if m2 // 8 <= max_bytes:
-            bitmap2, m2, k2 = build_bloom(_corpus_ids(), ID, params=(m2, k2))
-            _store_url_bloom(spark, cat, bitmap2, m2, k2, n_ins, cap2)
-            cat.log_event(
-                "url_bloom_rebuilt",
-                cfg.config_hash(),
-                extra={"n_inserted": n_ins, "n_capacity": cap2, "m_bits": m2},
-            )
-            return
-        if state["n_inserted"] <= state["n_capacity"]:  # log the crossing once
-            cat.log_event(
-                "url_bloom_saturated",
-                cfg.config_hash(),
-                extra={"n_inserted": n_ins, "n_capacity": state["n_capacity"]},
-            )
-    batch_bits, _, _ = build_bloom(
-        new_ids.select(ID), ID, params=(state["m_bits"], state["k"])
-    )
-    import numpy as np
-
-    merged = (
-        np.frombuffer(state["bitmap"], dtype=np.uint8)
-        | np.frombuffer(batch_bits, dtype=np.uint8)
-    ).tobytes()
-    _store_url_bloom(
-        spark, cat, merged, state["m_bits"], state["k"], n_ins, state["n_capacity"]
-    )
-
-
 def ingest_neardup_batch(
     spark,
     batch_df: DataFrame,
@@ -414,10 +244,6 @@ def ingest_neardup_batch(
     cfg,
     compact_frac: float = 0.5,
     compact_min_rows: int = 50_000,
-    url_bloom: bool = True,
-    url_bloom_expected: int = 1_000_000,
-    url_bloom_fpp: float = 0.01,
-    url_bloom_max_bytes: int = 256 << 20,
 ) -> None:
     """One incremental near-dup step over the checkpoint catalog (the
     ``foreachBatch`` body of :func:`stream_neardup`; exposed separately so
@@ -430,11 +256,10 @@ def ingest_neardup_batch(
     Work per batch is proportional to (new docs x matched buckets) plus CC
     over the accumulated EDGE set — never to the corpus size:
 
-    0. route the re-crawl guard through the persisted ``_url_bloom``
-       (``url_bloom=True``): a batch with no might-seen urls skips the
-       per-batch corpus id scan entirely; might-seen rows keep the exact
-       anti-join, so routing never changes results (superset invariant in
-       ``_update_url_bloom``),
+    0. drop re-crawled urls with one exact anti-join: the committed
+       signature urls of EARLIER batches are scanned map-side against the
+       broadcast batch ids, and the batch-sized hit set broadcast-anti-joins
+       the batch (first-write-wins),
     1. sign the new pages (same ``build_signatures`` as the batch pipeline —
        one code path),
     2. band them and join against the checkpointed ``bands`` table; the new
@@ -476,7 +301,6 @@ def ingest_neardup_batch(
             return
 
     has_old = cat.exists("signatures")
-    bloom_state = _load_url_bloom(cat) if url_bloom else None
     if has_old:
         # Re-crawl guard: a url delivered again in a LATER batch is ALREADY
         # ingested — signing it again would give the catalog two signature
@@ -489,41 +313,14 @@ def ingest_neardup_batch(
         # appends carry the same batch_id — those must be re-processed (the
         # dropDuplicates read heals the double-append), not filtered out
         # (filtering them would silently lose the batch's edges/clusters).
-        #
-        # BLOOM ROUTING: even column-pruned, that corpus id scan is O(corpus
-        # bytes) PER MICRO-BATCH (~40 TB at 10^12 urls).  The persisted
-        # ``_url_bloom`` — a superset of every ingested url by construction
-        # (see ``_update_url_bloom``: bloom commit precedes signature
-        # commit) — probes the BATCH map-side first; only might-seen ids
-        # (true re-crawls + fpp) keep the corpus scan, and a batch with no
-        # hits skips it entirely.  Routing is exact: bloom hits still pass
-        # through the same anti-join, misses are definitely-new.
         batch_ids = batch_df.select(ID).distinct()
-        n_maybe = None
-        if bloom_state is not None and bloom_state["m_bits"] > 0:
-            from image_deduplication_3m_images_spark.operators.bloom import (
-                _H2_SALT,
-                might_contain_col,
-            )
-
-            probe = might_contain_col(
-                spark, bloom_state["bitmap"], bloom_state["m_bits"], bloom_state["k"]
-            )
-            # lazy checkpoint materialized by the count — ONE job for
-            # truncate+materialize+count instead of two (same fusion as
-            # the CC loop's probe); batch-sized, consumed by count + join
-            batch_ids = batch_ids.where(
-                probe(F.xxhash64(F.col(ID)), F.xxhash64(F.col(ID), F.lit(_H2_SALT)))
-            ).localCheckpoint(eager=False)
-            n_maybe = batch_ids.count()
-        if n_maybe != 0:
-            existing = (
-                cat.read("signatures")
-                .where(F.col("batch_id") < F.lit(batch_id))
-                .select(ID)
-                .join(F.broadcast(batch_ids), ID, "leftsemi")
-            )
-            batch_df = batch_df.join(F.broadcast(existing), ID, "left_anti")
+        existing = (
+            cat.read("signatures")
+            .where(F.col("batch_id") < F.lit(batch_id))
+            .select(ID)
+            .join(F.broadcast(batch_ids), ID, "leftsemi")
+        )
+        batch_df = batch_df.join(F.broadcast(existing), ID, "left_anti")
     # WITHIN-batch re-delivery: one url twice in a micro-batch would emit two
     # signature rows with the SAME batch_id (nondeterministic winner under
     # dropDuplicates-on-read if the html differs) — keep one row per url
@@ -556,21 +353,6 @@ def ingest_neardup_batch(
         .localCheckpoint(eager=False)
     )
     n_new = sig_new.count()
-    if url_bloom:
-        # committed BEFORE any table append — bloom must stay a superset of
-        # ingested urls under any crash point (docstring of _update_url_bloom)
-        _update_url_bloom(
-            spark,
-            cat,
-            sig_new.select(ID),
-            n_new,
-            bloom_state,
-            has_old,
-            cfg,
-            url_bloom_expected,
-            url_bloom_fpp,
-            url_bloom_max_bytes,
-        )
     bands_new = explode_bands(sig_new.select(ID, "band_keys"), id_col=ID)
 
     if has_old:

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -502,3 +503,105 @@ def test_within_batch_duplicate_url_winner_is_deterministic(spark, tmp_path):
         assert len(sigs) == 1  # exactly one signed row for the url
         texts[name] = sigs[0]["text"]
     assert texts["orig_first"] == texts["mutated_first"]
+
+
+def _split_batches(pages, n_batches):
+    b = F.abs(F.xxhash64("url")) % n_batches
+    return [pages.where(b == i) for i in range(n_batches)]
+
+
+def _sorted_clusters(cat):
+    from image_deduplication_3m_images_spark.streaming.incremental import (
+        read_clusters,
+    )
+
+    return sorted((r["url"], r["cluster_id"]) for r in read_clusters(cat).collect())
+
+
+def test_recrawled_url_dropped_before_signing(spark, tmp_path):
+    """First-write-wins across batches: a url re-delivered in a LATER batch
+    with different html/text is dropped by the re-crawl guard before it is
+    signed — one signature row per url, and the clusters equal those of a
+    run that never saw the re-delivery."""
+    from image_deduplication_3m_images_spark.config import DedupConfig
+    from image_deduplication_3m_images_spark.sources.checkpoint import ParquetCatalog
+    from image_deduplication_3m_images_spark.streaming.incremental import (
+        ingest_neardup_batch,
+    )
+
+    pages = pages_dataframe(spark, generate_pages(n_rows=120, seed=31))
+    batches = _split_batches(pages, 3)
+    # batch 0's urls come back inside batch 2 with DIFFERENT content, so a
+    # re-sign would change signatures, edges and clusters
+    recrawl = batches[0].withColumn(
+        "text", F.concat(F.lit("recrawled different content "), F.col("text"))
+    ).withColumn(
+        "html",
+        F.encode(
+            F.concat(
+                F.lit("<html><body><p>"), F.col("text"), F.lit("</p></body></html>")
+            ),
+            "utf-8",
+        ),
+    )
+    cfg = DedupConfig()
+    cat = ParquetCatalog(spark, str(tmp_path / "wh"))
+    cat_ref = ParquetCatalog(spark, str(tmp_path / "wh_ref"))
+    for i, b in enumerate(batches):
+        ingest_neardup_batch(
+            spark, b.unionByName(recrawl) if i == 2 else b, i, cat, cfg
+        )
+        ingest_neardup_batch(spark, b, i, cat_ref, cfg)
+
+    n_urls = pages.select("url").distinct().count()
+    sigs = cat.read("signatures")
+    assert sigs.count() == n_urls  # every re-crawl dropped pre-sign
+    assert sigs.where(F.col("text").startswith("recrawled")).count() == 0
+    assert _sorted_clusters(cat) == _sorted_clusters(cat_ref)
+
+
+def test_crash_replay_reprocesses_own_partial_appends(spark, tmp_path):
+    """A crash after batch N's ``signatures`` append but before its
+    ``_batches`` marker leaves N's rows committed.  The guard only treats
+    urls of EARLIER batches as seen, so the replay of N re-processes those
+    rows (instead of dropping them as re-crawls) and ends in the same
+    clusters as a crash-free run."""
+    from image_deduplication_3m_images_spark.config import DedupConfig
+    from image_deduplication_3m_images_spark.sources.checkpoint import ParquetCatalog
+    from image_deduplication_3m_images_spark.streaming.incremental import (
+        ingest_neardup_batch,
+    )
+
+    class _CrashAfterSignatures:
+        """Catalog proxy that dies on the first append after signatures."""
+
+        def __init__(self, inner):
+            self._inner = inner
+
+        def append(self, df, table):
+            if table != "signatures":
+                raise RuntimeError("simulated crash")
+            self._inner.append(df, table)
+
+        def __getattr__(self, name):
+            return getattr(self._inner, name)
+
+    pages = pages_dataframe(spark, generate_pages(n_rows=100, seed=39))
+    b0, b1 = _split_batches(pages, 2)
+    cfg = DedupConfig()
+    cat = ParquetCatalog(spark, str(tmp_path / "wh"))
+    ingest_neardup_batch(spark, b0, 0, cat, cfg)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        ingest_neardup_batch(spark, b1, 1, _CrashAfterSignatures(cat), cfg)
+    n_b1 = b1.count()
+    assert cat.read("signatures").where(F.col("batch_id") == 1).count() == n_b1
+    assert 1 not in {r["batch_id"] for r in cat.read("_batches").collect()}
+
+    ingest_neardup_batch(spark, b1, 1, cat, cfg)  # the replay
+    # re-processed, not filtered: the replay appended batch 1 a second time
+    assert cat.read("signatures").where(F.col("batch_id") == 1).count() == 2 * n_b1
+
+    cat_ref = ParquetCatalog(spark, str(tmp_path / "wh_ref"))
+    ingest_neardup_batch(spark, b0, 0, cat_ref, cfg)
+    ingest_neardup_batch(spark, b1, 1, cat_ref, cfg)
+    assert _sorted_clusters(cat) == _sorted_clusters(cat_ref)
