@@ -123,5 +123,3 @@ class _PermMemo:
 
 
 _PERM_CACHE = _PermMemo()
-
-DEFAULT_CONFIG = DedupConfig()

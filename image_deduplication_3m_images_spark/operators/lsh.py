@@ -59,7 +59,6 @@ def candidate_pairs(
     sig_df: DataFrame,
     cfg: DedupConfig,
     id_col: str = "doc_id",
-    count_bands: bool = True,
     max_bucket_hint: int | None = None,
 ) -> DataFrame:
     """Band-bucket grouping -> distinct candidate pairs (a < b).
@@ -99,12 +98,9 @@ def candidate_pairs(
         grouped = flat.groupBy("band_id", "band_key").agg(
             F.sort_array(F.collect_list(id_col)).alias("ids")
         )
-        pairs = _explode_bucket_pairs(grouped)
-        if count_bands:
-            return pairs.groupBy("id_a", "id_b").agg(
-                F.count_distinct("band_id").alias("n_bands")
-            )
-        return pairs.select("id_a", "id_b").dropDuplicates(["id_a", "id_b"])
+        return _explode_bucket_pairs(grouped).groupBy("id_a", "id_b").agg(
+            F.count_distinct("band_id").alias("n_bands")
+        )
 
     salt_max = cfg.bucket_star_cap * cfg.salt_factor
     hot_stats = (
@@ -150,11 +146,9 @@ def candidate_pairs(
     )
 
     pairs = small_pairs.unionByName(medium_pairs).unionByName(hot_pairs)
-    if count_bands:
-        return pairs.groupBy("id_a", "id_b").agg(
-            F.count_distinct("band_id").alias("n_bands")
-        )
-    return pairs.select("id_a", "id_b").dropDuplicates(["id_a", "id_b"])
+    return pairs.groupBy("id_a", "id_b").agg(
+        F.count_distinct("band_id").alias("n_bands")
+    )
 
 
 # largest bucket the fast path is allowed to absorb undetected: C(4096, 2)

@@ -44,7 +44,8 @@ def melt_assemble(
     non-broadcast fallback is the plain two-join path in join_signatures.
 
     ``max(when(...))`` per side is exact: each (id_a, id_b, side) group has
-    exactly one payload row (sig ids are unique), so max just selects it —
+    one payload row (or byte-identical copies of it, which a streaming
+    crash-replay can leave), so max just selects it —
     and Max is a declarative spill-safe aggregate for every payload type
     used here (binary / long / string / array).
     """

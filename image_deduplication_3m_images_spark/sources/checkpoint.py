@@ -97,21 +97,14 @@ class ParquetCatalog:
         return any(e.startswith("batch_") for e in os.listdir(p))
 
     # -- table io ----------------------------------------------------------
-    def write(self, df: DataFrame, table: str, mode: str = "overwrite") -> str:
+    def write(self, df: DataFrame, table: str) -> str:
         """Atomic overwrite: write to a tmp dir, then a two-RENAME swap (the
         old table is renamed aside, the tmp renamed in, the old dir deleted
         last).  A plain rmtree-then-rename would have a crash window where
         the committed table is deleted and not yet replaced; here every
         transition is an atomic rename, and a crash between the two renames
         leaves the old data in an ``_old_`` sibling that ``_heal`` restores
-        on the next access.  Returns snapshot id.  ``mode="append"``
-        delegates to :meth:`append` (this parameter used to be silently
-        ignored — a destructive surprise for append callers)."""
-        if mode == "append":
-            self.append(df, table)
-            return self.snapshot_id(table)
-        if mode != "overwrite":
-            raise ValueError(f"unsupported write mode: {mode!r}")
+        on the next access.  Returns snapshot id."""
         final = self._path(table)
         tmp = final + "_tmp_" + uuid.uuid4().hex[:8]
         df.write.mode("overwrite").parquet(tmp)
@@ -160,8 +153,8 @@ class ParquetCatalog:
         so a crash right after the rename cannot hide committed data).  A
         crash mid-write leaves only an invisible tmp dir.  Note the marker
         gap this closes but does not remove: appends are still at-least-once
-        under replay, so streaming consumers keep dropDuplicates-on-read as
-        the idempotency layer (ADVICE r4 item 1)."""
+        under replay, so streaming consumers must tolerate a re-appended
+        batch (see ``ingest_neardup_batch``'s exactly-once note)."""
         final = self._path(table)
         tmp = final + "_tmp_append_" + uuid.uuid4().hex[:8]
         df.write.mode("overwrite").parquet(tmp)
@@ -263,8 +256,9 @@ class ParquetCatalog:
         input_snapshot: str = "",
         extra: dict | None = None,
     ) -> None:
-        """One lineage row per spark partition of the stage output: the
-        per-partition row counts make silent truncation/skew visible."""
+        """One lineage row per spark partition of ``df``.  Unused by the
+        pipeline, and its rows (no ``output_snapshot``) never satisfy
+        :meth:`stage_complete`; kept while ``perfbench/``'s tracer wraps it."""
         per_part = (
             df.withColumn("partition_id", F.spark_partition_id())
             .groupBy("partition_id")
@@ -336,8 +330,8 @@ class ParquetCatalog:
         flip A->B->A the old A row still exists while the table holds B
         data — rows written by ``log_lineage_for_table`` therefore carry
         ``output_snapshot`` in their extra JSON and must match the table's
-        current snapshot; legacy rows without one are accepted on hash
-        alone (pre-existing warehouses)."""
+        current snapshot.  A row without one (older warehouses) vouches for
+        nothing: the stage recomputes."""
         if not self.exists(stage) or not self.exists(LINEAGE_TABLE):
             return False
         snap = self.snapshot_id(stage)
@@ -346,12 +340,7 @@ class ParquetCatalog:
             .where(
                 (F.col("stage") == stage) & (F.col("config_hash") == config_hash)
             )
-            .where(
-                F.coalesce(
-                    F.get_json_object("extra", "$.output_snapshot"), F.lit(snap)
-                )
-                == snap
-            )
+            .where(F.get_json_object("extra", "$.output_snapshot") == snap)
             .limit(1)
             .count()
         )
@@ -397,15 +386,9 @@ class IcebergCatalog:
         return self.spark.catalog.tableExists(self._tbl(table))
 
     # -- table io ------------------------------------------------------------
-    def write(self, df: DataFrame, table: str, mode: str = "overwrite") -> str:
+    def write(self, df: DataFrame, table: str) -> str:
         """Atomic overwrite = Iceberg REPLACE TABLE commit; returns the new
-        snapshot id.  ``mode="append"`` delegates to :meth:`append` (the
-        parameter used to be silently ignored)."""
-        if mode == "append":
-            self.append(df, table)
-            return self.snapshot_id(table)
-        if mode != "overwrite":
-            raise ValueError(f"unsupported write mode: {mode!r}")
+        snapshot id."""
         df.writeTo(self._tbl(table)).using("iceberg").createOrReplace()
         return self.snapshot_id(table)
 
@@ -436,29 +419,6 @@ class IcebergCatalog:
         return int(rows[0]["n"])
 
     # -- lineage ------------------------------------------------------------
-    def log_lineage(
-        self,
-        df: DataFrame,
-        stage: str,
-        config_hash: str,
-        input_snapshot: str = "",
-        extra: dict | None = None,
-    ) -> None:
-        per_part = (
-            df.withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id")
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .select(
-                F.lit(stage).alias("stage"),
-                "partition_id",
-                "rows",
-                F.lit(input_snapshot).alias("input_snapshot"),
-                F.lit(config_hash).alias("config_hash"),
-                F.lit(json.dumps(extra or {}, sort_keys=True)).alias("extra"),
-            )
-        )
-        self.append(per_part, LINEAGE_TABLE)
-
     def log_lineage_for_table(
         self,
         table: str,
@@ -510,12 +470,7 @@ class IcebergCatalog:
             .where(
                 (F.col("stage") == stage) & (F.col("config_hash") == config_hash)
             )
-            .where(
-                F.coalesce(
-                    F.get_json_object("extra", "$.output_snapshot"), F.lit(snap)
-                )
-                == snap
-            )
+            .where(F.get_json_object("extra", "$.output_snapshot") == snap)
             .limit(1)
             .count()
         )

@@ -187,9 +187,6 @@ def generate_pages(
     return PagesFixture(rows=rows, truth=truth)
 
 
-PAGES_DDL_COLS = ["url", "warc_ts", "html", "text", "lang"]
-
-
 def pages_dataframe(spark, fixture: PagesFixture):
     from pyspark.sql.types import (
         BinaryType,
@@ -304,23 +301,4 @@ def pages_distributed(spark, n_rows: int, seed: int = 42, partitions: int = 32):
         spark.range(n_rows)
         .repartition(partitions)
         .mapInPandas(gen, schema)
-    )
-
-
-def truth_dataframe(spark, fixture: PagesFixture):
-    from pyspark.sql.types import BooleanType, StringType, StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("url", StringType(), False),
-            StructField("expected_cluster_id", StringType(), False),
-            StructField("expected_is_dup", BooleanType(), False),
-        ]
-    )
-    return spark.createDataFrame(
-        [
-            (t["url"], t["expected_cluster_id"], t["expected_is_dup"])
-            for t in fixture.truth
-        ],
-        schema,
     )

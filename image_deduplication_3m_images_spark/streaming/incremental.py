@@ -39,9 +39,8 @@ def stream_signatures(
     made IDEMPOTENT — each batch dynamically overwrites its OWN
     ``batch_id=N`` partition, so a replay rewrites the same files instead
     of appending a second copy.  (A plain ``mode("append")`` here would
-    silently double-count a replayed batch: this output is raw parquet
-    with no dropDuplicates-on-read healing layer, unlike the catalog
-    tables.)  Returns the started StreamingQuery; callers
+    silently double-count a replayed batch: readers of this raw parquet
+    output count rows.)  Returns the started StreamingQuery; callers
     ``awaitTermination()``.
     """
     cfg = cfg or DedupConfig()
@@ -262,13 +261,13 @@ def ingest_neardup_batch(
        the batch (first-write-wins),
     1. sign the new pages (same ``build_signatures`` as the batch pipeline —
        one code path),
-    2. band them and join against the checkpointed ``bands`` table; the new
-       side is tiny, so it broadcasts and the corpus bands scan map-side
-       (no corpus shuffle).  Every emitted pair touches >= 1 new doc, so no
-       pair is ever re-verified across batches,
+    2. band them and join against the stored signatures' ``band_keys``
+       (exploded on read); the new side is tiny, so it broadcasts and the
+       corpus band keys explode map-side (no corpus shuffle).  Every emitted
+       pair touches >= 1 new doc, so no pair is re-verified across batches,
     3. verify with the same evidence exprs (signatures semi-filtered by the
        broadcast pair set when the byte guard allows),
-    4. append new signatures/bands/edges, then maintain clusters
+    4. append new signatures/edges, then maintain clusters
        INCREMENTALLY: contract new edges onto the stored cluster labels,
        run CC on the contracted (batch-sized) graph only, and append the
        delta — members of label-changed clusters plus this batch's docs —
@@ -282,9 +281,13 @@ def ingest_neardup_batch(
 
     Exactly-once: ``foreachBatch`` is at-least-once, so each completed batch
     id is recorded in ``_batches`` and a replay of a completed batch is a
-    no-op.  A crash mid-batch may leave partial appends; the replay then
-    re-appends, and ``dropDuplicates`` on read (signatures/bands by natural
-    key, edges by pair) makes that harmless.
+    no-op.  A crash mid-batch may leave partial appends that the replay
+    appends again.  Those duplicates are byte-identical (the re-crawl guard
+    keeps a url in one batch, the within-batch pick is deterministic) and
+    every consumer ignores them — ``melt_assemble``'s ``max(when(...))``,
+    the band join's pair ``dropDuplicates``, CC and ``read_clusters`` work
+    on sets — so nothing is de-duplicated on read.  A ``bands`` table left
+    by an older version is never read and can be deleted.
     """
     from pyspark.sql import functions as F
 
@@ -311,8 +314,8 @@ def ingest_neardup_batch(
         # broadcast-anti-joins the batch.  Rows from EARLIER batches only:
         # a crash-replay of THIS batch id re-delivers rows whose partial
         # appends carry the same batch_id — those must be re-processed (the
-        # dropDuplicates read heals the double-append), not filtered out
-        # (filtering them would silently lose the batch's edges/clusters).
+        # byte-identical double-append is harmless, see the docstring), not
+        # filtered out (that would silently lose the batch's edges/clusters).
         batch_ids = batch_df.select(ID).distinct()
         existing = (
             cat.read("signatures")
@@ -322,8 +325,8 @@ def ingest_neardup_batch(
         )
         batch_df = batch_df.join(F.broadcast(existing), ID, "left_anti")
     # WITHIN-batch re-delivery: one url twice in a micro-batch would emit two
-    # signature rows with the SAME batch_id (nondeterministic winner under
-    # dropDuplicates-on-read if the html differs) — keep one row per url
+    # signature rows with the SAME batch_id (two different pages under one
+    # id if the html differs) — keep one row per url
     # before signing, chosen DETERMINISTICALLY (min content hash), because a
     # crash-replay re-runs this pick: dropDuplicates keeps an arbitrary row,
     # so a replay could sign different html than the crashed attempt whose
@@ -355,22 +358,14 @@ def ingest_neardup_batch(
     n_new = sig_new.count()
     bands_new = explode_bands(sig_new.select(ID, "band_keys"), id_col=ID)
 
-    if has_old:
-        sig_all = cat.read("signatures").dropDuplicates([ID]).unionByName(sig_new)
-        bands_all = (
-            cat.read("bands")
-            .select(ID, "band_id", "band_key")
-            .dropDuplicates([ID, "band_id"])
-            .unionByName(bands_new)
-        )
-    else:
-        sig_all, bands_all = sig_new, bands_new
+    sig_all = cat.read("signatures").unionByName(sig_new) if has_old else sig_new
+    bands_all = explode_bands(sig_all.select(ID, "band_keys"), id_col=ID)
 
     # Broadcast the NEW side only when it fits cluster-wide (same two-level
     # byte guard as the batch pipeline: object size AND size x executors —
     # a broadcast is fetched+held PER EXECUTOR).  A normal micro-batch is
-    # tiny and broadcasts (corpus bands scan map-side, no shuffle); a huge
-    # backfill batch (availableNow over a pre-existing directory delivers
+    # tiny and broadcasts (corpus band keys explode map-side, no shuffle); a
+    # huge backfill batch (availableNow over a pre-existing directory delivers
     # the WHOLE backlog as one batch) falls back to a plain shuffle join,
     # which is the right plan at that size rather than an >8 GB broadcast.
     from image_deduplication_3m_images_spark.session import broadcast_fits
@@ -420,7 +415,6 @@ def ingest_neardup_batch(
     )
 
     cat.append(sig_new, "signatures")
-    cat.append(bands_new.withColumn("batch_id", F.lit(batch_id)), "bands")
     cat.append(new_edges.withColumn("batch_id", F.lit(batch_id)), "edges")
 
     # --- INCREMENTAL cluster maintenance (VERDICT r3 item 2) --------------

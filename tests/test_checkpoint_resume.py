@@ -46,7 +46,7 @@ def test_stage_complete_requires_matching_config(spark, tmp_path, backend):
     cat = _make_cat(backend, spark, str(tmp_path / "wh"))
     df = spark.createDataFrame([(1, "a")], ["id", "v"])
     cat.write(df, "stage_x")
-    cat.log_lineage(cat.read("stage_x"), "stage_x", config_hash="aaaa")
+    cat.log_lineage_for_table("stage_x", "stage_x", "aaaa")
     assert cat.stage_complete("stage_x", "aaaa")
     assert not cat.stage_complete("stage_x", "bbbb")  # drift -> recompute
     assert not cat.stage_complete("missing_stage", "aaaa")

@@ -286,7 +286,7 @@ def test_stream_neardup_merges_later_duplicate_into_existing_cluster(
 
 def test_ingest_neardup_batch_replay_is_noop(spark, tmp_path):
     """foreachBatch is at-least-once: replaying a COMPLETED batch id must not
-    duplicate signatures/bands/edges or change clusters."""
+    duplicate signatures/edges or change clusters."""
     from image_deduplication_3m_images_spark.config import DedupConfig
     from image_deduplication_3m_images_spark.sources.checkpoint import ParquetCatalog
     from image_deduplication_3m_images_spark.streaming.incremental import (
@@ -560,17 +560,28 @@ def test_recrawled_url_dropped_before_signing(spark, tmp_path):
     assert _sorted_clusters(cat) == _sorted_clusters(cat_ref)
 
 
-def test_crash_replay_reprocesses_own_partial_appends(spark, tmp_path):
+@pytest.mark.parametrize("verify_path", ["broadcast", "shuffle"])
+def test_crash_replay_reprocesses_own_partial_appends(
+    spark, tmp_path, monkeypatch, verify_path
+):
     """A crash after batch N's ``signatures`` append but before its
     ``_batches`` marker leaves N's rows committed.  The guard only treats
     urls of EARLIER batches as seen, so the replay of N re-processes those
     rows (instead of dropping them as re-crawls) and ends in the same
-    clusters as a crash-free run."""
+    clusters as a crash-free run.  A LATER batch then bands against and
+    verifies over the twice-stored rows of N; the corpus is not
+    de-duplicated on read, so the clusters must still equal the crash-free
+    run's — on the broadcast (melt) verify path and on the shuffle-join
+    path that the byte guard picks for oversized batches."""
+    from image_deduplication_3m_images_spark import session
     from image_deduplication_3m_images_spark.config import DedupConfig
     from image_deduplication_3m_images_spark.sources.checkpoint import ParquetCatalog
     from image_deduplication_3m_images_spark.streaming.incremental import (
         ingest_neardup_batch,
     )
+
+    if verify_path == "shuffle":
+        monkeypatch.setattr(session, "broadcast_fits", lambda *a, **kw: False)
 
     class _CrashAfterSignatures:
         """Catalog proxy that dies on the first append after signatures."""
@@ -586,8 +597,8 @@ def test_crash_replay_reprocesses_own_partial_appends(spark, tmp_path):
         def __getattr__(self, name):
             return getattr(self._inner, name)
 
-    pages = pages_dataframe(spark, generate_pages(n_rows=100, seed=39))
-    b0, b1 = _split_batches(pages, 2)
+    pages = pages_dataframe(spark, generate_pages(n_rows=150, seed=39))
+    b0, b1, b2 = _split_batches(pages, 3)
     cfg = DedupConfig()
     cat = ParquetCatalog(spark, str(tmp_path / "wh"))
     ingest_neardup_batch(spark, b0, 0, cat, cfg)
@@ -605,3 +616,71 @@ def test_crash_replay_reprocesses_own_partial_appends(spark, tmp_path):
     ingest_neardup_batch(spark, b0, 0, cat_ref, cfg)
     ingest_neardup_batch(spark, b1, 1, cat_ref, cfg)
     assert _sorted_clusters(cat) == _sorted_clusters(cat_ref)
+
+    # batch 2 probes and verifies against batch 1's duplicated rows
+    ingest_neardup_batch(spark, b2, 2, cat, cfg)
+    ingest_neardup_batch(spark, b2, 2, cat_ref, cfg)
+    assert _sorted_clusters(cat) == _sorted_clusters(cat_ref)
+    # the later batch's docs joined clusters of the replayed batch, so the
+    # comparison above covered matches against the duplicated rows
+    clusters = dict(_sorted_clusters(cat))
+    b1_urls = {r["url"] for r in b1.select("url").collect()}
+    b2_urls = {r["url"] for r in b2.select("url").collect()}
+    b1_clusters = {clusters[u] for u in b1_urls}
+    assert any(clusters[u] in b1_clusters for u in b2_urls)
+
+
+def test_ingest_verify_input_has_no_corpus_exchange(spark, tmp_path, monkeypatch):
+    """Per-batch work must not be proportional to the corpus: the stored
+    ``signatures`` table reaches verify as a plain scan — no shuffle
+    Exchange above it (a corpus-wide dropDuplicates would put one there and
+    shuffle every stored text each micro-batch)."""
+    from image_deduplication_3m_images_spark.config import DedupConfig
+    from image_deduplication_3m_images_spark.operators import verify
+    from image_deduplication_3m_images_spark.sources.checkpoint import ParquetCatalog
+    from image_deduplication_3m_images_spark.streaming.incremental import (
+        ingest_neardup_batch,
+    )
+
+    captured = []
+    orig = verify.verify_pairs
+
+    def _capture(pairs, sig_df, *a, **kw):
+        captured.append(sig_df)
+        return orig(pairs, sig_df, *a, **kw)
+
+    monkeypatch.setattr(verify, "verify_pairs", _capture)
+    pages = pages_dataframe(spark, generate_pages(n_rows=80, seed=43))
+    b0, b1 = _split_batches(pages, 2)
+    cfg = DedupConfig()
+    cat = ParquetCatalog(spark, str(tmp_path / "wh"))
+    ingest_neardup_batch(spark, b0, 0, cat, cfg)
+    ingest_neardup_batch(spark, b1, 1, cat, cfg)
+    assert len(captured) == 2
+
+    sig_path = os.path.join(str(tmp_path / "wh"), "signatures")
+
+    def scans(node, under_shuffle):
+        """(root paths, under a shuffle Exchange?) of each file scan."""
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return scans(node.executedPlan(), under_shuffle)
+        if name == "FileSourceScanExec":
+            roots = node.relation().location().rootPaths().mkString(",")
+            return [(roots, under_shuffle)]
+        under_shuffle = under_shuffle or name == "ShuffleExchangeExec"
+        kids = node.children()
+        return [
+            hit
+            for k in range(kids.size())
+            for hit in scans(kids.apply(k), under_shuffle)
+        ]
+
+    plan = captured[1]._jdf.queryExecution().executedPlan()
+    stored = [
+        shuffled
+        for roots, shuffled in scans(plan, False)
+        if roots.endswith(sig_path)
+    ]
+    assert stored, plan.toString()  # verify reads the stored table
+    assert not any(stored), plan.toString()
