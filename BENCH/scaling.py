@@ -12,7 +12,8 @@ exactly how a real cluster grows.
     measured ~8-concurrent-Arrow-worker kernel ceiling — the faithful model
     of executors that own their machines.
   * Transparency extras (saturated 2x4 vs 8x4 pair and single-JVM local[8]
-    vs local[32]) live in BENCH/extras.py.
+    vs local[32]) were measured by BENCH/extras.py, now deleted (git
+    history keeps it).
 
 Methodology (all measured in this sandbox, reproducible below):
   * the fixture input is generated ONCE per size into a shared cache and
@@ -277,9 +278,9 @@ The raw-CPU ceiling for this pair is ~1.0 (numpy multiprocessing scales
 pipeline scaling, not hardware or sandbox-socket artifacts.
 
 Transparency extras (saturated 8->32-core pair and single-JVM thread
-pair, which quantify the one-box artifact) are measured by
-`python BENCH/extras.py <size>`; round-2 readings: `git show
-4fe7710:BENCH/BASELINE.md`.
+pair, which quantify the one-box artifact) were measured by
+`BENCH/extras.py`, now deleted (git history keeps it); round-2 readings:
+`git show 4fe7710:BENCH/BASELINE.md`.
 
 Reproduce: `python BENCH/scaling.py {','.join(str(s) for s in sizes)} {repeats}`
 """

@@ -1,9 +1,10 @@
 """Per-document text functions — the webtext analog of the reference's
 per-item map operators (SURVEY.md §2.2).
 
-Everything here is either a JVM-side Column expression (whole-stage codegen,
-the fast path) or a vectorized pandas UDF (only ``extract_text``, which needs
-real string parsing).  Reference analogs cited per function.
+Everything here is a JVM-side Column expression (whole-stage codegen) except
+the HTML extraction ``_extract_text_pd``, a vectorized pandas function that
+runs inside the fused signature UDF (``make_packed_signature_udf``).
+Reference analogs cited per function.
 """
 
 from __future__ import annotations
@@ -40,34 +41,6 @@ def _extract_text_pd(html: pd.Series) -> pd.Series:
     out = title.str.cat(paras, sep="\n")
     # no title and no paras -> empty text, never null
     return out.str.strip("\n").fillna("")
-
-
-_EXTRACT_UDF = None
-
-
-def extract_text_udf(html_col: Column) -> Column:
-    """Pandas-UDF extraction variant (lazily built — UDF construction needs an
-    active session).  Kept for API parity and as the extension point for real
-    HTML parsers; byte-equality with ``extract_text`` is unit-tested.
-    """
-    global _EXTRACT_UDF
-    if _EXTRACT_UDF is None:
-        _EXTRACT_UDF = F.pandas_udf(_extract_text_pd, "string")
-    return _EXTRACT_UDF(html_col)
-
-
-def extract_text(html_col: Column) -> Column:
-    """JVM-expression extraction (the default, whole-stage-codegen path):
-    regexp built-ins over the decoded html — no Python worker at all.
-
-    Byte-identical to ``extract_text_udf`` (same regexes, same join/strip
-    rule); measured ~20x cheaper end-to-end because the signature job's only
-    remaining Python boundary is the signature UDF itself.
-    """
-    s = F.decode(html_col, "UTF-8")
-    title = F.regexp_extract(s, _TITLE_RE, 1)
-    paras = F.array_join(F.regexp_extract_all(s, F.lit(_PARA_RE), F.lit(1)), "\n")
-    return F.btrim(F.concat_ws("\n", title, paras), F.lit("\n"))
 
 
 # ---------------------------------------------------------------------------

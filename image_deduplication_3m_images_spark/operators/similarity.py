@@ -137,26 +137,10 @@ def hyperplanes(dim: int, n_planes: int = 16, seed: int = 7) -> np.ndarray:
     return rng.standard_normal((n_planes, dim)).astype(np.float64)
 
 
-def signlsh_bucket_expr(vec, planes: np.ndarray):
-    """Integer bucket id: bit i = sign(vec . plane_i) >= 0.  Pure column expr
-    (dot against literal arrays) so it stays in codegen.
-
-    Used for SMALL plane sets; for multi-table configs the literal
-    expression tree explodes codegen/planning time — use
-    make_signlsh_buckets_udf instead (bit-identical math).
-    """
-    bucket = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        lit = F.array(*[F.lit(float(v)) for v in plane])
-        bit = (_dot_expr(vec, lit) >= 0).cast("long")
-        bucket = bucket + F.shiftleft(bit, i)
-    return bucket
-
-
 def make_signlsh_buckets_udf(tables: list):
     """Arrow UDF: embedding -> array of per-table bucket ids.
 
-    Bit-identical to signlsh_bucket_expr / the DuckDB oracle: the dot
+    Bit-identical to the DuckDB oracle: the dot
     product there is a LEFT FOLD over per-element float64 products, and
     ``np.cumsum``'s last element reproduces exactly that sequential
     accumulation order (unlike np.dot/np.sum, which use pairwise

@@ -82,24 +82,13 @@ def join_signatures(
     sig_df: DataFrame,
     id_col: str = "doc_id",
     cols=("minhash_bin", "simhash"),
-    prefilter_broadcast: bool = False,
 ) -> DataFrame:
-    """Attach both sides' signatures to (id_a, id_b) pairs.
-
-    ``prefilter_broadcast``: when the pair set is broadcast-small, use the
-    melt_assemble shape — ONE corpus scan, pair membership tested map-side
-    against the broadcast melt, one shuffle of exactly the payload-carrying
-    hit rows.  (History: round 4 ran two semi-filtered corpus scans feeding
-    a sort-merge join of wide slivers; the 2M event logs showed the two
-    scans dominating the stage — tsum 173 s + 70 s at N vs 22 s for the
-    join itself — so the single-scan melt replaced it.)
-
-    Without the prefilter (pair set too big to broadcast) the plain two-join
-    path runs: both joins shuffle, fully spillable, no driver bottleneck —
-    the shape that survives a pathological pair explosion.
+    """Attach both sides' signatures to (id_a, id_b) pairs with the plain
+    two-join plan: both joins shuffle, fully spillable, no driver
+    bottleneck — the shape that survives a pair set too big to broadcast.
+    Broadcast-small pair sets go through ``melt_assemble`` instead (see
+    ``verify_pairs``).
     """
-    if prefilter_broadcast:
-        return melt_assemble(pairs.select("id_a", "id_b"), sig_df, id_col, cols)
     a = sig_df.select(
         F.col(id_col).alias("id_a"), *[F.col(c).alias(f"{c}_a") for c in cols]
     )
@@ -180,7 +169,6 @@ def verify_pairs(
     cfg: DedupConfig,
     id_col: str = "doc_id",
     prefilter_broadcast: bool = False,
-    defer_containment: bool = False,
     release: list | None = None,
 ) -> DataFrame:
     """candidate pairs -> verified pairs with evidence columns.
@@ -192,33 +180,30 @@ def verify_pairs(
     (FIXTURES.md containment pairs), mirroring how the reference's local-
     feature stage rescued crops/edits that global cosine rejected.
 
-    ``prefilter_broadcast``: see join_signatures — pass True whenever the
-    pair set is small enough to broadcast (the pipeline's byte guard
-    decides); the corpus then never shuffles.
+    ``prefilter_broadcast``: pass True whenever the pair set is small enough
+    to broadcast (the caller's byte guard decides).  Verification then runs
+    in two passes (``_verify_deferred``): signatures are melt-assembled
+    first, so the corpus never shuffles and text never rides the wide
+    shuffle, and only the pairs failing the signature tests get a text
+    assembly for the containment check.  ``verified`` is identical to the
+    two-join plan; ``containment`` is then "containment where it could
+    matter" (False for sim-passing pairs, whose containment was never
+    evaluated).  Without the prefilter the two-join plan of
+    ``join_signatures`` carries signatures and text together and fills
+    ``containment`` on every pair.
 
-    ``defer_containment`` (pipeline fast path; requires prefilter_broadcast):
-    containment is a RESCUE term — it can only flip the verdict of pairs
-    that FAIL the signature tests.  With defer on, the first pass
-    assembles only signatures (text never rides the wide shuffle), and only
-    the failing residue (a fraction of the pairs) gets a second, text-only
-    assembly.  The ``verified`` flag is bit-identical to the full form;
-    the ``containment`` column is then "containment where it could matter"
-    (False for sim-passing pairs, whose containment was never evaluated) —
-    callers needing the audit column on every pair use defer off.
-
-    ``release``: the deferred path persists an intermediate frame the result
+    ``release``: the two-pass plan persists an intermediate frame the result
     depends on; pass a list to receive it and ``unpersist`` once the result
     is materialized/checkpointed.  Without it the cache is left to Spark's
     LRU — fine for one-shot jobs, but a long-lived driver calling this per
     micro-batch would accumulate one dead cached frame per call.
     """
-    if defer_containment and prefilter_broadcast:
+    if prefilter_broadcast:
         return _verify_deferred(pairs, sig_df, cfg, id_col, release=release)
     # one join per side carrying signatures AND text together — half the
     # shuffles of separate signature/text joins
     joined = join_signatures(
-        pairs, sig_df, id_col, cols=("minhash_bin", "simhash", "text"),
-        prefilter_broadcast=prefilter_broadcast,
+        pairs, sig_df, id_col, cols=("minhash_bin", "simhash", "text")
     )
     out = joined.select("id_a", "id_b", *_evidence(), _contains().alias("containment"))
     return out.withColumn("verified", _sim_ok(cfg) | F.col("containment"))

@@ -1,7 +1,7 @@
 """The end-to-end near-duplicate pipeline: the webtext re-expression of the
 reference's 5-stage plan (``/root/reference/modules/memory_efficient_deduplication.py:41-186``).
 
-    Job 1  signatures   — extract_text + MinHash/SimHash/quality  (stage 1)
+    Job 1  signatures   — text extraction + MinHash/SimHash/quality (stage 1)
     Job 2  candidates   — LSH band self-join with star-capped hot buckets (stage 1 grouping)
     Job 3  verification — Jaccard-est + Hamming + containment     (stages 2-4)
     Job 4  clustering   — iterative connected components          (union-find)
@@ -274,15 +274,13 @@ def run_dedupe(
                 signatures,
                 cfg,
                 id_col="sid",
-                # when pairs are broadcastable, the single-scan melt assembly
-                # runs and the corpus-wide table never shuffles (see
-                # verify.py); defer_containment keeps text out of the wide
-                # shuffle entirely — only the sim-failing residue pays a text
-                # assembly.  The checkpointed `containment` column is
-                # therefore the rescue verdict (False for sim-passing pairs);
-                # `verified` is identical to the full form.
+                # when pairs are broadcastable, verify runs its two-pass plan:
+                # the corpus-wide table never shuffles and only the
+                # sim-failing residue pays a text assembly (see verify.py).
+                # The checkpointed `containment` column is therefore the
+                # rescue verdict (False for sim-passing pairs); `verified` is
+                # identical to the two-join plan.
                 prefilter_broadcast=small_pairs,
-                defer_containment=small_pairs,
                 release=_vp_release,
             ),
         )

@@ -95,24 +95,18 @@ def load(
     overhead doesn't dominate tiny inputs (32 was measured slower than
     8-16 at sf0.1 for exactly that reason).  Decision memoized per
     (session, table) — immutable testdata, one planning probe per table.
-    ``SPARK_GRAFT_SPREAD`` forces a specific partition count (experiments).
     ``spread`` overrides the kernel-table classification for a call site
     (True = treat as kernel table, False = relational thresholds).
     """
-    import os
-
     path = f"{sf_dir}/{table}.parquet"
     df = spark.read.parquet(path)
     kernel_table = table in _SPREAD_TABLES if spread is None else spread
     par = spark.sparkContext.defaultParallelism
-    forced = int(os.environ.get("SPARK_GRAFT_SPREAD", "0"))
 
     def _probe() -> int:
         """Target partition count, 0 = leave the scan alone."""
         if df.rdd.getNumPartitions() >= par:
             return 0  # real input: scan already parallel, pay nothing
-        if forced and kernel_table:
-            return forced
         # footer row counts are a driver-side metadata read — no Spark job
         try:
             rows = _table_rows(spark, sf_dir, table)

@@ -71,7 +71,7 @@ def render_html(title: str, body: str) -> bytes:
 
 def expected_text(title: str, body: str) -> str:
     """The oracle extraction: title + newline + paragraph text (must equal
-    functions.text.extract_text byte-for-byte)."""
+    functions.text._extract_text_pd byte-for-byte)."""
     return f"{title}\n{body}"
 
 

@@ -5,10 +5,12 @@ the resume-from-progress-file loop (``/root/reference/pipeline.py:162-173``)
 and bounded producer/consumer queues (pipelining, not streaming).  These are
 the idiomatic Spark extensions for the same intents:
 
-* ``stream_signatures`` — incremental ingestion: new page files appearing in a
-  directory are signed and appended to the signatures table via
-  ``foreachBatch`` running the SAME batch stage function (one code path for
-  batch and streaming — the lambda-architecture killer).
+* ``stream_neardup`` — incremental near-dup: new page files appearing in a
+  directory are signed, banded, verified and clustered via ``foreachBatch``
+  running the SAME batch stage functions (one code path for batch and
+  streaming — the lambda-architecture killer).
+* ``stream_dedup`` / ``sessionize_stream`` — stateful streaming operators
+  (exact dedup, gap sessionization) whose state lives in the checkpoint.
 * ``windowed_event_counts`` — event-time windowed aggregation with a
   watermark for late data (the canonical streaming operator set), exposed for
   the ``events`` testdata table.
@@ -20,68 +22,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from image_deduplication_3m_images_spark.config import DedupConfig
-from image_deduplication_3m_images_spark.plans.dedupe import build_signatures
-
-
-def stream_signatures(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    cfg: DedupConfig | None = None,
-    trigger_available_now: bool = True,
-):
-    """Continuously sign new page files landing in ``input_dir``.
-
-    Source offsets live in the streaming checkpoint, but ``foreachBatch``
-    itself is AT-LEAST-ONCE: a crash after the sink write commits but
-    before the epoch is recorded replays the batch.  The sink is therefore
-    made IDEMPOTENT — each batch dynamically overwrites its OWN
-    ``batch_id=N`` partition, so a replay rewrites the same files instead
-    of appending a second copy.  (A plain ``mode("append")`` here would
-    silently double-count a replayed batch: readers of this raw parquet
-    output count rows.)  Returns the started StreamingQuery; callers
-    ``awaitTermination()``.
-    """
-    cfg = cfg or DedupConfig()
-    pages_schema = (
-        "url string, warc_ts timestamp, html binary, text string, lang string"
-    )
-    stream = spark.readStream.schema(pages_schema).parquet(input_dir)
-
-    def _sign_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import glob
-        import os
-
-        # migration guard: an output dir written by the OLD flat-append sink
-        # holds root-level part files; Spark cannot mix flat and partitioned
-        # layouts under one root ("Conflicting directory structures").  Fail
-        # with instructions instead of letting the reader throw that.
-        if glob.glob(os.path.join(output_dir, "*.parquet")):
-            raise RuntimeError(
-                f"{output_dir} contains flat (pre-idempotent-sink) signature "
-                "files; the sink now writes batch_id=N partitions and the two "
-                "layouts cannot share a directory — move the old files into a "
-                "batch_id=<old> subdir or point the stream at a fresh output "
-                "dir"
-            )
-        (
-            build_signatures(batch_df, cfg)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(output_dir)
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(_sign_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_dedup(
@@ -265,8 +205,8 @@ def ingest_neardup_batch(
        (exploded on read); the new side is tiny, so it broadcasts and the
        corpus band keys explode map-side (no corpus shuffle).  Every emitted
        pair touches >= 1 new doc, so no pair is re-verified across batches,
-    3. verify with the same evidence exprs (signatures semi-filtered by the
-       broadcast pair set when the byte guard allows),
+    3. verify with the same ``verify_pairs`` as the batch pipeline (its
+       two-pass plan when the byte guard lets the pair set broadcast),
     4. append new signatures/edges, then maintain clusters
        INCREMENTALLY: contract new edges onto the stored cluster labels,
        run CC on the contracted (batch-sized) graph only, and append the
@@ -399,20 +339,28 @@ def ingest_neardup_batch(
     ).collect()[0]
     est_bytes = (stats["n"] or 0) * ((stats["avg_id_bytes"] or 0.0) + 16)
     small_pairs = broadcast_fits(spark, est_bytes)
-    verified = verify_pairs(
-        F.broadcast(pairs) if small_pairs else pairs,
-        sig_all,
-        cfg,
-        id_col=ID,
-        prefilter_broadcast=small_pairs,
-    )
-    new_edges = (
-        verified.where(F.col("verified"))
-        .select("id_a", "id_b")
-        # consumed by the edge append AND the cluster contraction below;
-        # batch-sized
-        .localCheckpoint(eager=True)
-    )
+    vp_release: list = []
+    try:
+        verified = verify_pairs(
+            F.broadcast(pairs) if small_pairs else pairs,
+            sig_all,
+            cfg,
+            id_col=ID,
+            prefilter_broadcast=small_pairs,
+            release=vp_release,
+        )
+        new_edges = (
+            verified.where(F.col("verified"))
+            .select("id_a", "id_b")
+            # consumed by the edge append AND the cluster contraction below;
+            # batch-sized
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        # new_edges is checkpointed (or verify failed): verify's pass-A
+        # cache is dead weight — one leaked frame per micro-batch otherwise
+        for _df in vp_release:
+            _df.unpersist(blocking=False)
 
     cat.append(sig_new, "signatures")
     cat.append(new_edges.withColumn("batch_id", F.lit(batch_id)), "edges")
@@ -432,56 +380,51 @@ def ingest_neardup_batch(
     # shuffled and never rewritten.
     maybe_bcast = F.broadcast if small_pairs else (lambda df: df)
     new_ids = sig_new.select(F.col(ID).alias("id"))
-    has_clusters = cat.exists("clusters") or cat.exists("clusters_delta")
-    if has_clusters:
+    if cat.exists("clusters") or cat.exists("clusters_delta"):
         current = read_clusters(cat, id_col=ID).withColumnRenamed(ID, "id")
-        nodes = (
-            new_edges.select(F.col("id_a").alias("id"))
-            .unionByName(new_edges.select(F.col("id_b").alias("id")))
-            .dropDuplicates(["id"])
-        )
-        known = current.join(maybe_bcast(nodes), "id")  # map-side corpus scan
-        lmap = (
-            nodes.join(known.select("id", "cluster_id"), "id", "left")
-            .select("id", F.coalesce("cluster_id", F.col("id")).alias("lab"))
-            .localCheckpoint(eager=True)  # batch-sized, consumed 3x
-        )
-        contracted = (
-            new_edges.join(
-                maybe_bcast(lmap.select(F.col("id").alias("id_a"),
-                                        F.col("lab").alias("lab_a"))), "id_a")
-            .join(
-                maybe_bcast(lmap.select(F.col("id").alias("id_b"),
-                                        F.col("lab").alias("lab_b"))), "id_b")
-            .where(F.col("lab_a") != F.col("lab_b"))
-            .select(F.col("lab_a").alias("id_a"), F.col("lab_b").alias("id_b"))
-        )
-        assignments = connected_components(contracted)
-        changed = (
-            assignments.where(F.col("id") != F.col("cluster_id"))
-            .select(F.col("id").alias("old_label"),
-                    F.col("cluster_id").alias("new_label"))
-            .localCheckpoint(eager=True)  # batch-sized, consumed 2x
-        )
-        # members of clusters whose label changed — one more map-side scan
-        # of the stored clusters; output is proportional to touched clusters
-        upd_existing = current.join(
-            maybe_bcast(changed), current["cluster_id"] == F.col("old_label")
-        ).select("id", F.col("new_label").alias("cluster_id"))
-        new_rows = (
-            new_ids.join(maybe_bcast(lmap), "id", "left")
-            .select("id", F.coalesce("lab", F.col("id")).alias("lab0"))
-            .join(maybe_bcast(changed), F.col("lab0") == F.col("old_label"), "left")
-            .select("id", F.coalesce("new_label", F.col("lab0")).alias("cluster_id"))
-        )
-        delta = upd_existing.unionByName(new_rows)
     else:
-        # first batch: everything is new — CC over the batch edges, docs
-        # without an edge become their own singleton cluster
-        assignments = connected_components(new_edges)
-        delta = new_ids.join(assignments, "id", "left").select(
-            "id", F.coalesce("cluster_id", F.col("id")).alias("cluster_id")
-        )
+        # first batch: no stored labels, every id labels itself
+        current = spark.createDataFrame([], "id string, cluster_id string")
+    nodes = (
+        new_edges.select(F.col("id_a").alias("id"))
+        .unionByName(new_edges.select(F.col("id_b").alias("id")))
+        .dropDuplicates(["id"])
+    )
+    known = current.join(maybe_bcast(nodes), "id")  # map-side corpus scan
+    lmap = (
+        nodes.join(known.select("id", "cluster_id"), "id", "left")
+        .select("id", F.coalesce("cluster_id", F.col("id")).alias("lab"))
+        .localCheckpoint(eager=True)  # batch-sized, consumed 3x
+    )
+    contracted = (
+        new_edges.join(
+            maybe_bcast(lmap.select(F.col("id").alias("id_a"),
+                                    F.col("lab").alias("lab_a"))), "id_a")
+        .join(
+            maybe_bcast(lmap.select(F.col("id").alias("id_b"),
+                                    F.col("lab").alias("lab_b"))), "id_b")
+        .where(F.col("lab_a") != F.col("lab_b"))
+        .select(F.col("lab_a").alias("id_a"), F.col("lab_b").alias("id_b"))
+    )
+    assignments = connected_components(contracted)
+    changed = (
+        assignments.where(F.col("id") != F.col("cluster_id"))
+        .select(F.col("id").alias("old_label"),
+                F.col("cluster_id").alias("new_label"))
+        .localCheckpoint(eager=True)  # batch-sized, consumed 2x
+    )
+    # members of clusters whose label changed — one more map-side scan
+    # of the stored clusters; output is proportional to touched clusters
+    upd_existing = current.join(
+        maybe_bcast(changed), current["cluster_id"] == F.col("old_label")
+    ).select("id", F.col("new_label").alias("cluster_id"))
+    new_rows = (
+        new_ids.join(maybe_bcast(lmap), "id", "left")
+        .select("id", F.coalesce("lab", F.col("id")).alias("lab0"))
+        .join(maybe_bcast(changed), F.col("lab0") == F.col("old_label"), "left")
+        .select("id", F.coalesce("new_label", F.col("lab0")).alias("cluster_id"))
+    )
+    delta = upd_existing.unionByName(new_rows)
     cat.append(
         delta.select(F.col("id").alias(ID), "cluster_id")
         .withColumn("batch_id", F.lit(batch_id)),

@@ -49,7 +49,7 @@ def report(spark, pages, tmp_path_factory):
 
 
 def test_extraction_byte_identical(spark, pages):
-    """sha256(extract_text(html)) == sha256(oracle text) for every url."""
+    """sha256(extracted text) == sha256(oracle text) for every url."""
     sig = build_signatures(pages, CFG)
     joined = sig.select("url", F.col("text").alias("extracted")).join(
         pages.select("url", "text"), "url"

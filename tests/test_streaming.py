@@ -1,6 +1,7 @@
-"""Structured Streaming tests: incremental signature ingestion resumes
-exactly-once across restarts (reference analog: progress-file resume,
-/root/reference/pipeline.py:162-173) and windowed event-time aggregation.
+"""Structured Streaming tests: incremental near-dup ingestion and the
+stateful stream operators resume exactly-once across restarts (reference
+analog: progress-file resume, /root/reference/pipeline.py:162-173), plus
+windowed event-time aggregation.
 """
 
 from __future__ import annotations
@@ -16,56 +17,8 @@ from image_deduplication_3m_images_spark.sources.pages_fixture import (
     pages_dataframe,
 )
 from image_deduplication_3m_images_spark.streaming.incremental import (
-    stream_signatures,
     windowed_event_counts,
 )
-
-
-def test_stream_signatures_incremental(spark, tmp_path):
-    indir = str(tmp_path / "in")
-    outdir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(indir)
-
-    fx = generate_pages(n_rows=120, seed=11)
-    n_total = fx.n_rows  # fixture has a planted-structure floor (may exceed 120)
-    pages = pages_dataframe(spark, fx)
-    first, second = pages.where("url < 'https://site0025'"), pages.where(
-        "url >= 'https://site0025'"
-    )
-    n1, n2 = first.count(), second.count()
-    assert n1 > 0 and n2 > 0 and n1 + n2 == n_total
-
-    first.write.mode("append").parquet(indir)
-    q = stream_signatures(spark, indir, outdir, ckpt)
-    q.awaitTermination(120)
-    got1 = spark.read.parquet(outdir)
-    assert got1.count() == n1
-
-    # restart with more files: only NEW files are processed (offset checkpoint)
-    second.write.mode("append").parquet(indir)
-    q2 = stream_signatures(spark, indir, outdir, ckpt)
-    q2.awaitTermination(120)
-    got2 = spark.read.parquet(outdir)
-    assert got2.count() == n_total
-    assert got2.select("url").distinct().count() == n_total
-    # signatures identical to the batch stage for the same rows: the stream
-    # runs build_signatures verbatim, so it emits the packed signature schema
-    # (minhash_bin + JVM-derived band_keys) plus the batch id.
-    assert set(got2.columns) >= {
-        "url", "text", "text_sha256", "minhash_bin", "band_keys",
-        "simhash", "quality", "batch_id",
-    }
-    # byte-level parity with the batch stage for an overlapping row sample
-    from image_deduplication_3m_images_spark.config import DedupConfig
-    from image_deduplication_3m_images_spark.plans.dedupe import build_signatures
-
-    batch = build_signatures(pages, DedupConfig()).select(
-        "url", "minhash_bin", "simhash"
-    )
-    stream_sample = got2.select("url", "minhash_bin", "simhash")
-    assert stream_sample.exceptAll(batch).count() == 0
-    assert batch.exceptAll(stream_sample).count() == 0
 
 
 def test_windowed_event_counts_static_equivalence(spark):
