@@ -18,7 +18,7 @@ independent 25-30 s report-stage cost when every iteration paid an eager
 checkpoint job PLUS a separate convergence-probe job): each iteration now
 runs exactly ONE job — a full-scan max-aggregate convergence probe whose
 side effect materializes the iteration's persisted labels.  Lineage is
-truncated with a checkpoint only every ``truncate_every`` iterations
+truncated with a checkpoint only every ``_TRUNCATE_EVERY`` iterations
 (plan-depth bound), and once more for the returned frame; pass
 ``checkpoint_dir`` for RELIABLE (executor-loss-tolerant) checkpoints on a
 real cluster, default localCheckpoint for local/dev speed.  Between
@@ -31,14 +31,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# iteration bound of the distributed loop (pointer jumping converges in
+# O(log diameter) rounds, so real dedup graphs stop far below it)
+_MAX_ITERATIONS = 25
+# cluster mode: lineage-truncating checkpoint every this many iterations
+_TRUNCATE_EVERY = 5
+
 
 def connected_components(
     edges: DataFrame,
-    max_iterations: int = 25,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
     checkpoint_dir: str | None = None,
-    truncate_every: int = 5,
     max_local_edges: int = 2_000_000,
 ) -> DataFrame:
     """edges (id_a, id_b) -> assignments (id, cluster_id).
@@ -80,11 +82,11 @@ def connected_components(
     # cost is trivial next to the iterative loop it routes to.
     edges_c = edges.persist()
     probe = (
-        edges_c.select(id_a, id_b).limit(max_local_edges + 1).toPandas()
+        edges_c.select("id_a", "id_b").limit(max_local_edges + 1).toPandas()
     )
     if len(probe) <= max_local_edges:
         try:
-            return _cc_local(probe, edges_c.schema, id_a, id_b, edges.sparkSession)
+            return _cc_local(probe, edges_c.schema, edges.sparkSession)
         finally:
             edges_c.unpersist(blocking=False)
     edges = edges_c
@@ -96,7 +98,7 @@ def connected_components(
 
         # cluster mode: keep lineage between the periodic reliable
         # checkpoints (an executor loss recomputes from the last one);
-        # per-iteration lineage cost is bounded by truncate_every
+        # per-iteration lineage cost is bounded by _TRUNCATE_EVERY
         iter_truncate = False
     else:
 
@@ -141,24 +143,14 @@ def connected_components(
         str(max(session.sparkContext.defaultParallelism, 4)),
     )
     try:
-        return _cc_loop(
-            edges, max_iterations, id_a, id_b, ckpt, truncate_every, iter_truncate
-        )
+        return _cc_loop(edges, ckpt, iter_truncate)
     finally:
         session.conf.set("spark.sql.adaptive.enabled", aqe_before)
         session.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast_before)
         session.conf.set("spark.sql.shuffle.partitions", shuf_before)
 
 
-def _cc_loop(
-    edges: DataFrame,
-    max_iterations: int,
-    id_a: str,
-    id_b: str,
-    ckpt,
-    truncate_every: int,
-    iter_truncate: bool = False,
-) -> DataFrame:
+def _cc_loop(edges: DataFrame, ckpt, iter_truncate: bool) -> DataFrame:
     # sym and the initial labels are persisted LAZILY: the first iteration's
     # single probe job materializes both as a side effect — no setup actions.
     # In local mode sym's LOGICAL plan is also truncated (lazy
@@ -168,9 +160,9 @@ def _cc_loop(
     # tree once per iteration — measured as a near-constant ~2 s/iteration
     # planning tax on a 1k-node graph.
     sym = edges.select(
-        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
+        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).unionByName(
-        edges.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
+        edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
     )
     sym = sym.localCheckpoint(eager=False) if iter_truncate else sym.persist()
 
@@ -186,7 +178,7 @@ def _cc_loop(
 
     to_unpersist = [edges, sym, labels]
     since_truncate = 0
-    for _ in range(max_iterations):
+    for _ in range(_MAX_ITERATIONS):
         # hash-min + pointer jumping in ONE plan per iteration:
         #   label(v) <- min(label(v), min_{u in N(v)} label(u), label(label(v)))
         # The jump term (label-of-label) gives O(log diameter) convergence on
@@ -232,7 +224,7 @@ def _cc_loop(
         if not shrunk:
             break
         since_truncate += 1
-        if not iter_truncate and since_truncate >= truncate_every:
+        if not iter_truncate and since_truncate >= _TRUNCATE_EVERY:
             # bound plan depth: without an occasional lineage break the
             # logical plan nests one join-tree per iteration and Catalyst
             # analysis cost grows without bound on pathological diameters
@@ -248,7 +240,7 @@ def _cc_loop(
     return final
 
 
-def _cc_local(pdf, schema, id_a: str, id_b: str, spark) -> DataFrame:
+def _cc_local(pdf, schema, spark) -> DataFrame:
     """Driver-side finish for small graphs: the caller hands over the
     complete (narrow, two-column) edge list as a pandas frame — fetched
     via Arrow (toPandas), not collect(): at the 2M-edge guard limit
@@ -260,7 +252,7 @@ def _cc_local(pdf, schema, id_a: str, id_b: str, spark) -> DataFrame:
     loop's contract); collection size is pre-guarded by the caller."""
     from pyspark.sql.types import StructField, StructType
 
-    a_type = dict(zip(schema.names, schema.fields))[id_a].dataType
+    a_type = schema["id_a"].dataType
     parent: dict = {}
 
     def find(x):

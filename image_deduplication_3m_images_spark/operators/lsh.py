@@ -154,24 +154,20 @@ def candidate_pairs(
 # largest bucket the fast path is allowed to absorb undetected: C(4096, 2)
 # ~ 8.4M pair structs in one task (~130 MB) — bounded; see hot_bucket_probe
 _PROBE_MISS_CAP = 4096
-# below this row count the probe is EXACT (fraction 1.0) — callers use it
-# to decide whether a pre-collapsed reps_df will actually be consumed
+# at or below this row count the probe is exact (fraction 1.0)
 PROBE_TARGET_SAMPLE = 50_000
 
 
 def hot_bucket_probe(
     narrow_sig: DataFrame,
     cfg: DedupConfig,
-    id_col: str = "sid",
-    sha_col: str = "text_sha256",
     n_rows: int | None = None,
     target_sample: int = PROBE_TARGET_SAMPLE,
-    seed: int = 42,
-    reps_df: DataFrame | None = None,
 ) -> dict:
     """Sampled skew probe for the candidate-pair plan choice.
 
-    The exact bucket profile costs a full explode + corpus-wide groupBy —
+    ``narrow_sig`` carries ``sid``, ``text_sha256`` and ``band_keys``.  The
+    exact bucket profile costs a full explode + corpus-wide groupBy —
     a duplicate of the candidate stage's heaviest shuffle, run purely to
     decide whether the skew tiers are needed.  This probe samples ~50k docs
     (exact below that), collapses exact-duplicate texts (matching rep_bands
@@ -196,14 +192,8 @@ def hot_bucket_probe(
     general tiers on a clean corpus — correct, slightly slower.  The probe result is logged to
     lineage, so tier activation is never silent.
 
-    ``reps_df``: optional pre-collapsed representative frame (id + band
-    keys, one row per distinct text).  When the probe is EXACT (fraction
-    >= 1, i.e. small inputs) the caller's rep frame is the identical
-    groupBy and is used instead; ignored when sampling (the sampled path
-    must collapse after sampling).  NOTE: the probe's collect is its own
-    action, so the sha shuffle is only actually shared with the caller's
-    later consumption if the caller PERSISTS reps_df across both actions
-    (the pipeline does, gated on ``PROBE_TARGET_SAMPLE``).
+    The probe always collapses its own narrow input (after sampling, which
+    keeps the fraction math honest); it shares no frame with the caller.
     """
     # The miss condition is sample_max <= star_cap * fraction (not zero
     # sampled members), so the floor must keep a miss-cap-sized bucket's
@@ -217,23 +207,13 @@ def hot_bucket_probe(
         if not n_rows or n_rows <= target_sample
         else max(target_sample / n_rows, floor)
     )
-    if fraction >= 1.0 and reps_df is not None:
-        # exact probe + caller already built the collapsed rep frame (the
-        # pipeline's rep_bands is this very groupBy): reuse it instead of
-        # re-running the sha shuffle.  Only legal un-sampled — a sample
-        # must collapse AFTER sampling to keep the fraction math honest.
-        reps = reps_df
-    else:
-        s = (
-            narrow_sig
-            if fraction >= 1.0
-            else narrow_sig.sample(False, fraction, seed)
-        )
-        reps = s.groupBy(sha_col).agg(
-            F.min(id_col).alias(id_col), F.first("band_keys").alias("band_keys")
-        )
+    # fixed sampling seed: the verdict is reproducible run to run
+    s = narrow_sig if fraction >= 1.0 else narrow_sig.sample(False, fraction, 42)
+    reps = s.groupBy("text_sha256").agg(
+        F.min("sid").alias("sid"), F.first("band_keys").alias("band_keys")
+    )
     row = (
-        explode_bands(reps, id_col)
+        explode_bands(reps, "sid")
         .groupBy("band_id", "band_key")
         .agg(F.count(F.lit(1)).alias("n"))
         .agg(F.max("n").alias("m"))

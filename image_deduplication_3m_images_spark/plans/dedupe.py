@@ -206,42 +206,21 @@ def run_dedupe(
         # (reference's bucket skip was, deduplication.py:314-317).  Sampled
         # because the exact profile duplicated the candidate stage's
         # heaviest shuffle just to pick the plan (see hot_bucket_probe).
-        #
-        # When the probe is EXACT (small inputs), it consumes rep_bands
-        # itself — and since the probe's collect and the candidate stage's
-        # write are SEPARATE actions, the sha-collapse shuffle would run in
-        # both without a persist (shuffle outputs are not shared across
-        # actions on an uncached frame).  Persist rep_bands across the two
-        # actions only in that regime: the frame is then ≤ target_sample
-        # rows of (sid, band_keys) ≈ ≤7 MB — released right after the
-        # stage commits.  At scale the probe samples raw signatures and
-        # rep_bands stays an unpersisted one-consumer frame.
-        from image_deduplication_3m_images_spark.operators.lsh import (
-            PROBE_TARGET_SAMPLE,
+        # The probe collapses its own narrow input, so rep_bands stays an
+        # unpersisted one-consumer frame.
+        bucket_profile = hot_bucket_probe(
+            signatures.select("sid", "text_sha256", "band_keys"),
+            cfg,
+            n_rows=cat.row_count("signatures"),
         )
-
-        n_sig_rows = cat.row_count("signatures")
-        probe_exact = n_sig_rows <= PROBE_TARGET_SAMPLE
-        if probe_exact:
-            rep_bands = rep_bands.persist()
-        try:
-            bucket_profile = hot_bucket_probe(
-                signatures.select("sid", "text_sha256", "band_keys"),
-                cfg,
-                n_rows=n_sig_rows,
-                reps_df=rep_bands if probe_exact else None,
-            )
-            hint = None if bucket_profile["hot_detected"] else 0
-            cands = stage(
-                "candidate_pairs",
-                lambda: candidate_pairs(
-                    rep_bands, cfg, id_col="sid", max_bucket_hint=hint
-                ),
-                extra=bucket_profile,
-            )
-        finally:
-            if probe_exact:
-                rep_bands.unpersist(blocking=False)
+        hint = None if bucket_profile["hot_detected"] else 0
+        cands = stage(
+            "candidate_pairs",
+            lambda: candidate_pairs(
+                rep_bands, cfg, id_col="sid", max_bucket_hint=hint
+            ),
+            extra=bucket_profile,
+        )
 
     # Verification: the pairs table is usually tiny relative to the corpus —
     # broadcast it so the signatures side is filtered MAP-SIDE (no wide

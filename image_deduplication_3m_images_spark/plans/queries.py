@@ -152,7 +152,7 @@ def _docs(spark, sf_dir) -> DataFrame:
 def _table_rows(spark, sf_dir: str, table: str) -> int:
     """Committed row count from parquet FOOTERS, driver-side — no Spark
     job (same trick as the checkpoint catalog's ``row_count``).  Used as
-    the size hint for statistics-driven plan choices (bloom sizing,
+    the size hint for statistics-driven plan choices (scan spreading,
     contamination form picking); memoized per (session, table)."""
 
     def _count() -> int:
@@ -1083,27 +1083,20 @@ def q_top_nations(spark, sf_dir):
 
 
 def q_incremental_new_docs(spark, sf_dir):
-    """Cross-snapshot incremental dedup through the Bloom router
-    (``operators/bloom.py``): SEEN = content fingerprints already in the
-    corpus (docs with ``doc_id % 7 != 0`` model the prior snapshot), NEW =
-    today's crawl batch (``doc_id % 3 == 0``); emit the new docs whose
-    content was never seen.  The Spark plan exercises the full operator —
-    bloom build over seen, map-side probe of new, exact anti-join for the
-    might-contain residue — while the oracle is the plain ANTI JOIN the
-    bloom must be indistinguishable from (false positives may only add
-    shuffle bytes, never change rows)."""
-    from image_deduplication_3m_images_spark.operators.bloom import incremental_new
-
+    """Cross-snapshot incremental dedup: SEEN = content fingerprints already
+    in the corpus (docs with ``doc_id % 7 != 0`` model the prior snapshot),
+    NEW = today's crawl batch (``doc_id % 3 == 0``); emit the new docs whose
+    content was never seen — one exact anti-join on the fingerprint.  No
+    pre-filter sits in front of it: at least 6/7 of NEW is in SEEN by this
+    rule, so a membership sketch could route almost nothing around the join
+    and would only add a sketch build, a broadcast and a Python probe."""
     docs = _docs_full(spark, sf_dir).select(
         "doc_id", sha256_expr(F.col("text")).alias("text_sha256")
     )
     seen = docs.where(F.col("doc_id") % 7 != 0).select("text_sha256")
     new = docs.where(F.col("doc_id") % 3 == 0)
-    # footer row count as the bloom-sizing hint (an upper bound of the
-    # seen side) — skips build_bloom's sizing count scan (the operator's
-    # documented 100 TB contract: callers supply n_seen)
-    n_seen = _table_rows(spark, sf_dir, "documents")
-    return incremental_new(new, seen, "text_sha256", n_seen=n_seen).select(
+    # anti-join is dup-insensitive on its right side — no pre-distinct shuffle
+    return new.join(seen, "text_sha256", "left_anti").select(
         "doc_id", "text_sha256"
     )
 

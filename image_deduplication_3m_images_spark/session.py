@@ -67,13 +67,17 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
         .config("spark.hadoop.parquet.block.size", str(32 * 1024 * 1024))
         # local mode puts all executor threads in the driver JVM: size the heap
-        # for the box (128 GiB here), not for a remote driver — an undersized
-        # heap makes 32 threads GC-thrash and *anti*-scale.  In local-cluster
-        # mode executors are separate JVMs, so the driver stays small and
-        # each executor gets its own heap.
+        # for the box, not for a remote driver — an undersized heap makes
+        # the task threads GC-thrash and *anti*-scale, and a heap above the
+        # box's memory turns memory pressure into an OOM kill instead of a
+        # spill (see local_driver_memory).  In local-cluster mode executors
+        # are separate JVMs, so the driver stays small and each executor
+        # gets its own heap.
         .config(
             "spark.driver.memory",
-            os.environ.get("SPARK_DRIVER_MEMORY", "8g" if multi_jvm else "48g"),
+            os.environ.get(
+                "SPARK_DRIVER_MEMORY", "8g" if multi_jvm else local_driver_memory()
+            ),
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
@@ -114,6 +118,27 @@ def get_spark(
             .config("spark.executorEnv.PYTHONPATH", repo_root)
         )
     return builder.getOrCreate()
+
+
+def local_driver_memory() -> str:
+    """Default heap for a local-master driver: half the usable memory (the
+    rest holds the JVM's off-heap, the Python workers and the OS), capped
+    at 48g, in whole MiB.  Usable memory is the cgroup limit (v2
+    ``memory.max``, else v1 ``memory.limit_in_bytes``) when one is set
+    below physical RAM, else physical RAM; an unset limit reads as ``max``
+    or as a near-2^63 sentinel and falls through to physical RAM."""
+    usable = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in (
+        "/sys/fs/cgroup/memory.max",
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+    ):
+        try:
+            with open(path) as f:
+                usable = min(usable, int(f.read().strip()))
+            break
+        except (OSError, ValueError):
+            continue
+    return f"{min(48 * 1024, usable // 2 // (1 << 20))}m"
 
 
 def executor_count(spark: SparkSession) -> int:

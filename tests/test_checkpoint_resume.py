@@ -209,11 +209,10 @@ def test_drop_removes_crash_leftovers_no_resurrection(spark, tmp_path):
 
 @pytest.mark.parametrize("failing_stage", ["candidate_pairs", "verified_pairs"])
 def test_failed_stage_leaves_no_cached_blocks(spark, tmp_path, monkeypatch, failing_stage):
-    """run_dedupe persists two intermediates: the representative band frame
-    across the skew probe and the candidate stage, and verify's deferred
-    pass-A frame across the verified stage.  A stage that raises must still
-    release them — a long-lived driver retrying failed runs would otherwise
-    accumulate one dead cached frame per attempt."""
+    """run_dedupe persists one intermediate: verify's pass-A frame across
+    the verified stage.  A run whose candidate or verified stage raises must
+    leave no cached block behind — a long-lived driver retrying failed runs
+    would otherwise accumulate one dead cached frame per attempt."""
     import image_deduplication_3m_images_spark.plans.dedupe as dedupe
 
     def persisted_ids():

@@ -123,21 +123,3 @@ def test_hot_bucket_probe_detects_hot_and_clears_clean(spark):
     assert not hot_bucket_probe(
         clean, CFG, n_rows=n_clean, target_sample=n_clean // 10
     )["hot_detected"]
-
-    # reps_df reuse (the pipeline hands its rep_bands frame to the probe):
-    # identical verdict to the internal collapse on the exact path, and
-    # IGNORED on the sampled path (sampling must collapse after sampling)
-    reps = df.groupBy("text_sha256").agg(
-        F.min("sid").alias("sid"), F.first("band_keys").alias("band_keys")
-    ).select("sid", "band_keys")
-    via_reps = hot_bucket_probe(df, CFG, n_rows=n, target_sample=n, reps_df=reps)
-    assert via_reps == exact, (via_reps, exact)
-    # sampling is deterministic (fixed seed), so the sampled probe must be
-    # BIT-IDENTICAL with and without reps_df — this pins that reps_df is
-    # truly ignored on the sampled path, not just that a fraction < 1 was
-    # computed (a regression that consumed reps_df pre-collapse would
-    # change sample_max_bucket and fail here)
-    sampled_reps = hot_bucket_probe(
-        df, CFG, n_rows=n, target_sample=n // 10, reps_df=reps
-    )
-    assert sampled_reps == sampled, (sampled_reps, sampled)

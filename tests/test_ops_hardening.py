@@ -188,3 +188,15 @@ def test_broadcast_fits_guards_object_and_cluster_cost(spark, monkeypatch):
     monkeypatch.setattr(session, "executor_count", lambda _spark: 8)
     assert session.broadcast_fits(spark, 128 * mib - 1)
     assert not session.broadcast_fits(spark, 128 * mib)
+
+
+def test_driver_heap_fits_physical_memory(spark):
+    """A local driver's heap ceiling must fit the box: a heap above physical
+    RAM turns memory pressure into an OOM kill of the whole JVM instead of
+    a spill or a GC pause."""
+    conf = spark.sparkContext.getConf().get("spark.driver.memory")
+    heap_mb = spark.sparkContext._jvm.org.apache.spark.util.Utils.memoryStringToMb(
+        conf
+    )
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1 << 20)
+    assert heap_mb <= phys_mb, (conf, phys_mb)
