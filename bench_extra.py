@@ -21,13 +21,17 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 def main() -> None:
     repeats = int(sys.argv[1]) if len(sys.argv) > 1 else 3
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     from image_deduplication_3m_images_spark.calibration import calibration_const
     from image_deduplication_3m_images_spark.plans import queries as Q
-    from image_deduplication_3m_images_spark.session import get_spark, warm_python_workers
+    from image_deduplication_3m_images_spark.session import (
+        default_cores,
+        get_spark,
+        warm_python_workers,
+    )
 
     names = sys.argv[2:] or list(Q.ALL_QUERIES)
+    cores = default_cores()
     calibration = calibration_const()
     spark = get_spark(cores=cores)
     spark.sparkContext.setLogLevel("ERROR")

@@ -4,14 +4,11 @@ typed metadata, processed by Arrow-batched ``mapInPandas`` kernels.
 This is the direct webtext-engine home for the reference's image operators
 (decode ``/root/reference/modules/feature_extraction.py:41-51``, batch GPU
 feature extraction ``53-106``, frame-ish sampling = their resize-to-600
-pipeline) — except this container ships no image/audio libraries, so the
-actual codec step is STUBBED:
-
-* with a real decoder available (``pillow``/``cv2`` import succeeds), the
-  kernel uses it;
-* otherwise it uses a clearly-marked DETERMINISTIC FAKE (dimensions/features
-  derived from the payload's md5) so the Spark-side plumbing — schema,
-  batch shape, partitioning, UDF signature — is real and testable.
+pipeline) — except the codec step is STUBBED: the only payloads the repo
+writes are the synthetic ones from ``media_from_documents`` (text bytes, not
+images), so the kernel uses a clearly-marked DETERMINISTIC FAKE (dimensions/
+features derived from the payload's md5) and the Spark-side plumbing —
+schema, batch shape, partitioning, UDF signature — is real and testable.
 
 Replace ``_fake_decode`` with a codec call on a real cluster; nothing else
 changes.
@@ -64,20 +61,6 @@ FRAME_SAMPLE_SCHEMA = StructType(
 )
 
 
-def _real_decoder():
-    try:
-        from PIL import Image  # noqa: F401
-
-        return "pillow"
-    except Exception:
-        try:
-            import cv2  # noqa: F401
-
-            return "cv2"
-        except Exception:
-            return None
-
-
 def _fake_decode(payload: bytes) -> tuple[int, int, int]:
     """DETERMINISTIC FAKE decode: (width, height, phash-ish) from md5 bytes.
 
@@ -95,44 +78,19 @@ def image_features(media: DataFrame) -> DataFrame:
     """(media_id, kind, payload, ...) -> per-image features via mapInPandas.
 
     Arrow-batched; payloads never leave the executor; only small typed
-    features come back.  With no codec installed the decode is the
-    deterministic fake above (clearly marked).
+    features come back.  The decode is the deterministic fake above
+    (clearly marked); replace ``_fake_decode`` with a codec call on a real
+    cluster.
     """
-    decoder = _real_decoder()
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if decoder == "pillow":
-            # the probe ran on the DRIVER; fail loudly on driver/executor
-            # package skew instead of an opaque per-task ImportError storm
-            import io
-
-            try:
-                from PIL import Image
-            except ImportError as e:
-                raise RuntimeError(
-                    "driver probed Pillow as the image decoder but this "
-                    "executor cannot import it — ship the package to "
-                    "executors (spark-submit --archives/--py-files) or "
-                    "remove it from the driver env to use the marked "
-                    "deterministic fake decode"
-                ) from e
         for pdf in batches:
             pdf = pdf[pdf["kind"] == "image"]
             if pdf.empty:
                 continue
             rows = []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if decoder == "pillow":
-                    try:
-                        img = Image.open(io.BytesIO(payload))
-                        w, h = img.size
-                        ph = int.from_bytes(
-                            hashlib.md5(img.tobytes()).digest()[:8], "big", signed=True
-                        )
-                    except Exception:
-                        w, h, ph = _fake_decode(bytes(payload))
-                else:
-                    w, h, ph = _fake_decode(bytes(payload))
+                w, h, ph = _fake_decode(bytes(payload))
                 rows.append((int(mid), int(w), int(h), len(payload), int(ph)))
             yield pd.DataFrame(
                 rows, columns=["media_id", "width", "height", "n_bytes", "phash64"]

@@ -214,11 +214,15 @@ def run_dedupe(
             n_rows=cat.row_count("signatures"),
         )
         hint = None if bucket_profile["hot_detected"] else 0
+        # the pipeline reads only the pair ids: projecting away n_bands lets
+        # the optimizer prune its count_distinct and that aggregate's
+        # (id_a, id_b, band_id) exchange.  Readers select id_a/id_b, so
+        # tables written with n_bands still resume.
         cands = stage(
             "candidate_pairs",
             lambda: candidate_pairs(
                 rep_bands, cfg, id_col="sid", max_bucket_hint=hint
-            ),
+            ).select("id_a", "id_b"),
             extra=bucket_profile,
         )
 
@@ -351,16 +355,3 @@ def pipeline_summary(report: DataFrame) -> dict:
     row = group_stats(report.select(ID, "cluster_id")).collect()[0].asDict()
     return row
 
-
-def export_report_csv(report: DataFrame, path: str, single_file: bool = False) -> None:
-    """S8: CSV report sink (reference analog: the duplicates/best-picks CSV
-    writer, ``/root/reference/modules/deduplication.py:1611-1672``).
-
-    Distributed writer by default (one CSV part per partition — the only
-    shape that scales); ``single_file=True`` coalesces to one part for
-    human-consumption reports, which is fine because the report is one row
-    per INPUT DOC at most, and callers asking for a single file want small
-    summaries, not the corpus.
-    """
-    out = report.coalesce(1) if single_file else report
-    out.write.mode("overwrite").option("header", True).csv(path)

@@ -855,10 +855,7 @@ def q_user_sessions(spark, sf_dir):
     """Gap-based sessionization (batch form): per user, events closer than
     30 minutes belong to one session.  One window pass (lag + running sum
     over the same partitioning — a single shuffle on user_id) + one groupBy
-    that reuses the partitioning.  Money-safe: value summed in cents.
-    The streaming twin is streaming.incremental.sessionize_stream
-    (applyInPandasWithState); this batch form is its DuckDB-checkable
-    semantics contract."""
+    that reuses the partitioning.  Money-safe: value summed in cents."""
     gap_us = 30 * 60 * 1_000_000
     events = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -1023,9 +1020,9 @@ def q_frame_samples(spark, sf_dir):
 # --- event-time windowed aggregation (streaming-shaped, batch-verified) ------
 
 def q_event_windows(spark, sf_dir):
-    """Tumbling 10-minute event windows (same plan Structured Streaming runs;
-    see streaming/incremental.py).  total_cents keeps the money sum integer-
-    exact so the oracle comparison has no float-order drift."""
+    """Tumbling 10-minute event windows (the plan Structured Streaming would
+    run on the same frame).  total_cents keeps the money sum integer-exact
+    so the oracle comparison has no float-order drift."""
     events = load(spark, sf_dir, "events")
     return (
         events.groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")

@@ -24,7 +24,7 @@ def get_spark(
     executor JVMs of C cores each (the multi-executor shape the scaling
     bench measures; ``cores`` should then be the TOTAL N*C so shuffle
     partitions and UDF warmup are sized right)."""
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or default_cores()
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{cores}]"
     # 4x the core count: big shuffles get several reduce waves (a single
     # 1-wave layout makes the slowest key a straggler the other cores wait
@@ -120,6 +120,14 @@ def get_spark(
     return builder.getOrCreate()
 
 
+def default_cores() -> int:
+    """Default core count: ``SPARK_GRAFT_CPUS`` when set, else the CPUs this
+    process may run on (what ``nproc`` prints), so an unconfigured session
+    is sized for the box it runs on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
 def local_driver_memory() -> str:
     """Default heap for a local-master driver: half the usable memory (the
     rest holds the JVM's off-heap, the Python workers and the OS), capped
@@ -207,7 +215,7 @@ def warm_python_workers(spark: SparkSession, cores: int | None = None) -> None:
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or default_cores()
     noop = F.pandas_udf(lambda s: s, "long")
     spark.range(cores * 4, numPartitions=cores).select(noop("id")).collect()
 

@@ -1,19 +1,14 @@
-"""Structured Streaming extensions.
+"""Structured Streaming extension: incremental near-dup.
 
 The reference has no true streaming (SURVEY.md §2.7): its nearest analogs are
 the resume-from-progress-file loop (``/root/reference/pipeline.py:162-173``)
-and bounded producer/consumer queues (pipelining, not streaming).  These are
-the idiomatic Spark extensions for the same intents:
-
-* ``stream_neardup`` — incremental near-dup: new page files appearing in a
-  directory are signed, banded, verified and clustered via ``foreachBatch``
-  running the SAME batch stage functions (one code path for batch and
-  streaming — the lambda-architecture killer).
-* ``stream_dedup`` / ``sessionize_stream`` — stateful streaming operators
-  (exact dedup, gap sessionization) whose state lives in the checkpoint.
-* ``windowed_event_counts`` — event-time windowed aggregation with a
-  watermark for late data (the canonical streaming operator set), exposed for
-  the ``events`` testdata table.
+and bounded producer/consumer queues (pipelining, not streaming).  The
+idiomatic Spark extension for the same intent is ``stream_neardup``: new page
+files appearing in a directory are signed, banded, verified and clustered via
+``foreachBatch`` running the SAME batch stage functions (one code path for
+batch and streaming — the lambda-architecture killer).  Its batch body,
+``ingest_neardup_batch``, and the merge-on-read ``read_clusters`` /
+``compact_clusters`` pair are exposed for direct callers.
 """
 
 from __future__ import annotations
@@ -22,157 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from image_deduplication_3m_images_spark.config import DedupConfig
-
-
-def stream_dedup(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    trigger_available_now: bool = True,
-):
-    """Streaming exact dedup: emit each distinct text exactly once across
-    ALL micro-batches and restarts.
-
-    Spark-native statefulness: ``dropDuplicates`` on a streaming frame keeps
-    the seen-key set in the state store, which lives in the streaming
-    checkpoint — so a restart resumes the dedup set instead of re-emitting
-    (the reference's processed-set resume, ``/root/reference/pipeline.py:162-173``,
-    re-expressed as managed streaming state instead of a hand-rolled JSON
-    file).  Key = sha256(text): 64 bytes of state per distinct doc, not the
-    text itself — the state store stays small at corpus scale.
-    """
-    pages_schema = (
-        "url string, warc_ts timestamp, html binary, text string, lang string"
-    )
-    stream = (
-        spark.readStream.schema(pages_schema)
-        .parquet(input_dir)
-        .withColumn("text_sha256", F.sha2(F.col("text").cast("binary"), 256))
-        .dropDuplicates(["text_sha256"])
-    )
-    writer = (
-        stream.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-SESSION_OUT_SCHEMA = (
-    "user_id long, session_start timestamp_ntz, session_end timestamp_ntz,"
-    " n_events int, value_cents long"
-)
-_SESSION_STATE_SCHEMA = "last_us long, start_us long, n_events int, value_cents long"
-
-
-def sessionize_stream(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    gap_minutes: int = 30,
-    trigger_available_now: bool = True,
-):
-    """Custom stateful streaming operator via ``applyInPandasWithState``:
-    gap-based per-user sessionization.  Emits a session row when a user's
-    next event arrives more than ``gap_minutes`` after their previous one;
-    the open session (last_ts, start, counts) lives in the state store, so
-    sessions CLOSE CORRECTLY ACROSS micro-batches and restarts.
-
-    Semantics contract: identical to the batch query
-    ``plans.queries.q_user_sessions`` (window lag + running sum), except the
-    stream only emits CLOSED sessions — each user's final, still-open
-    session stays in state (the test asserts exactly this equivalence).
-    State is 4 scalars per user, independent of event volume.
-
-    Late data: WITHIN a micro-batch events may arrive in any order (sorted
-    here before processing), but an event whose ts is OLDER than the user's
-    state frontier (``last_us``, the newest event already processed in a
-    prior batch) is DROPPED — it may belong to a session that already
-    closed and was emitted, so retroactively applying it would corrupt
-    session boundaries.  This is the same contract a watermark gives a
-    windowed agg: batch-equivalence holds exactly for input that is
-    per-user ordered ACROSS micro-batches (the file-source default when
-    files land in event order).
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    gap_us = gap_minutes * 60 * 1_000_000
-    events_schema = (
-        "event_id long, ts timestamp_ntz, user_id long, event_type string,"
-        " value double, props string"
-    )
-    stream = spark.readStream.schema(events_schema).parquet(input_dir)
-
-    def fn(key, pdfs, state: GroupState):
-        import numpy as np
-        import pandas as pd
-
-        user_id = int(key[0])
-        ev = pd.concat(list(pdfs), ignore_index=True).sort_values(
-            ["ts", "event_id"]
-        )
-        us = ev["ts"].astype("datetime64[us]").astype("int64").to_numpy()
-        # HALF_UP on the same double Spark's round() sees (values positive)
-        cents = np.floor(ev["value"].to_numpy() * 100 + 0.5).astype("int64")
-        if state.exists:
-            last_us, start_us, n, tot = state.get
-        else:
-            last_us = start_us = None
-            n, tot = 0, 0
-        if last_us is not None:
-            # cross-batch late arrivals: older than the state frontier ->
-            # drop (see docstring); np.searchsorted on the sorted array
-            # finds the cut without a python loop
-            cut = int(np.searchsorted(us, last_us, side="left"))
-            if cut:
-                us, cents = us[cut:], cents[cut:]
-        closed = []
-        for u, c in zip(us.tolist(), cents.tolist()):
-            if last_us is not None and u - last_us > gap_us:
-                closed.append((user_id, start_us, last_us, n, tot))
-                start_us, n, tot = u, 0, 0
-            if start_us is None:
-                start_us = u
-            last_us = u
-            n += 1
-            tot += c
-        state.update((last_us, start_us, n, tot))
-        if closed:
-            out = pd.DataFrame(
-                closed,
-                columns=[
-                    "user_id", "session_start", "session_end",
-                    "n_events", "value_cents",
-                ],
-            )
-            out["session_start"] = pd.to_datetime(out["session_start"], unit="us")
-            out["session_end"] = pd.to_datetime(out["session_end"], unit="us")
-            yield out
-
-    sessions = (
-        stream.groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            SESSION_OUT_SCHEMA,
-            _SESSION_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
-    writer = (
-        sessions.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def ingest_neardup_batch(
@@ -512,8 +356,6 @@ def stream_neardup(
     checkpoint_dir: str,
     cfg: DedupConfig | None = None,
     trigger_available_now: bool = True,
-    compact_frac: float = 0.5,
-    compact_min_rows: int = 50_000,
 ):
     """Incremental streaming near-dup: the full LSH -> verify -> CC loop as
     a ``foreachBatch`` stream over the checkpoint catalog (SURVEY §2.7's
@@ -532,10 +374,7 @@ def stream_neardup(
     stream = spark.readStream.schema(pages_schema).parquet(input_dir)
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        ingest_neardup_batch(
-            spark, batch_df, batch_id, cat, cfg,
-            compact_frac=compact_frac, compact_min_rows=compact_min_rows,
-        )
+        ingest_neardup_batch(spark, batch_df, batch_id, cat, cfg)
 
     writer = (
         stream.writeStream.foreachBatch(_ingest)
@@ -546,28 +385,3 @@ def stream_neardup(
         writer = writer.trigger(availableNow=True)
     return writer.start()
 
-
-def windowed_event_counts(
-    events: DataFrame,
-    window: str = "1 minute",
-    watermark: str = "2 minutes",
-) -> DataFrame:
-    """Event-time tumbling-window counts with late-data watermark.
-
-    Works on both a static DataFrame and a stream (same plan); on a stream
-    the watermark bounds state and drops events later than ``watermark``.
-    """
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("total_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )

@@ -19,11 +19,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
+    from image_deduplication_3m_images_spark.session import default_cores
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", help="pages table path (parquet dir)")
     ap.add_argument("--fixture", type=int, default=0, help="synthesize N fixture rows instead")
     ap.add_argument("--warehouse", required=True, help="checkpoint/lineage dir")
-    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+    ap.add_argument("--cores", type=int, default=default_cores(),
                     help="TOTAL cores (threads for local[N]; N*C for local-cluster)")
     ap.add_argument("--master", default=None,
                     help="Spark master override, e.g. local-cluster[8,4,4096]")

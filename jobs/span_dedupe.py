@@ -18,6 +18,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
+    from image_deduplication_3m_images_spark.session import default_cores
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True, help="documents parquet dir")
     ap.add_argument("--output", required=True, help="cleaned parquet dir")
@@ -29,7 +31,7 @@ def main() -> None:
     ap.add_argument("--window", type=int, default=8,
                     help="winnowing window (gram_len = min_len - window + 1)")
     ap.add_argument("--cores", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+                    default=default_cores())
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
     if args.min_len < args.window + 1:

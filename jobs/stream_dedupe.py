@@ -27,6 +27,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
+    from image_deduplication_3m_images_spark.session import default_cores
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True, help="pages parquet dir to watch")
     ap.add_argument("--warehouse", required=True, help="checkpoint catalog dir")
@@ -34,7 +36,7 @@ def main() -> None:
         "--stream-checkpoint",
         help="streaming checkpoint dir (default: <warehouse>/_stream_ckpt)",
     )
-    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cores", type=int, default=default_cores())
     ap.add_argument("--master", default=None)
     ap.add_argument(
         "--follow", action="store_true",

@@ -26,10 +26,6 @@ ALLOWLIST = {
     "jaccard_est": "pure-Python reference implementation the kernels are tested against",
     "_fingerprints_one": "pure-Python reference implementation the kernels are tested against",
     "synthetic_media": "seeded test input for the multimodal operators",
-    "export_report_csv": "documented public operator with no in-repo caller",
-    "stream_dedup": "documented public operator with no in-repo caller",
-    "sessionize_stream": "documented public operator with no in-repo caller",
-    "windowed_event_counts": "documented public operator with no in-repo caller",
 }
 
 

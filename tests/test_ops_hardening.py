@@ -200,3 +200,14 @@ def test_driver_heap_fits_physical_memory(spark):
     )
     phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1 << 20)
     assert heap_mb <= phys_mb, (conf, phys_mb)
+
+
+def test_default_cores_follows_env_then_affinity(monkeypatch):
+    """With no ``SPARK_GRAFT_CPUS`` a session is sized to the CPUs this
+    process may run on (what ``nproc`` prints), not to a fixed constant."""
+    from image_deduplication_3m_images_spark.session import default_cores
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_cores() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cores() == 3

@@ -138,29 +138,3 @@ def test_resume_identical(spark, pages, tmp_path_factory):
     )
     assert snap1 == snap2
 
-
-def test_csv_report_export_roundtrip(spark, report, tmp_path):
-    """S8: the report exports to CSV and reads back value-identical
-    (reference analog: deduplication.py:1611-1672 CSV writer)."""
-    from image_deduplication_3m_images_spark.plans.dedupe import export_report_csv
-
-    path = str(tmp_path / "report_csv")
-    export_report_csv(report, path, single_file=True)
-    back = spark.read.option("header", True).csv(path)
-    assert set(back.columns) == set(report.columns)
-    assert back.count() == report.count()
-    # value-level spot check: per-cluster best counts survive the roundtrip
-    orig = {
-        r["cluster_id"]: r["n"]
-        for r in report.where("is_best").groupBy("cluster_id").agg(
-            F.count(F.lit(1)).alias("n")
-        ).collect()
-    }
-    rt = {
-        r["cluster_id"]: r["n"]
-        for r in back.where("is_best = 'true'").groupBy("cluster_id").agg(
-            F.count(F.lit(1)).alias("n")
-        ).collect()
-    }
-    assert len(rt) == len(orig)
-    assert all(v == 1 for v in rt.values())

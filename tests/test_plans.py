@@ -124,7 +124,7 @@ def test_no_f_customers_is_anti_join(spark):
     assert "o_orderstatus" in plan and "PushedFilters" in plan
 
 
-def test_verify_prefilter_semi_joins_before_equijoin(spark):
+def test_verify_two_pass_reads_signatures_once(spark):
     """With prefilter_broadcast verify runs its two-pass plan, and the
     corpus-sized signatures table is read ONCE with its signature columns:
     pass A melt-assembles (minhash_bin, simhash) against a broadcast of the
@@ -167,6 +167,30 @@ def test_verify_prefilter_semi_joins_before_equijoin(spark):
     finally:
         for df in release:
             df.unpersist(blocking=False)
+
+
+def test_pipeline_candidate_stage_writes_pair_ids_only(spark, tmp_path, monkeypatch):
+    """run_dedupe reads only the pair ids of its candidate stage, so the
+    stage projects ``candidate_pairs``' output to (id_a, id_b): the unread
+    ``n_bands`` count-distinct, and the (id_a, id_b, band_id) exchange that
+    feeds it, are pruned from the plan the stage writes."""
+    from image_deduplication_3m_images_spark.plans.dedupe import run_dedupe
+    from image_deduplication_3m_images_spark.sources.checkpoint import ParquetCatalog
+
+    plans = {}
+    write = ParquetCatalog.write
+
+    def _capture(self, df, table):
+        plans[table] = plan_of(df)
+        return write(self, df, table)
+
+    monkeypatch.setattr(ParquetCatalog, "write", _capture)
+    wh = str(tmp_path / "wh")
+    run_dedupe(spark, pages_dataframe(spark, generate_pages(n_rows=150)), wh)
+    plan = plans["candidate_pairs"]
+    assert "count(distinct" not in plan, plan[:3000]
+    cols = ParquetCatalog(spark, wh).read("candidate_pairs").columns
+    assert cols == ["id_a", "id_b"], cols
 
 
 def test_incremental_new_docs_is_plain_anti_join(spark):

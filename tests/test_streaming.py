@@ -1,7 +1,7 @@
-"""Structured Streaming tests: incremental near-dup ingestion and the
-stateful stream operators resume exactly-once across restarts (reference
-analog: progress-file resume, /root/reference/pipeline.py:162-173), plus
-windowed event-time aggregation.
+"""Structured Streaming tests: incremental near-dup ingestion resumes
+exactly-once across restarts (reference analog: progress-file resume,
+/root/reference/pipeline.py:162-173) and ends with the batch pipeline's
+clusters.
 """
 
 from __future__ import annotations
@@ -9,162 +9,13 @@ from __future__ import annotations
 import os
 
 import pytest
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from image_deduplication_3m_images_spark.sources.pages_fixture import (
     generate_pages,
     pages_dataframe,
 )
-from image_deduplication_3m_images_spark.streaming.incremental import (
-    windowed_event_counts,
-)
 
-
-def test_windowed_event_counts_static_equivalence(spark):
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    agg = windowed_event_counts(events, window="10 minutes", watermark="1 minute")
-    rows = agg.collect()
-    assert len(rows) > 0
-    total = sum(r["n_events"] for r in rows)
-    assert total == events.count()  # static run: no late-drop
-    # deterministic window boundaries
-    for r in rows:
-        assert r["window_start"].minute % 10 == 0
-
-
-def test_stream_dedup_exactly_once_across_restarts(spark, tmp_path):
-    """Stateful streaming dedup: each distinct text emitted once across
-    micro-batches AND restarts (state store in the checkpoint)."""
-    from image_deduplication_3m_images_spark.streaming.incremental import (
-        stream_dedup,
-    )
-
-    indir, outdir, ckpt = (
-        str(tmp_path / "in"),
-        str(tmp_path / "out"),
-        str(tmp_path / "ckpt"),
-    )
-    os.makedirs(indir)
-    fx = generate_pages(n_rows=150, seed=7)
-    pages = pages_dataframe(spark, fx).cache()
-    n_distinct = pages.select("text").distinct().count()
-    assert n_distinct < fx.n_rows  # fixture plants exact duplicates
-
-    pages.write.mode("append").parquet(indir)
-    q = stream_dedup(spark, indir, outdir, ckpt)
-    q.awaitTermination(120)
-    got1 = spark.read.parquet(outdir)
-    assert got1.count() == n_distinct
-    assert got1.select("text_sha256").distinct().count() == n_distinct
-
-    # restart with the SAME rows re-appended as new files: state store must
-    # suppress every one of them (exactly-once across restarts)
-    pages.write.mode("append").parquet(indir)
-    q2 = stream_dedup(spark, indir, outdir, ckpt)
-    q2.awaitTermination(120)
-    got2 = spark.read.parquet(outdir)
-    assert got2.count() == n_distinct
-
-
-def test_sessionize_stream_matches_batch_across_restarts(spark, tmp_path):
-    """applyInPandasWithState sessionization: closed sessions emitted across
-    TWO micro-batch runs (restart in between) must equal the batch
-    sessionization of the full data minus each user's final open session."""
-    from image_deduplication_3m_images_spark.plans.queries import q_user_sessions
-    from image_deduplication_3m_images_spark.streaming.incremental import (
-        sessionize_stream,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    events = spark.read.parquet(f"{sf}/events.parquet")
-    cutoff = events.selectExpr(
-        "percentile(unix_micros(cast(ts as timestamp)), 0.5)"
-    ).collect()[0][0]
-
-    indir, outdir, ckpt = (
-        str(tmp_path / "in"),
-        str(tmp_path / "out"),
-        str(tmp_path / "ckpt"),
-    )
-    os.makedirs(indir)
-    mic = F.unix_micros(F.col("ts").cast("timestamp"))
-    first = events.where(mic <= cutoff)
-    second = events.where(mic > cutoff)
-    assert first.count() > 0 and second.count() > 0
-
-    first.coalesce(1).write.mode("append").parquet(indir)
-    q = sessionize_stream(spark, indir, outdir, ckpt)
-    q.awaitTermination(120)
-    second.coalesce(1).write.mode("append").parquet(indir)
-    q2 = sessionize_stream(spark, indir, outdir, ckpt)
-    q2.awaitTermination(120)
-
-    got = {
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"],
-         r["value_cents"])
-        for r in spark.read.parquet(outdir).collect()
-    }
-    batch = q_user_sessions(spark, sf)
-    w_last = Window.partitionBy("user_id").orderBy(F.col("session_idx").desc())
-    expected = {
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"],
-         r["value_cents"])
-        for r in batch.withColumn("rn", F.row_number().over(w_last))
-        .where("rn > 1")  # drop each user's final (still-open) session
-        .collect()
-    }
-    assert got == expected
-
-def test_sessionize_stream_drops_cross_batch_late_events(spark, tmp_path):
-    """A batch-2 event with ts OLDER than the user's state frontier must be
-    dropped (watermark-style), not silently move the frontier backwards and
-    corrupt session boundaries (ADVICE r2)."""
-    import datetime as dt
-
-    from image_deduplication_3m_images_spark.streaming.incremental import (
-        sessionize_stream,
-    )
-
-    def ev(eid, minute, value):
-        return (
-            eid,
-            dt.datetime(2024, 1, 1, 0, 0) + dt.timedelta(minutes=minute),
-            1,
-            "click",
-            value,
-            "{}",
-        )
-
-    schema = (
-        "event_id long, ts timestamp_ntz, user_id long, event_type string,"
-        " value double, props string"
-    )
-    indir, outdir, ckpt = (
-        str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ckpt")
-    )
-    os.makedirs(indir)
-    # batch 1: frontier ends at minute 5
-    spark.createDataFrame([ev(1, 0, 1.0), ev(2, 5, 2.0)], schema) \
-        .coalesce(1).write.mode("append").parquet(indir)
-    q = sessionize_stream(spark, indir, outdir, ckpt)
-    q.awaitTermination(120)
-    # batch 2: minute 2 is LATE (< frontier 5) -> dropped; minute 60 closes
-    # [0,5]; minute 120 closes [60,60]
-    spark.createDataFrame(
-        [ev(3, 2, 100.0), ev(4, 60, 4.0), ev(5, 120, 8.0)], schema
-    ).coalesce(1).write.mode("append").parquet(indir)
-    q2 = sessionize_stream(spark, indir, outdir, ckpt)
-    q2.awaitTermination(120)
-
-    got = sorted(
-        (r["user_id"], r["session_start"].minute + 60 * r["session_start"].hour,
-         r["session_end"].minute + 60 * r["session_end"].hour,
-         r["n_events"], r["value_cents"])
-        for r in spark.read.parquet(outdir).collect()
-    )
-    # late 100.0-value event appears nowhere; boundaries as if it never came
-    assert got == [(1, 0, 5, 2, 300), (1, 60, 60, 1, 400)]
 
 def test_stream_neardup_merges_later_duplicate_into_existing_cluster(
     spark, tmp_path

@@ -22,15 +22,14 @@ def main() -> None:
     only = set(sys.argv[3:])
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     from image_deduplication_3m_images_spark.plans import queries as Q
-    from image_deduplication_3m_images_spark.session import get_spark
+    from image_deduplication_3m_images_spark.session import default_cores, get_spark
 
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
 
-    spark = get_spark(cores=cores)
+    spark = get_spark(cores=default_cores())
     spark.sparkContext.setLogLevel("ERROR")
 
     for name, fn in Q.ALL_QUERIES.items():
