@@ -30,23 +30,23 @@ _N = 1 << 21  # 2M uint64 = 16 MiB: larger than L2, stable vs cache quirks
 _ITERS = 60
 
 
-def _one_pass(n: int, iters: int) -> float:
+def _one_pass() -> float:
     rng = np.random.RandomState(7)
-    v = rng.randint(0, 2**62, size=n).astype(np.uint64)
+    v = rng.randint(0, 2**62, size=_N).astype(np.uint64)
     a = np.uint64(6364136223846793005)
     b = np.uint64(1442695040888963407)
     sh = np.uint64(33)
     # perf_counter: monotonic — an NTP clock step mid-pass must not corrupt
     # the constant (time.time() is not step-safe)
     t0 = time.perf_counter()
-    for _ in range(iters):
+    for _ in range(_ITERS):
         v = v * a + b
         v ^= v >> sh
     _ = int(v[0])  # force materialization
     return time.perf_counter() - t0
 
 
-def calibration_const(n: int = _N, iters: int = _ITERS, passes: int = 3) -> float:
+def calibration_const(passes: int = 3) -> float:
     """Best-of-``passes`` wall seconds of the fixed mix kernel: min measures
     the window's CPU capability the same way best-of-N walls do."""
-    return round(min(_one_pass(n, iters) for _ in range(passes)), 3)
+    return round(min(_one_pass() for _ in range(passes)), 3)

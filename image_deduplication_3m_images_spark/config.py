@@ -84,6 +84,10 @@ class DedupConfig:
     def __post_init__(self) -> None:
         if self.bands * self.rows_per_band != self.num_perm:
             raise ValueError("bands * rows_per_band must equal num_perm")
+        # the SimHash kernel is 64-bit; the oracle reads this field, so any
+        # other width would split engine from oracle
+        if self.simhash_bits != 64:
+            raise ValueError("simhash_bits must be 64")
 
     @property
     def perm_a(self) -> tuple[int, ...]:

@@ -124,30 +124,9 @@ def sample_frames(media: DataFrame, every_k: int = 10, max_frames: int = 32) -> 
     return media.mapInPandas(kernel, FRAME_SAMPLE_SCHEMA)
 
 
-def media_dedup_candidates(
-    features: DataFrame, radius: int = 3, max_bucket_hint: int | None = None
-) -> DataFrame:
-    """Perceptual-hash near-dup candidates within Hamming ``radius`` — the
-    image analog of the text pipeline's LSH bucket join, via the same
-    pigeonhole chunk blocking the SimHash operator uses (reference analog:
-    LSH over wavelet hashes, /root/reference/modules/deduplication.py:270-283).
-    Returns (id_a, id_b, hamming); radius=0 degrades to exact-phash pairs.
-    ``max_bucket_hint`` forwards the profile statistic that lets clean
-    corpora skip the skew tiers (see operators.dedup.hamming_bucket_stats).
-    """
-    from image_deduplication_3m_images_spark.operators.dedup import (
-        hamming_block_pairs,
-    )
-
-    return hamming_block_pairs(
-        features, "phash64", "media_id", radius=radius,
-        max_bucket_hint=max_bucket_hint,
-    )
-
-
-def media_from_documents(docs: DataFrame, id_col: str = "doc_id",
-                         text_col: str = "text") -> DataFrame:
-    """Deterministic media table derived from a documents table: payload =
+def media_from_documents(docs: DataFrame) -> DataFrame:
+    """Deterministic media table derived from a (doc_id, text) documents
+    table: payload =
     UTF-8 bytes of the text, kind round-robins image/video/audio by id, and
     every ``id % 10 == 9`` row COPIES the payload of ``id - 9`` (same kind
     stratum, since 9 % 3 == 0) so duplicate-payload structure exists at any
@@ -158,18 +137,16 @@ def media_from_documents(docs: DataFrame, id_col: str = "doc_id",
     both DuckDB-expressible, so the multimodal plumbing is gated by the
     same hash-match parity as the text operators (not just pytest).
     """
-    src = F.when(
-        (F.col(id_col) % 10 == 9) & (F.col(id_col) >= 9),
-        F.col(id_col) - 9,
-    ).otherwise(F.col(id_col))
+    doc_id = F.col("doc_id")
+    src = F.when((doc_id % 10 == 9) & (doc_id >= 9), doc_id - 9).otherwise(doc_id)
     base = docs.select(
-        F.col(id_col).cast("long").alias("media_id"),
+        doc_id.cast("long").alias("media_id"),
         src.cast("long").alias("src_id"),
-        F.col(text_col).alias("_own_text"),
+        F.col("text").alias("_own_text"),
     )
     texts = docs.select(
-        F.col(id_col).cast("long").alias("src_id"),
-        F.col(text_col).alias("_payload_text"),
+        doc_id.cast("long").alias("src_id"),
+        F.col("text").alias("_payload_text"),
     )
     kind = F.element_at(
         F.array(F.lit("image"), F.lit("video"), F.lit("audio")),

@@ -13,13 +13,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def pick_best(
-    assignments: DataFrame,
-    quality_df: DataFrame,
-    id_col: str,
-    quality_col: str = "quality",
-) -> DataFrame:
-    """(id, cluster_id) + (id, quality) -> adds quality, cluster_size, is_best.
+def pick_best(assignments: DataFrame, quality_df: DataFrame) -> DataFrame:
+    """(doc_id, cluster_id) + (doc_id, quality) -> adds quality,
+    cluster_size, is_best.
 
     Exactly one ``is_best`` per cluster; ties broken by ascending id —
     deterministic (FIXTURES.md §4 best-pick determinism; reference tie-break
@@ -33,11 +29,11 @@ def pick_best(
     delete a cluster's only ``is_best`` row.
     """
     w = Window.partitionBy("cluster_id").orderBy(
-        F.col(quality_col).desc(), F.col(id_col).asc()
+        F.col("quality").desc(), F.col("doc_id").asc()
     )
     sized = Window.partitionBy("cluster_id")
     return (
-        assignments.join(quality_df.select(id_col, quality_col), id_col, "left")
+        assignments.join(quality_df.select("doc_id", "quality"), "doc_id", "left")
         .withColumn("cluster_size", F.count(F.lit(1)).over(sized))
         .withColumn("is_best", F.row_number().over(w) == 1)
     )
@@ -56,13 +52,11 @@ def group_stats(assignments: DataFrame) -> DataFrame:
 
 
 def group_avg_similarity(
-    assignments: DataFrame,
-    scored_pairs: DataFrame,
-    id_col: str = "doc_id",
-    sim_col: str = "similarity",
+    assignments: DataFrame, scored_pairs: DataFrame
 ) -> DataFrame:
-    """G5: per-cluster average pairwise similarity over scored pairs whose
-    BOTH endpoints are in the cluster (reference analog: the avg_similarity
+    """G5: per-cluster average pairwise ``similarity`` over scored pairs
+    (id_a, id_b, similarity) whose BOTH endpoints are in the cluster
+    (doc_id, cluster_id) (reference analog: the avg_similarity
     group-stat loop, ``/root/reference/modules/deduplication.py:1397-1407``).
 
     One row per cluster that has >= 1 in-cluster scored pair:
@@ -71,10 +65,10 @@ def group_avg_similarity(
     reference's O(|group|^2) python dict probing per group.
     """
     a = assignments.select(
-        F.col(id_col).alias("id_a"), F.col("cluster_id").alias("_ca")
+        F.col("doc_id").alias("id_a"), F.col("cluster_id").alias("_ca")
     )
     b = assignments.select(
-        F.col(id_col).alias("id_b"), F.col("cluster_id").alias("_cb")
+        F.col("doc_id").alias("id_b"), F.col("cluster_id").alias("_cb")
     )
     return (
         scored_pairs.join(a, "id_a")
@@ -83,6 +77,6 @@ def group_avg_similarity(
         .groupBy(F.col("_ca").alias("cluster_id"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_scored_pairs"),
-            F.round(F.avg(sim_col), 6).alias("avg_similarity"),
+            F.round(F.avg("similarity"), 6).alias("avg_similarity"),
         )
     )

@@ -13,7 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from image_deduplication_3m_images_spark.config import DedupConfig
 from image_deduplication_3m_images_spark.functions.text import (
     sha256_expr,
     tokens_expr,
@@ -21,23 +20,23 @@ from image_deduplication_3m_images_spark.functions.text import (
 )
 
 
-def exact_duplicates(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
-    """(id, text) -> (id, text_sha256, cluster_id, cluster_size, is_best).
+def exact_duplicates(df: DataFrame) -> DataFrame:
+    """(doc_id, text) -> (doc_id, text_sha256, cluster_id, cluster_size, is_best).
 
     cluster_id = min id sharing the hash; is_best = that min id (deterministic).
     Single hash-shuffle on the 64-hex sha; at 100 TB this is the cheapest pass
     and removes the bulk of duplicates before any MinHash work.
     """
     hashed = df.select(
-        F.col(id_col), sha256_expr(F.col(text_col)).alias("text_sha256")
+        F.col("doc_id"), sha256_expr(F.col("text")).alias("text_sha256")
     )
     w = Window.partitionBy("text_sha256")
     return hashed.select(
-        id_col,
+        "doc_id",
         "text_sha256",
-        F.min(id_col).over(w).alias("cluster_id"),
+        F.min("doc_id").over(w).alias("cluster_id"),
         F.count(F.lit(1)).over(w).alias("cluster_size"),
-        (F.col(id_col) == F.min(id_col).over(w)).alias("is_best"),
+        (F.col("doc_id") == F.min("doc_id").over(w)).alias("is_best"),
     )
 
 
@@ -197,31 +196,11 @@ def hamming_block_pairs(
     )
 
 
-def simhash_block_pairs(
-    sig_df: DataFrame, cfg: DedupConfig, id_col: str = "doc_id",
-    max_bucket_hint: int | None = None,
-) -> DataFrame:
-    """SimHash near-dup candidates: Hamming <= ``cfg.hamming_max`` via
-    (hamming_max+1)-chunk pigeonhole blocking (see hamming_block_pairs).
-    The radius comes from the config — hard-coding 3 here made the
-    ``hamming_max`` knob a silent no-op for this operator while verify.py
-    honored it.  ``max_bucket_hint`` forwards the profile statistic that
-    lets clean corpora skip the skew tiers (see hamming_bucket_stats)."""
-    return hamming_block_pairs(
-        sig_df, "simhash", id_col, radius=cfg.hamming_max,
-        max_bucket_hint=max_bucket_hint,
-    )
-
-
 def ngram_jaccard_pairs(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    prefilter_broadcast: bool = False,
+    df: DataFrame, pairs: DataFrame, prefilter_broadcast: bool = False
 ) -> DataFrame:
-    """Exact token n-gram Jaccard for given candidate pairs (never all-pairs).
+    """Exact token 3-gram Jaccard for given candidate pairs (never all-pairs)
+    over a (doc_id, text) frame.
 
     Returns integer intersection/union sizes (float-drift-free for the oracle)
     plus the ratio.  Set semantics: distinct n-grams per doc.
@@ -237,20 +216,20 @@ def ngram_jaccard_pairs(
     """
     if prefilter_broadcast:
         ids = (
-            pairs.select(F.col("id_a").alias(id_col))
-            .unionByName(pairs.select(F.col("id_b").alias(id_col)))
-            .dropDuplicates([id_col])
+            pairs.select(F.col("id_a").alias("doc_id"))
+            .unionByName(pairs.select(F.col("id_b").alias("doc_id")))
+            .dropDuplicates(["doc_id"])
         )
-        df = df.join(F.broadcast(ids), id_col, "leftsemi")
-    toks = tokens_expr(F.col(text_col))
+        df = df.join(F.broadcast(ids), "doc_id", "leftsemi")
+    toks = tokens_expr(F.col("text"))
     n_toks = F.size(toks)
     grams = F.when(
-        n_toks >= n,
-        F.array_distinct(word_ngrams_window_expr(toks, n)),
+        n_toks >= 3,
+        F.array_distinct(word_ngrams_window_expr(toks, 3)),
     ).otherwise(F.array(F.concat_ws(" ", toks)))
-    gdf = df.select(F.col(id_col), grams.alias("grams"))
-    a = gdf.select(F.col(id_col).alias("id_a"), F.col("grams").alias("grams_a"))
-    b = gdf.select(F.col(id_col).alias("id_b"), F.col("grams").alias("grams_b"))
+    gdf = df.select(F.col("doc_id"), grams.alias("grams"))
+    a = gdf.select(F.col("doc_id").alias("id_a"), F.col("grams").alias("grams_a"))
+    b = gdf.select(F.col("doc_id").alias("id_b"), F.col("grams").alias("grams_b"))
     joined = pairs.select("id_a", "id_b").join(a, "id_a").join(b, "id_b")
     inter = F.size(F.array_intersect("grams_a", "grams_b"))
     union = F.size(F.array_union("grams_a", "grams_b"))
@@ -263,12 +242,10 @@ def ngram_jaccard_pairs(
     )
 
 
-def repetition_stats(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Gopher-style within-document repetition signals.
 
-    (id, text) -> (id, n_tokens, n_distinct, n_bigrams, top_bigram_count,
+    (doc_id, text) -> (doc_id, n_tokens, n_distinct, n_bigrams, top_bigram_count,
     dup_token_frac, top_bigram_frac).  ``dup_token_frac`` is the fraction of
     tokens that are repeats of an earlier token (1 - distinct/total);
     ``top_bigram_frac`` is the share of all word bigrams taken by the most
@@ -290,9 +267,9 @@ def repetition_stats(
     bit-for-bit — the oracle still computes the mode the explode/groupBy
     way, which is exactly what makes this rewrite oracle-checked.
     """
-    toks = tokens_expr(F.col(text_col))
-    base = df.select(F.col(id_col), toks.alias("toks")).select(
-        id_col,
+    toks = tokens_expr(F.col("text"))
+    base = df.select(F.col("doc_id"), toks.alias("toks")).select(
+        "doc_id",
         F.size("toks").cast("int").alias("n_tokens"),
         F.size(F.array_distinct("toks")).cast("int").alias("n_distinct"),
         "toks",
@@ -335,7 +312,7 @@ def repetition_stats(
     ).otherwise(F.lit(0))
     top_count = best_run.cast("int")  # empty bigram array folds to 0
     return base.select(
-        id_col,
+        "doc_id",
         "n_tokens",
         "n_distinct",
         n_bigrams.alias("n_bigrams"),
@@ -351,13 +328,7 @@ def repetition_stats(
     )
 
 
-def boilerplate_ngrams(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 5,
-    min_docs: int = 3,
-) -> DataFrame:
+def boilerplate_ngrams(df: DataFrame, n: int = 5, min_docs: int = 3) -> DataFrame:
     """C4-style cross-document boilerplate detection: word ``n``-grams that
     occur in at least ``min_docs`` DISTINCT documents (navigation chrome,
     cookie banners, license footers).  (corpus) -> (ngram, n_docs,
@@ -374,14 +345,14 @@ def boilerplate_ngrams(
     to 8-byte hashes before the exchange (same trick as the LSH band keys);
     kept as strings here so the output is directly greppable/joinable.
     """
-    toks = tokens_expr(F.col(text_col))
-    toked = df.select(F.col(id_col), toks.alias("toks")).where(F.size("toks") >= n)
+    toks = tokens_expr(F.col("text"))
+    toked = df.select(F.col("doc_id"), toks.alias("toks")).where(F.size("toks") >= n)
     grams = toked.select(
-        id_col,
+        "doc_id",
         F.explode(word_ngrams_window_expr(F.col("toks"), n)).alias("ngram"),
     )
     return (
-        grams.groupBy("ngram", id_col)
+        grams.groupBy("ngram", "doc_id")
         .agg(F.count(F.lit(1)).alias("c"))
         .groupBy("ngram")
         .agg(

@@ -234,12 +234,13 @@ def hot_bucket_probe(
     }
 
 
-def hot_bucket_stats(sig_df: DataFrame, cfg: DedupConfig, id_col: str = "doc_id") -> DataFrame:
-    """Band-bucket size profile for lineage/metrics (never silent truncation —
-    reference analog: the uninstrumented bucket skip at deduplication.py:314-317).
+def hot_bucket_stats(sig_df: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """Band-bucket size profile of a (doc_id, band_keys) frame for
+    lineage/metrics (never silent truncation — reference analog: the
+    uninstrumented bucket skip at deduplication.py:314-317).
     """
     return (
-        explode_bands(sig_df, id_col)
+        explode_bands(sig_df, "doc_id")
         .groupBy("band_id", "band_key")
         .agg(F.count(F.lit(1)).alias("bucket_size"))
         .groupBy()

@@ -31,19 +31,15 @@ from pyspark.sql import functions as F
 
 
 def pack_documents(
-    docs: DataFrame,
-    budget: int,
-    id_col: str = "doc_id",
-    tokens_col: str = "n_tokens",
-    bucket_rows: int = 100_000,
+    docs: DataFrame, budget: int, bucket_rows: int = 100_000
 ) -> DataFrame:
-    """(id, n_tokens, ...) -> (id, n_tokens, offset, pack_id).
+    """(doc_id, n_tokens, ...) -> (doc_id, n_tokens, offset, pack_id).
 
     ``offset`` is the document's global start position in the concatenated
-    token stream under ascending ``id_col`` order; ``pack_id = offset div
+    token stream under ascending ``doc_id`` order; ``pack_id = offset div
     budget``.  Deterministic for any partitioning (the order is a total
-    order on ``id_col``).  ``bucket_rows`` sizes the prefix-sum buckets via
-    ``id_col div bucket_rows`` — ids need not be dense; buckets only need to
+    order on ``doc_id``).  ``bucket_rows`` sizes the prefix-sum buckets via
+    ``doc_id div bucket_rows`` — ids need not be dense; buckets only need to
     be contiguous ranges, and empty buckets cost nothing.
     """
     if budget <= 0 or bucket_rows <= 0:
@@ -51,12 +47,12 @@ def pack_documents(
         # silently collapse the corpus into one NULL pack
         raise ValueError(f"budget and bucket_rows must be > 0, got "
                          f"{budget=}, {bucket_rows=}")
-    d = docs.select(id_col, tokens_col)
+    d = docs.select("doc_id", "n_tokens")
     # integral `div`, not float `/` + cast: `/` on longs goes through double,
     # whose 53-bit mantissa silently rounds ids above 2^53 (content-hash-
     # derived ids are 64-bit) — `div` states the intent with no precision cliff
     bucketed = d.withColumn(
-        "_bucket", F.expr(f"`{id_col}` div {int(bucket_rows)}")
+        "_bucket", F.expr(f"doc_id div {int(bucket_rows)}")
     )
 
     # phase 1+2: per-bucket totals, then the EXCLUSIVE running total of the
@@ -65,7 +61,7 @@ def pack_documents(
     # cheap task, and broadcastable back.
     bucket_offsets = (
         bucketed.groupBy("_bucket")
-        .agg(F.sum(tokens_col).alias("_bucket_tokens"))
+        .agg(F.sum("n_tokens").alias("_bucket_tokens"))
         .withColumn(
             "_base",
             F.coalesce(
@@ -84,17 +80,17 @@ def pack_documents(
     # window partition) + the bucket's base.
     w_in = (
         Window.partitionBy("_bucket")
-        .orderBy(id_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     return (
         bucketed.withColumn(
-            "_local", F.coalesce(F.sum(tokens_col).over(w_in), F.lit(0))
+            "_local", F.coalesce(F.sum("n_tokens").over(w_in), F.lit(0))
         )
         .join(F.broadcast(bucket_offsets), "_bucket")
         .select(
-            id_col,
-            tokens_col,
+            "doc_id",
+            "n_tokens",
             (F.col("_base") + F.col("_local")).alias("offset"),
             F.expr(f"(_base + _local) div {int(budget)}").alias("pack_id"),
         )

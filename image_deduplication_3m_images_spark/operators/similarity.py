@@ -20,6 +20,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# The embeddings table: (vec_id, embedding array<float> of EMB_DIM).  Table
+# t of a sign-LSH index uses hyperplanes(EMB_DIM, n_planes, PLANE_SEED + t),
+# the planes the DuckDB oracle emits as literals.
+EMB_DIM = 64
+PLANE_SEED = 7
+
 
 def _dot_expr(a, b):
     # left fold over zip_with products, double accumulation (order-stable)
@@ -92,13 +98,7 @@ def make_cosine_udf():
     return cosine_udf
 
 
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """(query_id, neighbor_id, rank, cosine) — exact top-k by cosine.
 
     Queries are broadcast (they are the small side by construction); the
@@ -108,10 +108,12 @@ def brute_force_topk(
     """
     q = F.broadcast(
         queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
         )
     )
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
+    c = corpus.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec")
+    )
     scored = (
         c.crossJoin(q)
         .where(F.col("neighbor_id") != F.col("query_id"))
@@ -170,12 +172,8 @@ def make_signlsh_buckets_udf(tables: list):
 def signlsh_neardup_pairs(
     corpus: DataFrame,
     threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_planes: int = 4,
     n_tables: int = 8,
-    dim: int = 64,
-    seed: int = 7,
     cache_buckets: bool = False,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate PAIRS (id_a < id_b, cosine >= threshold)
@@ -206,15 +204,15 @@ def signlsh_neardup_pairs(
     oracle evaluate the IDENTICAL literal-hyperplane buckets, so the
     correctness check is exact even though recall is approximate.
     """
-    tables = [hyperplanes(dim, n_planes, seed + t) for t in range(n_tables)]
+    tables = [hyperplanes(EMB_DIM, n_planes, PLANE_SEED + t) for t in range(n_tables)]
     budf = make_signlsh_buckets_udf(tables)
     # posexplode applied DIRECTLY to the UDF call: materializing the UDF
     # column first (withColumn) lets CollapseProject duplicate the UDF into
     # two stacked ArrowEvalPython nodes — every row would pay the kernel
     # twice (plan-tested in tests/test_plans.py)
     c = corpus.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(budf(vec_col)).alias("tab", "bucket"),
+        F.col("vec_id").alias("id"),
+        F.posexplode(budf("embedding")).alias("tab", "bucket"),
     )
     if cache_buckets:
         # a self-join evaluates its input subtree once PER SIDE, so without
@@ -240,7 +238,7 @@ def signlsh_neardup_pairs(
     # threshold filter below the projection and the kernel runs TWICE per
     # pair (plan-tested: exactly one cosine ArrowEvalPython node)
     cos_udf = make_cosine_udf().asNondeterministic()
-    v = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+    v = corpus.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec"))
     return (
         pairs.join(
             v.select(F.col("id").alias("id_a"), F.col("vec").alias("vec_a")), "id_a"
@@ -257,19 +255,14 @@ def signlsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_planes: int = 8,
-    dim: int = 64,
-    multiprobe: bool = True,
     n_tables: int = 1,
-    seed: int = 7,
 ) -> DataFrame:
     """LSH-bucketed approximate top-k: standard multi-table sign-LSH
     (``n_tables`` independent tables of ``n_planes`` bits each, candidate =
-    bucket collision in ANY table), optional Hamming-1 ``multiprobe`` (the
-    query additionally probes every bucket reachable by flipping one sign
-    bit).  Exact cosine + window top-k within the candidate union.
+    bucket collision in ANY table) with Hamming-1 multiprobe (the query
+    additionally probes every bucket reachable by flipping one sign bit).
+    Exact cosine + window top-k within the candidate union.
 
     Recall/cost tuning — P(bit match) = 1 - theta/pi, so per-table collision
     is p**b: size ``n_planes`` to the workload's neighbor similarity (near-
@@ -286,28 +279,28 @@ def signlsh_topk(
     top-k window.  Cross-table duplicate candidates are collapsed by a
     distinct on the (tiny) scored pairs.
     """
-    tables = [hyperplanes(dim, n_planes, seed + t) for t in range(n_tables)]
+    tables = [hyperplanes(EMB_DIM, n_planes, PLANE_SEED + t) for t in range(n_tables)]
     budf = make_signlsh_buckets_udf(tables)
     # posexplode DIRECTLY over the UDF call — a separate withColumn lets
     # CollapseProject duplicate the UDF into two stacked ArrowEvalPython
     # nodes (double kernel cost per row); this shape plans exactly one
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.posexplode(budf(vec_col)).alias("tab", "bucket"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
+        F.posexplode(budf("embedding")).alias("tab", "bucket"),
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.posexplode(budf(vec_col)).alias("tab", "bucket"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
+        F.posexplode(budf("embedding")).alias("tab", "bucket"),
     )
-    if multiprobe:
-        probes = F.array(
-            F.col("bucket"),
-            *[F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)],
-        )
-        q = q.select("query_id", "q_vec", "tab", F.explode(probes).alias("bucket"))
-    q = F.broadcast(q)
+    probes = F.array(
+        F.col("bucket"),
+        *[F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)],
+    )
+    q = F.broadcast(
+        q.select("query_id", "q_vec", "tab", F.explode(probes).alias("bucket"))
+    )
     scored = (
         c.join(q, ["tab", "bucket"])
         .where(F.col("neighbor_id") != F.col("query_id"))

@@ -422,22 +422,20 @@ def remove_duplicated_spans(
 
 
 def shared_substring_pairs(
-    docs: DataFrame,
-    min_len: int = 40,
-    window: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    hot_cap: int | None = None,
+    docs: DataFrame, min_len: int = 40, hot_cap: int | None = None
 ) -> DataFrame:
-    """EXACT (id_a < id_b) pairs of docs sharing a verbatim substring of
-    >= ``min_len`` characters — with ``hot_cap=None``, the default.
+    """EXACT (id_a < id_b) pairs of (doc_id, text) docs sharing a verbatim
+    substring of >= ``min_len`` characters (winnowing window 8) — with
+    ``hot_cap=None``, the default.
     ``hot_cap=K`` star-tiers oversize fingerprint buckets (see
     ``_candidate_pairs``): connectivity-preserving for clustering use, but
     no longer the exact pair set, so leave None when per-pair semantics
     matter."""
-    fps = winnowed_fingerprints(docs, min_len, window, id_col, text_col)
-    cand = _candidate_pairs(fps, id_col, hot_cap)
-    withtext = _pairs_with_texts(cand, docs.select(id_col, text_col), id_col, text_col)
+    fps = winnowed_fingerprints(docs, min_len, 8, "doc_id", "text")
+    cand = _candidate_pairs(fps, "doc_id", hot_cap)
+    withtext = _pairs_with_texts(
+        cand, docs.select("doc_id", "text"), "doc_id", "text"
+    )
     shares = _shares_gram_udf(min_len)
     return withtext.where(shares(F.col("text_a"), F.col("text_b"))).select(
         "id_a", "id_b"

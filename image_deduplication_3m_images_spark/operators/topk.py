@@ -8,8 +8,8 @@ OOMs.  The classic fix is a two-level tournament, exact whenever the
 ordering is a TOTAL order (ours always is — every ordering ends with the
 unique id as tiebreak):
 
-1. salt: split each group into S shards; a local ``row_number`` keeps each
-   shard's top K (max sort-buffer = group_size / S, tunable),
+1. salt: split each group into S (``N_SALTS``) shards; a local
+   ``row_number`` keeps each shard's top K (max sort-buffer = group_size / S),
 2. final: a ``row_number`` over the <= K*S survivors per group keeps the
    true top K — any row outside a shard's local top K is dominated by K
    rows in its own shard, so it can never be in the group's global top K.
@@ -27,6 +27,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType, StructType
+
+# shards per group in the first tournament level
+N_SALTS = 32
 
 
 def _hashable(dt: DataType) -> bool:
@@ -47,29 +50,28 @@ def top_k_per_group(
     group_cols: list[str],
     order_cols: list[Column],
     k: int,
-    n_salts: int = 32,
     rank_col: str = "rank",
 ) -> DataFrame:
     """EXACT top-``k`` rows per group under ``order_cols`` (must be a total
     order — include a unique tiebreak column), with bounded per-task sort
     buffers.  Adds ``rank_col`` (1..k within the group).
 
-    ``n_salts`` bounds the local sort: each first-level partition holds
-    ~group_size / n_salts rows; the second level sorts <= k * n_salts rows
-    per group.  With the default 32 salts and k=5 the final window touches
-    at most 160 rows per group no matter how large the group is.
+    ``N_SALTS`` bounds the local sort: each first-level partition holds
+    ~group_size / N_SALTS rows; the second level sorts <= k * N_SALTS rows
+    per group.  With 32 salts and k=5 the final window touches at most 160
+    rows per group no matter how large the group is.
     """
     # deterministic shard: hash the row's hashable columns, not rand() —
     # re-runs and resumed stages must shard identically.  pmod keeps the
-    # shard id in [0, n_salts) (abs(Long.MIN_VALUE) stays negative); map
+    # shard id in [0, N_SALTS) (abs(Long.MIN_VALUE) stays negative); map
     # columns are excluded (xxhash64 rejects them), and a frame with NO
     # hashable column falls back to a rand shard — exactness never depends
     # on WHICH shard a row lands in, only re-run shard identity does.
     hash_cols = [f.name for f in df.schema.fields if _hashable(f.dataType)]
     salt = (
-        F.pmod(F.xxhash64(*hash_cols), F.lit(n_salts))
+        F.pmod(F.xxhash64(*hash_cols), F.lit(N_SALTS))
         if hash_cols
-        else F.floor(F.rand(seed=0) * n_salts).cast("long")
+        else F.floor(F.rand(seed=0) * N_SALTS).cast("long")
     ).alias("_salt")
     w_local = Window.partitionBy(*group_cols, "_salt").orderBy(*order_cols)
     survivors = (

@@ -77,18 +77,14 @@ def melt_assemble(
     return hits.groupBy("id_a", "id_b").agg(*aggs)
 
 
-def join_signatures(
-    pairs: DataFrame,
-    sig_df: DataFrame,
-    id_col: str = "doc_id",
-    cols=("minhash_bin", "simhash"),
-) -> DataFrame:
-    """Attach both sides' signatures to (id_a, id_b) pairs with the plain
-    two-join plan: both joins shuffle, fully spillable, no driver
+def join_signatures(pairs: DataFrame, sig_df: DataFrame, id_col: str) -> DataFrame:
+    """Attach both sides' signatures and text to (id_a, id_b) pairs with the
+    plain two-join plan: both joins shuffle, fully spillable, no driver
     bottleneck — the shape that survives a pair set too big to broadcast.
     Broadcast-small pair sets go through ``melt_assemble`` instead (see
     ``verify_pairs``).
     """
+    cols = ("minhash_bin", "simhash", "text")
     a = sig_df.select(
         F.col(id_col).alias("id_a"), *[F.col(c).alias(f"{c}_a") for c in cols]
     )
@@ -202,9 +198,7 @@ def verify_pairs(
         return _verify_deferred(pairs, sig_df, cfg, id_col, release=release)
     # one join per side carrying signatures AND text together — half the
     # shuffles of separate signature/text joins
-    joined = join_signatures(
-        pairs, sig_df, id_col, cols=("minhash_bin", "simhash", "text")
-    )
+    joined = join_signatures(pairs, sig_df, id_col)
     out = joined.select("id_a", "id_b", *_evidence(), _contains().alias("containment"))
     return out.withColumn("verified", _sim_ok(cfg) | F.col("containment"))
 

@@ -40,7 +40,6 @@ from image_deduplication_3m_images_spark.operators.dedup import (
     exact_duplicates,
     ngram_jaccard_pairs,
     repetition_stats,
-    simhash_block_pairs,
 )
 from image_deduplication_3m_images_spark.operators.lsh import (
     candidate_pairs,
@@ -247,7 +246,7 @@ def _cands(spark, sf_dir, sig=None) -> DataFrame:
     sig = sig if sig is not None else _sig(spark, sf_dir)
 
     def build():
-        hint = hot_bucket_stats(sig, CFG, id_col="doc_id").collect()[0]["max_bucket"]
+        hint = hot_bucket_stats(sig, CFG).collect()[0]["max_bucket"]
         return candidate_pairs(
             sig, CFG, id_col="doc_id", max_bucket_hint=hint
         ).cache()
@@ -311,7 +310,7 @@ def q_token_stats(spark, sf_dir):
 
 
 def q_quality(spark, sf_dir):
-    docs = with_quality(_docs(spark, sf_dir), "text")
+    docs = with_quality(_docs(spark, sf_dir))
     return docs.select("doc_id", F.round(F.col("quality"), 6).alias("quality"))
 
 
@@ -338,12 +337,12 @@ def q_fingerprint(spark, sf_dir):
 
 def q_repetition_stats(spark, sf_dir):
     """Gopher repetition signals per document (dup-token / top-bigram fracs)."""
-    return repetition_stats(_docs(spark, sf_dir), "doc_id")
+    return repetition_stats(_docs(spark, sf_dir))
 
 
 def q_boilerplate_ngrams(spark, sf_dir):
     """C4-style cross-document boilerplate 5-grams (>= 3 distinct docs)."""
-    return boilerplate_ngrams(_docs(spark, sf_dir), "doc_id", n=5, min_docs=3)
+    return boilerplate_ngrams(_docs(spark, sf_dir), n=5, min_docs=3)
 
 
 def q_exact_dedup(spark, sf_dir):
@@ -358,7 +357,7 @@ def q_exact_dedup(spark, sf_dir):
     exchange + cache write for a query whose first operator shuffles
     regardless).  The >2M-row relational guard still applies."""
     docs = load(spark, sf_dir, "documents", spread=False).select("doc_id", "text")
-    return exact_duplicates(docs, "doc_id").select(
+    return exact_duplicates(docs).select(
         "doc_id",
         "text_sha256",
         "cluster_id",
@@ -430,7 +429,7 @@ def q_dup_clusters(spark, sf_dir):
 def q_best_pick(spark, sf_dir):
     clusters = q_dup_clusters(spark, sf_dir)
     quality = q_quality(spark, sf_dir)
-    return pick_best(clusters, quality, "doc_id").select(
+    return pick_best(clusters, quality).select(
         "doc_id",
         "cluster_id",
         "quality",
@@ -453,7 +452,7 @@ def q_group_avg_sim(spark, sf_dir):
         (F.col("sig_matches") / F.lit(float(CFG.num_perm))).alias("similarity"),
     )
     clusters = q_dup_clusters(spark, sf_dir)
-    return group_avg_similarity(clusters, scored, id_col="doc_id")
+    return group_avg_similarity(clusters, scored)
 
 
 def q_test_path_flags(spark, sf_dir):
@@ -645,7 +644,7 @@ def q_contamination(spark, sf_dir):
     # distinct grams per ~300-char eval doc (generous); both forms are
     # exact, so an estimate can only affect speed (see contamination_flags)
     n_est = (_table_rows(spark, sf_dir, "documents") // 50) * 64
-    return contamination_flags(corpus, eval_df, n=5, n_eval_grams=n_est)
+    return contamination_flags(corpus, eval_df, n_est, n=5)
 
 
 def q_length_quantiles(spark, sf_dir):
@@ -674,6 +673,7 @@ def q_simhash_pairs(spark, sf_dir):
     buckets are skew-free, and the operator then plans ONE shuffle instead
     of the stats-join + three-branch tier union."""
     from image_deduplication_3m_images_spark.operators.dedup import (
+        hamming_block_pairs,
         hamming_bucket_stats,
     )
 
@@ -684,8 +684,8 @@ def q_simhash_pairs(spark, sf_dir):
         lambda: hamming_bucket_stats(sig, "simhash", radius=CFG.hamming_max)
         .collect()[0]["max_bucket"],
     )
-    return simhash_block_pairs(
-        sig, CFG, id_col="doc_id", max_bucket_hint=hint
+    return hamming_block_pairs(
+        sig, "simhash", "doc_id", radius=CFG.hamming_max, max_bucket_hint=hint
     ).select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
 
 
@@ -695,7 +695,7 @@ def q_ngram_jaccard(spark, sf_dir):
     # relative to the corpus (the pipeline's byte guard makes the same call)
     pairs = _cands(spark, sf_dir, sig).select("id_a", "id_b")
     return ngram_jaccard_pairs(
-        _docs(spark, sf_dir), pairs, id_col="doc_id", prefilter_broadcast=True
+        _docs(spark, sf_dir), pairs, prefilter_broadcast=True
     ).select(
         "id_a",
         "id_b",
@@ -734,7 +734,6 @@ def q_embedding_topk_lsh(spark, sf_dir):
         k=5,
         n_planes=5,
         n_tables=8,
-        multiprobe=True,
     ).select(
         "query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), "cosine"
     )
@@ -968,16 +967,16 @@ def q_image_features(spark, sf_dir):
 
 def q_media_dedup(spark, sf_dir):
     """Perceptual-hash near-dup candidates at Hamming radius 3 via the same
-    pigeonhole chunk blocking as simhash_pairs (never all-pairs).  The
-    features frame is memoized+cached: the tier-split plan consumes it
-    through multiple branches, and an unmaterialized mapInPandas plan would
-    re-run the decode kernel once per branch (same rationale as _sig)."""
+    pigeonhole chunk blocking as simhash_pairs (never all-pairs) — the
+    image analog of the text pipeline's LSH bucket join.  The features
+    frame is memoized+cached: the tier-split plan consumes it through
+    multiple branches, and an unmaterialized mapInPandas plan would re-run
+    the decode kernel once per branch (same rationale as _sig)."""
     from image_deduplication_3m_images_spark.functions.multimodal import (
         image_features,
-        media_dedup_candidates,
     )
-
     from image_deduplication_3m_images_spark.operators.dedup import (
+        hamming_block_pairs,
         hamming_bucket_stats,
     )
 
@@ -993,7 +992,9 @@ def q_media_dedup(spark, sf_dir):
         lambda: hamming_bucket_stats(feats, "phash64", radius=3)
         .collect()[0]["max_bucket"],
     )
-    return media_dedup_candidates(feats, radius=3, max_bucket_hint=hint).select(
+    return hamming_block_pairs(
+        feats, "phash64", "media_id", radius=3, max_bucket_hint=hint
+    ).select(
         "id_a", "id_b", F.col("hamming").cast("int").alias("hamming")
     )
 

@@ -14,7 +14,6 @@ from pyspark.sql import SparkSession
 
 
 def get_spark(
-    app_name: str = "image_deduplication_3m_images_spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     master: str | None = None,
@@ -36,7 +35,7 @@ def get_spark(
     multi_jvm = master.startswith("local-cluster")
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     builder = (
-        SparkSession.builder.appName(app_name)
+        SparkSession.builder.appName("image_deduplication_3m_images_spark")
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")

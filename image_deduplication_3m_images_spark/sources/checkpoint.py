@@ -8,7 +8,7 @@ Production target is Iceberg (snapshot ids give exactly-once semantics); this
 module speaks a minimal catalog interface with two backends:
 
   * ``IcebergCatalog``  — used when an Iceberg catalog is configured on the
-    session (``spark.sql.catalog.<name>`` set and the runtime jar present).
+    session (``spark.sql.catalog.local`` set and the runtime jar present).
   * ``ParquetCatalog``  — local/dev backend with the same semantics:
     a table commit = atomic directory rename (write to ``_tmp_<table>`` then
     rename), a snapshot id = the content fingerprint of the commit.
@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 LINEAGE_TABLE = "_lineage"
+# the Spark SQL catalog an IcebergCatalog writes to
+ICEBERG_CATALOG = "local"
 _LINEAGE_SCHEMA = (
     "stage string, partition_id int, rows long, input_snapshot string,"
     " config_hash string, extra string"
@@ -46,17 +48,51 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
-def make_catalog(spark: SparkSession, warehouse: str, catalog_name: str = "local"):
+def make_catalog(spark: SparkSession, warehouse: str):
     """Backend selection: IcebergCatalog when the runtime jar is on the
-    classpath AND a Spark SQL catalog named ``catalog_name`` is configured;
-    ParquetCatalog (same interface, same semantics) otherwise."""
-    configured = spark.conf.get(f"spark.sql.catalog.{catalog_name}", None)
+    classpath AND a Spark SQL catalog named ``ICEBERG_CATALOG`` is
+    configured; ParquetCatalog (same interface, same semantics) otherwise."""
+    configured = spark.conf.get(f"spark.sql.catalog.{ICEBERG_CATALOG}", None)
     if configured and iceberg_available(spark):
-        return IcebergCatalog(spark, warehouse, catalog_name=catalog_name)
+        return IcebergCatalog(spark, warehouse)
     return ParquetCatalog(spark, warehouse)
 
 
-class ParquetCatalog:
+class _Catalog:
+    """The resume gate both backends share; each backend supplies
+    ``exists``, ``read`` and ``snapshot_id``."""
+
+    def lineage(self) -> DataFrame:
+        return self.read(LINEAGE_TABLE)
+
+    def stage_complete(self, stage: str, config_hash: str, input_snapshot: str) -> bool:
+        """Resume gate: stage output exists AND the lineage row describing
+        the table's CURRENT contents carries the same config hash and the
+        same input snapshot (what the stage read).  Hash alone is not
+        enough: lineage is append-only, so after a config flip A->B->A the
+        old A row still exists while the table holds B data — rows written
+        by ``log_lineage_for_table`` therefore carry ``output_snapshot`` in
+        their extra JSON and must match the table's current snapshot.  A
+        row without one (older warehouses) vouches for nothing: the stage
+        recomputes."""
+        if not self.exists(stage) or not self.exists(LINEAGE_TABLE):
+            return False
+        snap = self.snapshot_id(stage)
+        n = (
+            self.lineage()
+            .where(
+                (F.col("stage") == stage)
+                & (F.col("config_hash") == config_hash)
+                & (F.col("input_snapshot") == input_snapshot)
+            )
+            .where(F.get_json_object("extra", "$.output_snapshot") == snap)
+            .limit(1)
+            .count()
+        )
+        return n > 0
+
+
+class ParquetCatalog(_Catalog):
     """Directory-per-table parquet warehouse with atomic commit + lineage."""
 
     def __init__(self, spark: SparkSession, warehouse: str):
@@ -320,34 +356,8 @@ class ParquetCatalog:
             LINEAGE_TABLE,
         )
 
-    def lineage(self) -> DataFrame:
-        return self.read(LINEAGE_TABLE)
 
-    def stage_complete(self, stage: str, config_hash: str) -> bool:
-        """Resume gate: stage output exists AND the lineage row describing
-        the table's CURRENT contents carries the same config hash.  Hash
-        alone is not enough: lineage is append-only, so after a config
-        flip A->B->A the old A row still exists while the table holds B
-        data — rows written by ``log_lineage_for_table`` therefore carry
-        ``output_snapshot`` in their extra JSON and must match the table's
-        current snapshot.  A row without one (older warehouses) vouches for
-        nothing: the stage recomputes."""
-        if not self.exists(stage) or not self.exists(LINEAGE_TABLE):
-            return False
-        snap = self.snapshot_id(stage)
-        n = (
-            self.lineage()
-            .where(
-                (F.col("stage") == stage) & (F.col("config_hash") == config_hash)
-            )
-            .where(F.get_json_object("extra", "$.output_snapshot") == snap)
-            .limit(1)
-            .count()
-        )
-        return n > 0
-
-
-class IcebergCatalog:
+class IcebergCatalog(_Catalog):
     """Iceberg-backed catalog: the production checkpoint layer (north rule:
     every stage checkpoints to Iceberg with per-partition lineage).
 
@@ -358,13 +368,13 @@ class IcebergCatalog:
     from the ``.files`` metadata table (manifest entries — no data scan).
 
     Requires the iceberg-spark-runtime jar and a configured SQL catalog
-    (``spark.sql.catalog.<name>``); raises at construction otherwise, so
+    (``spark.sql.catalog.local``); raises at construction otherwise, so
     ``make_catalog`` can fall back to ParquetCatalog cleanly.  Tables live
     in a namespace derived from the warehouse path so concurrent warehouses
     never collide.
     """
 
-    def __init__(self, spark: SparkSession, warehouse: str, catalog_name: str = "local"):
+    def __init__(self, spark: SparkSession, warehouse: str):
         if not iceberg_available(spark):
             raise RuntimeError(
                 "iceberg-spark-runtime jar not on the classpath; "
@@ -375,7 +385,7 @@ class IcebergCatalog:
         import hashlib
 
         ns = "wh_" + hashlib.sha256(os.path.abspath(warehouse).encode()).hexdigest()[:12]
-        self.ns = f"{catalog_name}.{ns}"
+        self.ns = f"{ICEBERG_CATALOG}.{ns}"
         spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {self.ns}")
 
     # -- identifiers --------------------------------------------------------
@@ -456,22 +466,3 @@ class IcebergCatalog:
         )
         self.append(row, LINEAGE_TABLE)
 
-    def lineage(self) -> DataFrame:
-        return self.read(LINEAGE_TABLE)
-
-    def stage_complete(self, stage: str, config_hash: str) -> bool:
-        # snapshot-qualified like ParquetCatalog.stage_complete: the row
-        # must describe the table's CURRENT snapshot (see that docstring)
-        if not self.exists(stage) or not self.exists(LINEAGE_TABLE):
-            return False
-        snap = self.snapshot_id(stage)
-        n = (
-            self.lineage()
-            .where(
-                (F.col("stage") == stage) & (F.col("config_hash") == config_hash)
-            )
-            .where(F.get_json_object("extra", "$.output_snapshot") == snap)
-            .limit(1)
-            .count()
-        )
-        return n > 0

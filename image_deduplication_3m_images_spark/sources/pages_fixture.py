@@ -75,11 +75,7 @@ def expected_text(title: str, body: str) -> str:
     return f"{title}\n{body}"
 
 
-def generate_pages(
-    n_rows: int = 300,
-    seed: int = 42,
-    skew_cluster_size: int | None = None,
-) -> PagesFixture:
+def generate_pages(n_rows: int = 300, seed: int = 42) -> PagesFixture:
     """Planted structure (scaled to n_rows, FIXTURES.md §2):
 
     - exact duplicates:       5 clusters x 4 members (identical body)
@@ -88,7 +84,7 @@ def generate_pages(
     - containment pairs:      5 clusters x 2 (B = A + 50% appended)
     - hard negatives:         10 x 2 docs sharing ~30% tokens (must NOT merge)
     - skew bomb:              one near-identical tiny-page cluster
-                              (default size: max(50, n_rows//10)) — hot band key
+                              (size max(50, n_rows//10)) — hot band key
     - unique filler:          remainder
 
     ``n_rows`` is a TARGET, not an exact row count: the planted structure
@@ -171,7 +167,7 @@ def generate_pages(
             add_row(f"hardneg_{c}_{m}", False, f"hardneg {c} {m}", mixed)
 
     # 6. skew bomb: one giant near-identical tiny-page cluster (hot band key)
-    skew_n = skew_cluster_size if skew_cluster_size is not None else max(50, n_rows // 10)
+    skew_n = max(50, n_rows // 10)
     err_body = ["page", "not", "found", "error", "404", "return", "home"]
     for m in range(skew_n):
         toks = list(err_body)

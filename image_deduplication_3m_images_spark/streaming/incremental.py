@@ -17,6 +17,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from image_deduplication_3m_images_spark.config import DedupConfig
+from image_deduplication_3m_images_spark.plans.dedupe import ID
+
+# auto-compaction folds clusters_delta into the base once the delta holds
+# at least this fraction of the base's rows (and compact_min_rows rows)
+COMPACT_FRAC = 0.5
 
 
 def ingest_neardup_batch(
@@ -25,16 +30,18 @@ def ingest_neardup_batch(
     batch_id: int,
     cat,
     cfg,
-    compact_frac: float = 0.5,
     compact_min_rows: int = 50_000,
 ) -> None:
     """One incremental near-dup step over the checkpoint catalog (the
     ``foreachBatch`` body of :func:`stream_neardup`; exposed separately so
     batch tests and backfills can drive it directly).
 
-    ``compact_frac`` / ``compact_min_rows``: the ``clusters_delta``
+    ``compact_min_rows`` / ``COMPACT_FRAC``: the ``clusters_delta``
     auto-compaction policy — fold the delta into the base when the delta
     exceeds BOTH bounds (see the policy block at the end).
+
+    ``cfg.canonicalize_urls`` is refused: the stream keys pages by their
+    raw url, and the flag would only change the config hash.
 
     Work per batch is proportional to (new docs x matched buckets) plus CC
     over the accumulated EDGE set — never to the corpus size:
@@ -80,8 +87,11 @@ def ingest_neardup_batch(
     )
     from image_deduplication_3m_images_spark.operators.lsh import explode_bands
     from image_deduplication_3m_images_spark.operators.verify import verify_pairs
-    from image_deduplication_3m_images_spark.plans.dedupe import ID, build_signatures
+    from image_deduplication_3m_images_spark.plans.dedupe import build_signatures
 
+    if cfg.canonicalize_urls:
+        raise ValueError("the stream does not canonicalize urls; "
+                         "set canonicalize_urls=False")
     if cat.exists("_batches"):
         done = {r["batch_id"] for r in cat.read("_batches").collect()}
         if batch_id in done:
@@ -225,7 +235,7 @@ def ingest_neardup_batch(
     maybe_bcast = F.broadcast if small_pairs else (lambda df: df)
     new_ids = sig_new.select(F.col(ID).alias("id"))
     if cat.exists("clusters") or cat.exists("clusters_delta"):
-        current = read_clusters(cat, id_col=ID).withColumnRenamed(ID, "id")
+        current = read_clusters(cat).withColumnRenamed(ID, "id")
     else:
         # first batch: no stored labels, every id labels itself
         current = spark.createDataFrame([], "id string, cluster_id string")
@@ -281,8 +291,8 @@ def ingest_neardup_batch(
     # trigger and sizes go to lineage so compaction is never silent.
     delta_rows = cat.row_count("clusters_delta")
     base_rows = cat.row_count("clusters") if cat.exists("clusters") else 0
-    if delta_rows >= compact_min_rows and delta_rows >= compact_frac * base_rows:
-        compact_clusters(cat, id_col=ID)
+    if delta_rows >= compact_min_rows and delta_rows >= COMPACT_FRAC * base_rows:
+        compact_clusters(cat)
         cat.log_event(
             "clusters_compaction",
             cfg.config_hash(),
@@ -297,7 +307,7 @@ def ingest_neardup_batch(
     )
 
 
-def read_clusters(cat, id_col: str = "url") -> DataFrame:
+def read_clusters(cat) -> DataFrame:
     """Current cluster assignment = MERGE-ON-READ over base + delta, with
     precedence resolved DELTA-SIDE ONLY (VERDICT r4 item 3): the latest
     (max batch_id) row per id within ``clusters_delta`` wins via a
@@ -312,32 +322,32 @@ def read_clusters(cat, id_col: str = "url") -> DataFrame:
     has_delta = cat.exists("clusters_delta")
     if not has_base and not has_delta:
         raise ValueError("catalog has no clusters/clusters_delta table")
-    base = cat.read("clusters").select(id_col, "cluster_id") if has_base else None
+    base = cat.read("clusters").select(ID, "cluster_id") if has_base else None
     if not has_delta:
         return base
 
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy(ID).orderBy(
         F.col("batch_id").desc(), F.col("cluster_id").asc()
     )
     delta_latest = (
         cat.read("clusters_delta")
-        .select(id_col, "cluster_id", "batch_id")
+        .select(ID, "cluster_id", "batch_id")
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
-        .select(id_col, "cluster_id")
+        .select(ID, "cluster_id")
     )
     if base is None:
         return delta_latest
-    delta_ids = delta_latest.select(id_col)
+    delta_ids = delta_latest.select(ID)
     # footer-count byte guard (driver-side, no job): broadcast the delta id
     # set so the base anti-join stays a map-side scan; a compaction-overdue
     # delta falls back to a shuffle anti-join instead of OOMing the broadcast
     if cat.row_count("clusters_delta") * 64 < 256 * 1024 * 1024:
         delta_ids = F.broadcast(delta_ids)
-    return base.join(delta_ids, id_col, "left_anti").unionByName(delta_latest)
+    return base.join(delta_ids, ID, "left_anti").unionByName(delta_latest)
 
 
-def compact_clusters(cat, id_col: str = "url") -> None:
+def compact_clusters(cat) -> None:
     """Fold ``clusters_delta`` into the base ``clusters`` table: ONE
     corpus-sized write, run as an explicit maintenance job when the delta
     has grown (the Iceberg analog: snapshot compaction after MERGE
@@ -345,7 +355,7 @@ def compact_clusters(cat, id_col: str = "url") -> None:
     reading the old base while writing the new one is safe."""
     if not cat.exists("clusters_delta"):
         return
-    cat.write(read_clusters(cat, id_col=id_col), "clusters")
+    cat.write(read_clusters(cat), "clusters")
     cat.drop("clusters_delta")
 
 
@@ -354,7 +364,6 @@ def stream_neardup(
     input_dir: str,
     warehouse: str,
     checkpoint_dir: str,
-    cfg: DedupConfig | None = None,
     trigger_available_now: bool = True,
 ):
     """Incremental streaming near-dup: the full LSH -> verify -> CC loop as
@@ -366,7 +375,7 @@ def stream_neardup(
     """
     from image_deduplication_3m_images_spark.sources.checkpoint import make_catalog
 
-    cfg = cfg or DedupConfig()
+    cfg = DedupConfig()
     cat = make_catalog(spark, warehouse)
     pages_schema = (
         "url string, warc_ts timestamp, html binary, text string, lang string"

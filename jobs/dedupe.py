@@ -35,7 +35,8 @@ def main() -> None:
     args = ap.parse_args()
 
     from image_deduplication_3m_images_spark.config import DedupConfig
-    from image_deduplication_3m_images_spark.plans.dedupe import pipeline_summary, run_dedupe
+    from image_deduplication_3m_images_spark.operators.best import group_stats
+    from image_deduplication_3m_images_spark.plans.dedupe import run_dedupe
     from image_deduplication_3m_images_spark.session import get_spark
     from image_deduplication_3m_images_spark.sources.pages_fixture import (
         pages_distributed,
@@ -96,7 +97,7 @@ def main() -> None:
     cfg = DedupConfig(canonicalize_urls=args.canonicalize_urls)
     t0 = time.time()
     report = run_dedupe(spark, pages, args.warehouse, cfg, resume=not args.no_resume)
-    summary = pipeline_summary(report)
+    summary = group_stats(report.select("url", "cluster_id")).collect()[0].asDict()
     wall = time.time() - t0
     summary.update(
         {

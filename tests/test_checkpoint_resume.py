@@ -46,10 +46,11 @@ def test_stage_complete_requires_matching_config(spark, tmp_path, backend):
     cat = _make_cat(backend, spark, str(tmp_path / "wh"))
     df = spark.createDataFrame([(1, "a")], ["id", "v"])
     cat.write(df, "stage_x")
-    cat.log_lineage_for_table("stage_x", "stage_x", "aaaa")
-    assert cat.stage_complete("stage_x", "aaaa")
-    assert not cat.stage_complete("stage_x", "bbbb")  # drift -> recompute
-    assert not cat.stage_complete("missing_stage", "aaaa")
+    cat.log_lineage_for_table("stage_x", "stage_x", "aaaa", input_snapshot="in1")
+    assert cat.stage_complete("stage_x", "aaaa", "in1")
+    assert not cat.stage_complete("stage_x", "bbbb", "in1")  # drift -> recompute
+    assert not cat.stage_complete("stage_x", "aaaa", "in2")  # new input -> recompute
+    assert not cat.stage_complete("missing_stage", "aaaa", "in1")
 
 
 @pytest.mark.parametrize("backend", BACKENDS)
@@ -92,15 +93,31 @@ def test_config_drift_recomputes_not_resumes(spark, tmp_path):
     assert cfg2.config_hash() in hashes
 
 
-def test_extraction_audit_runs(spark, tmp_path):
+def test_new_input_files_recompute_not_resume(spark, tmp_path):
+    """Resume keys on what each stage read: a run over new parquet input in
+    an old warehouse must return that input's report (equal to a fresh
+    run), not the old one; the same input again still resumes."""
+    inputs = []
+    for n_rows, seed in ((120, 5), (200, 6)):
+        path = str(tmp_path / f"pages_{seed}")
+        pages_dataframe(spark, generate_pages(n_rows=n_rows, seed=seed)).write.parquet(path)
+        inputs.append(spark.read.parquet(path))
+
+    def report(pages, wh):
+        return sorted(map(tuple, run_dedupe(spark, pages, wh).collect()))
+
     wh = str(tmp_path / "wh")
-    fx = generate_pages(n_rows=150, seed=4)
-    pages = pages_dataframe(spark, fx)
-    run_dedupe(spark, pages, wh, DedupConfig(), validate_extraction=True)
-    cat = ParquetCatalog(spark, wh)
-    audit = cat.lineage().where(F.col("stage") == "extraction_audit").collect()
-    assert len(audit) == 1
-    assert '"mismatched_rows": 0' in audit[0]["extra"]
+    report(inputs[0], wh)
+    resumed = report(inputs[1], wh)
+    assert resumed == report(inputs[1], str(tmp_path / "fresh"))
+
+    def n_signature_rows():
+        lineage = ParquetCatalog(spark, wh).lineage()
+        return lineage.where(F.col("stage") == "signatures").count()
+
+    before = n_signature_rows()
+    assert report(spark.read.parquet(str(tmp_path / "pages_6")), wh) == resumed
+    assert n_signature_rows() == before  # resumed: no stage re-logged
 
 
 def test_corrupted_stage_recomputes_not_resumes(spark, tmp_path):
@@ -162,13 +179,13 @@ def test_stage_complete_rejects_stale_row_after_config_flipflop(
     cat = _make_cat(backend, spark, str(tmp_path / "wh"))
     cat.write(spark.createDataFrame([(1, "a")], ["id", "v"]), "stage_x")
     cat.log_lineage_for_table("stage_x", "stage_x", config_hash="aaaa")
-    assert cat.stage_complete("stage_x", "aaaa")
+    assert cat.stage_complete("stage_x", "aaaa", "")
     # config flips to B: stage recomputes, table overwritten, new row logged
     cat.write(spark.createDataFrame([(2, "b"), (3, "c")], ["id", "v"]), "stage_x")
     cat.log_lineage_for_table("stage_x", "stage_x", config_hash="bbbb")
-    assert cat.stage_complete("stage_x", "bbbb")
+    assert cat.stage_complete("stage_x", "bbbb", "")
     # config flips BACK to A: the historical A row must NOT vouch for B data
-    assert not cat.stage_complete("stage_x", "aaaa")
+    assert not cat.stage_complete("stage_x", "aaaa", "")
 
 
 def test_write_crash_window_heals_from_old_sibling(spark, tmp_path):

@@ -7,10 +7,10 @@ from __future__ import annotations
 
 from image_deduplication_3m_images_spark.functions.multimodal import (
     image_features,
-    media_dedup_candidates,
     sample_frames,
     synthetic_media,
 )
+from image_deduplication_3m_images_spark.operators.dedup import hamming_block_pairs
 
 
 def test_image_features_schema_and_determinism(spark):
@@ -30,7 +30,7 @@ def test_image_features_schema_and_determinism(spark):
 def test_media_dedup_candidates_find_planted_dups(spark):
     media = synthetic_media(spark, n_rows=60, seed=42).cache()
     feats = image_features(media).cache()
-    pairs = media_dedup_candidates(feats).collect()
+    pairs = hamming_block_pairs(feats, "phash64", "media_id", radius=3).collect()
     # synthetic_media plants exact payload copies every 7th row
     assert len(pairs) >= 1
     by_hash = {}

@@ -1,12 +1,17 @@
 """Guard against test-only variants: every top-level function and class of
-the package must be referenced by the program itself, not only by tests.
+the package must be referenced by the program itself, not only by tests,
+and every defaulted parameter of a top-level package function must be set
+by at least one program call.
 
 Pure ``ast`` scan, no Spark session.  A reference is a name, an attribute,
 an import or a string constant equal to the name (string constants count
-because perfbench's tracer patches functions by name).  Program files are
-the package, ``jobs/``, ``tools/``, ``perfbench/`` without its tests,
+because perfbench's tracer patches functions by name).  A parameter is set
+when a call to a function of that name passes it by keyword or by position
+(``*args`` / ``**kwargs`` count as setting every parameter).  Program files
+are the package, ``jobs/``, ``tools/``, ``perfbench/`` without its tests,
 ``BENCH/``, ``bench*.py`` and ``__spark_entry__.py``.  ``oracles.py`` is
-frozen, so its definitions are not checked (its references still count).
+frozen, so its definitions are not checked (its references and calls still
+count).
 """
 
 from __future__ import annotations
@@ -26,6 +31,17 @@ ALLOWLIST = {
     "jaccard_est": "pure-Python reference implementation the kernels are tested against",
     "_fingerprints_one": "pure-Python reference implementation the kernels are tested against",
     "synthetic_media": "seeded test input for the multimodal operators",
+}
+
+# (function, parameter) -> why its default may stay although no program call
+# sets it: each forces the other production branch in a test
+PARAM_ALLOWLIST = {
+    ("connected_components", "max_local_edges"): "test hook: forces the distributed CC loop",
+    ("contamination_flags", "join_threshold"): "test hook: forces the broadcast hash-join form",
+    ("hamming_block_pairs", "bucket_cap"): "test hook: forces the hot self-join tier",
+    ("hot_bucket_probe", "target_sample"): "test hook: forces the sampled probe",
+    ("duplicated_spans", "hot_cap"): "test hook: forces the star tier for hot fingerprint buckets",
+    ("shared_substring_pairs", "hot_cap"): "test hook: forces the star tier for hot fingerprint buckets",
 }
 
 
@@ -89,3 +105,68 @@ def test_every_package_definition_has_a_program_reference():
     )
     stale = [name for name in ALLOWLIST if name not in defs]
     assert not stale, f"allowlisted names no longer defined: {stale}"
+
+
+def _defaulted_params() -> dict[str, list[tuple[Path, list[str], list[str]]]]:
+    """function name -> [(path, positional parameter names, defaulted
+    parameter names)] for every top-level package function."""
+    out: dict[str, list] = {}
+    for path in sorted(PKG.rglob("*.py")):
+        if path in FROZEN:
+            continue
+        for node in _parse(path).body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a = node.args
+            positional = [x.arg for x in a.posonlyargs + a.args]
+            defaulted = positional[len(positional) - len(a.defaults):]
+            defaulted += [
+                x.arg for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+            ]
+            if defaulted:
+                out.setdefault(node.name, []).append((path, positional, defaulted))
+    return out
+
+
+def _set_params(defs: dict) -> dict[str, set[str]]:
+    """function name -> parameters some program call passes."""
+    passed: dict[str, set[str]] = {}
+    for path in _program_files():
+        for node in ast.walk(_parse(path)):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name not in defs:
+                continue
+            s = passed.setdefault(name, set())
+            star = any(isinstance(x, ast.Starred) for x in node.args)
+            for _path, positional, defaulted in defs[name]:
+                if star or any(kw.arg is None for kw in node.keywords):
+                    s.update(defaulted)
+                s.update(positional[: len(node.args)])
+            s.update(kw.arg for kw in node.keywords if kw.arg)
+    return passed
+
+
+def test_every_defaulted_parameter_is_set_by_a_program_call():
+    defs = _defaulted_params()
+    passed = _set_params(defs)
+    never = sorted(
+        f"{name}({param}) ({path.relative_to(REPO)})"
+        for name, entries in defs.items()
+        if name not in ALLOWLIST
+        for path, _positional, defaulted in entries
+        for param in defaulted
+        if param not in passed.get(name, set())
+        and (name, param) not in PARAM_ALLOWLIST
+    )
+    assert not never, (
+        "defaulted parameters no program call sets (make them constants, or "
+        f"allowlist with a reason): {never}"
+    )
+    stale = [
+        key for key in PARAM_ALLOWLIST
+        if not any(key[1] in d for _p, _pos, d in defs.get(key[0], []))
+    ]
+    assert not stale, f"allowlisted parameters no longer defaulted: {stale}"

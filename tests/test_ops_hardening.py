@@ -129,17 +129,18 @@ def test_signlsh_neardup_cache_buckets_single_kernel_pass(spark):
     import numpy as np
 
     from image_deduplication_3m_images_spark.operators.similarity import (
+        EMB_DIM,
         signlsh_neardup_pairs,
     )
 
     rng = np.random.RandomState(11)
-    base = rng.standard_normal(8)
+    base = rng.standard_normal(EMB_DIM)
     rows = []
     for i in range(24):
-        v = base + rng.standard_normal(8) * (0.05 if i % 3 == 0 else 2.0)
+        v = base + rng.standard_normal(EMB_DIM) * (0.05 if i % 3 == 0 else 2.0)
         rows.append((i, [float(x) for x in v]))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    kwargs = dict(threshold=0.3, n_planes=3, n_tables=4, dim=8)
+    kwargs = dict(threshold=0.3, n_planes=3, n_tables=4)
     plain = signlsh_neardup_pairs(emb, **kwargs)
     cached = signlsh_neardup_pairs(emb, cache_buckets=True, **kwargs)
     key = lambda r: (r["id_a"], r["id_b"], round(r["cosine"], 9))  # noqa: E731

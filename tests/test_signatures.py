@@ -28,6 +28,15 @@ def test_config_invariants():
     assert len(CFG.perm_a) == 128 == len(CFG.perm_b)
 
 
+def test_config_rejects_widths_the_kernels_do_not_compute():
+    # the SimHash kernel is 64-bit and the oracle reads simhash_bits: any
+    # other width would silently split engine from oracle
+    with pytest.raises(ValueError, match="simhash_bits"):
+        DedupConfig(simhash_bits=32)
+    with pytest.raises(ValueError, match="num_perm"):
+        DedupConfig(bands=8)
+
+
 def test_config_hash_changes_with_knobs():
     assert DedupConfig().config_hash() == DedupConfig().config_hash()
     assert DedupConfig().config_hash() != DedupConfig(shingle_k=7).config_hash()

@@ -4,7 +4,7 @@ variant (reference analog: FAISS-IVF radius search,
 
 The bucketed variant is approximate by design; these tests pin (a) its
 determinism, (b) that Hamming-1 multiprobe strictly widens the candidate
-set vs single-bucket probing, and (c) a recall floor vs brute force at the
+set vs single-bucket matches, and (c) a recall floor vs brute force at the
 pinned plane config — the quantity a 100 TB deployment tunes n_planes by.
 """
 
@@ -14,8 +14,12 @@ from pyspark.sql import functions as F
 
 from image_deduplication_3m_images_spark.plans.queries import load
 from image_deduplication_3m_images_spark.operators.similarity import (
+    EMB_DIM,
+    PLANE_SEED,
     brute_force_topk,
     cosine_expr,
+    hyperplanes,
+    make_signlsh_buckets_udf,
     signlsh_neardup_pairs,
     signlsh_topk,
 )
@@ -38,8 +42,18 @@ def test_signlsh_deterministic(spark):
 def test_multiprobe_widens_candidates(spark):
     emb = load(spark, SF, "embeddings")
     q = emb.where(F.col("vec_id") < 10)
-    single = _pairs(signlsh_topk(emb, q, k=50, n_planes=8, multiprobe=False))
-    multi = _pairs(signlsh_topk(emb, q, k=50, n_planes=8, multiprobe=True))
+    # the single-probe candidates: same bucket in the one table
+    budf = make_signlsh_buckets_udf([hyperplanes(EMB_DIM, 8, PLANE_SEED)])
+    b = emb.select("vec_id", budf("embedding")[0].alias("bucket"))
+    single = {
+        (r["query_id"], r["neighbor_id"])
+        for r in b.where(F.col("vec_id") < 10)
+        .select(F.col("vec_id").alias("query_id"), "bucket")
+        .join(b.select(F.col("vec_id").alias("neighbor_id"), "bucket"), "bucket")
+        .where(F.col("query_id") != F.col("neighbor_id"))
+        .collect()
+    }
+    multi = _pairs(signlsh_topk(emb, q, k=50, n_planes=8))
     # at k >> bucket occupancy the top-k IS the candidate set, so the
     # multiprobe result must be a strict superset on this fixture
     assert single <= multi
@@ -52,9 +66,7 @@ def test_signlsh_recall_floor(spark):
     exact = _pairs(brute_force_topk(emb, q, k=5))
     # the catalog's pinned config: 8 tables x 5 bits + Hamming-1 multiprobe,
     # sized for this fixture's neighbor similarity (cosine ~0.32)
-    approx = _pairs(
-        signlsh_topk(emb, q, k=5, n_planes=5, n_tables=8, multiprobe=True)
-    )
+    approx = _pairs(signlsh_topk(emb, q, k=5, n_planes=5, n_tables=8))
     recall = len(exact & approx) / len(exact)
     # empirically 0.98 on this fixture; 0.8 is the regression floor (and
     # the north-rule recall bar for the dedup path)

@@ -88,6 +88,24 @@ def test_stream_neardup_merges_later_duplicate_into_existing_cluster(
 
     assert partition(got) == partition(batch)
 
+def test_ingest_refuses_canonicalize_urls(spark, tmp_path):
+    """The stream keys pages by their raw url: a config asking for
+    canonical urls must fail loudly, not change only the config hash."""
+    from image_deduplication_3m_images_spark.config import DedupConfig
+    from image_deduplication_3m_images_spark.sources.checkpoint import ParquetCatalog
+    from image_deduplication_3m_images_spark.streaming.incremental import (
+        ingest_neardup_batch,
+    )
+
+    pages = pages_dataframe(spark, generate_pages(n_rows=20, seed=3))
+    cat = ParquetCatalog(spark, str(tmp_path / "wh"))
+    with pytest.raises(ValueError, match="canonicalize"):
+        ingest_neardup_batch(
+            spark, pages, 0, cat, DedupConfig(canonicalize_urls=True)
+        )
+    assert not cat.exists("signatures")
+
+
 def test_ingest_neardup_batch_replay_is_noop(spark, tmp_path):
     """foreachBatch is at-least-once: replaying a COMPLETED batch id must not
     duplicate signatures/edges or change clusters."""
@@ -218,6 +236,7 @@ def test_ingest_auto_compaction_bounds_delta(spark, tmp_path):
     from image_deduplication_3m_images_spark.plans.dedupe import run_dedupe
     from image_deduplication_3m_images_spark.sources.checkpoint import ParquetCatalog
     from image_deduplication_3m_images_spark.streaming.incremental import (
+        COMPACT_FRAC,
         ingest_neardup_batch,
         read_clusters,
     )
@@ -228,7 +247,7 @@ def test_ingest_auto_compaction_bounds_delta(spark, tmp_path):
     cfg = DedupConfig()
 
     # 4 micro-batches, compaction policy: fold whenever delta >= 1 row and
-    # >= 10% of base
+    # >= COMPACT_FRAC of base
     splits = pages.withColumn("_b", F.abs(F.hash("url")) % 4)
     for b in range(4):
         ingest_neardup_batch(
@@ -237,14 +256,13 @@ def test_ingest_auto_compaction_bounds_delta(spark, tmp_path):
             b,
             cat,
             cfg,
-            compact_frac=0.1,
             compact_min_rows=1,
         )
         # the policy bound holds after every batch: either the delta was
-        # folded away, or what remains is under 10% of the base
+        # folded away, or what remains is under COMPACT_FRAC of the base
         d = cat.row_count("clusters_delta") if cat.exists("clusters_delta") else 0
         base = cat.row_count("clusters") if cat.exists("clusters") else 0
-        assert d == 0 or d < 0.1 * base, (b, d, base)
+        assert d == 0 or d < COMPACT_FRAC * base, (b, d, base)
 
     got = {r["url"]: r["cluster_id"] for r in read_clusters(cat).collect()}
     assert len(got) == len(fx.rows)

@@ -55,7 +55,7 @@ def test_k_larger_than_some_groups(spark):
 
 def test_first_level_partitions_by_salt(spark):
     """The whole point: the first shuffle must key on (group, salt), never
-    on the group alone, so a group's rows land in n_salts tasks."""
+    on the group alone, so a group's rows land in N_SALTS tasks."""
     df = _mk(spark, [(i, "g", i) for i in range(100)])
     out = top_k_per_group(df, ["g"], [F.col("v").desc(), F.col("id").asc()], k=3)
     plan = out._jdf.queryExecution().executedPlan().toString()

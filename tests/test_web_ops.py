@@ -174,7 +174,7 @@ def test_contamination_flags_planted(spark):
     )
     rows = {
         r["doc_id"]: r
-        for r in contamination_flags(corpus, eval_df, n=5).collect()
+        for r in contamination_flags(corpus, eval_df, 6, n=5).collect()
     }
     assert rows[1]["is_contaminated"] and rows[1]["n_hits"] >= 5
     assert not rows[2]["is_contaminated"] and rows[2]["n_hits"] == 0
@@ -190,7 +190,7 @@ def test_contamination_small_eval_corpus_never_shuffles(spark):
 
     eval_df = spark.createDataFrame([(0, "a b c d e f")], ["doc_id", "text"])
     corpus = spark.createDataFrame([(1, "a b c d e f g")], ["doc_id", "text"])
-    plan = contamination_flags(corpus, eval_df)._jdf.queryExecution().executedPlan().toString()
+    plan = contamination_flags(corpus, eval_df, 2)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastExchange" in plan
     corpus_side = plan.split("BroadcastExchange", 1)[0]
     assert "Exchange" not in corpus_side, plan
@@ -207,7 +207,7 @@ def test_contamination_large_eval_uses_hash_join_narrow_exchange(spark):
     eval_df = spark.createDataFrame([(0, "a b c d e f")], ["doc_id", "text"])
     corpus = spark.createDataFrame([(1, "a b c d e f g")], ["doc_id", "text"])
     plan = (
-        contamination_flags(corpus, eval_df, join_threshold=0)
+        contamination_flags(corpus, eval_df, 2, join_threshold=0)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -240,9 +240,9 @@ def test_contamination_both_forms_identical(spark):
          (4, "tiny")],
         ["doc_id", "text"],
     )
-    a = sorted(map(tuple, contamination_flags(corpus, eval_df, n=5).collect()))
+    a = sorted(map(tuple, contamination_flags(corpus, eval_df, 14, n=5).collect()))
     b = sorted(map(tuple,
-                   contamination_flags(corpus, eval_df, n=5,
+                   contamination_flags(corpus, eval_df, 14, n=5,
                                        join_threshold=0).collect()))
     assert a == b
     assert any(r[2] for r in a) and any(not r[2] for r in a)

@@ -149,7 +149,7 @@ def main():
     from image_deduplication_3m_images_spark.plans.queries import _sig
 
     cfg = DedupConfig()
-    prof = hot_bucket_stats(_sig(spark, sf_dir), cfg, id_col="doc_id").collect()[0]
+    prof = hot_bucket_stats(_sig(spark, sf_dir), cfg).collect()[0]
     if prof["max_bucket"] > cfg.bucket_star_cap:
         sys.exit(
             f"FIXTURE INVALID FOR PARITY: max band bucket {prof['max_bucket']} "
