@@ -59,7 +59,7 @@ def candidate_pairs(
     sig_df: DataFrame,
     cfg: DedupConfig,
     id_col: str = "doc_id",
-    max_bucket_hint: int | None = None,
+    hot: bool = True,
 ) -> DataFrame:
     """Band-bucket grouping -> distinct candidate pairs (a < b).
 
@@ -71,10 +71,10 @@ def candidate_pairs(
     array iteration.  collect_list is safe ONLY because every grouped tier
     is size-bounded (see below); the unbounded mega tier never collects.
 
-    ``max_bucket_hint``: caller-supplied bucket-profile statistic (the
-    pipeline computes it for lineage anyway).  When it proves no bucket
-    exceeds the star cap, the skew machinery is skipped entirely —
-    statistics-driven plan selection.
+    ``hot``: the skew verdict of :func:`hot_bucket_probe` over the same
+    input (the pipeline logs it to lineage anyway).  ``hot=False`` skips
+    the skew machinery entirely — statistics-driven plan selection; both
+    plans give identical output when no bucket exceeds the star cap.
 
     Skew handling (the north rule's explicit requirement), three tiers by
     bucket size (hot buckets detected with a map-side-combined groupBy of
@@ -94,7 +94,7 @@ def candidate_pairs(
     Returns (id_a, id_b, n_bands) with id_a < id_b, distinct.
     """
     flat = explode_bands(sig_df, id_col)
-    if max_bucket_hint is not None and max_bucket_hint <= cfg.bucket_star_cap:
+    if not hot:
         grouped = flat.groupBy("band_id", "band_key").agg(
             F.sort_array(F.collect_list(id_col)).alias("ids")
         )
@@ -232,23 +232,3 @@ def hot_bucket_probe(
         "sample_max_bucket": sample_max,
         "hot_detected": bool(hot),
     }
-
-
-def hot_bucket_stats(sig_df: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Band-bucket size profile of a (doc_id, band_keys) frame for
-    lineage/metrics (never silent truncation — reference analog: the
-    uninstrumented bucket skip at deduplication.py:314-317).
-    """
-    return (
-        explode_bands(sig_df, "doc_id")
-        .groupBy("band_id", "band_key")
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .groupBy()
-        .agg(
-            F.count(F.lit(1)).alias("n_buckets"),
-            F.max("bucket_size").alias("max_bucket"),
-            F.sum((F.col("bucket_size") > cfg.bucket_star_cap).cast("long")).alias(
-                "n_hot_buckets"
-            ),
-        )
-    )

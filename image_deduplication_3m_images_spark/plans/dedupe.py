@@ -204,7 +204,6 @@ def run_dedupe(
             cfg,
             n_rows=cat.row_count("signatures"),
         )
-        hint = None if bucket_profile["hot_detected"] else 0
         # the pipeline reads only the pair ids: projecting away n_bands lets
         # the optimizer prune its count_distinct and that aggregate's
         # (id_a, id_b, band_id) exchange.  Readers select id_a/id_b, so
@@ -212,7 +211,7 @@ def run_dedupe(
         cands = stage(
             "candidate_pairs",
             lambda: candidate_pairs(
-                rep_bands, cfg, id_col="sid", max_bucket_hint=hint
+                rep_bands, cfg, id_col="sid", hot=bucket_profile["hot_detected"]
             ).select("id_a", "id_b"),
             cands_inputs,
             extra=bucket_profile,

@@ -14,10 +14,9 @@ module speaks a minimal catalog interface with two backends:
     rename), a snapshot id = the content fingerprint of the commit.
 
 Lineage rows (north rule: "per-partition lineage — partition id, input
-snapshot, signature config hash, pair counts"):
-
-    stage STRING, partition_id INT, rows BIGINT,
-    input_snapshot STRING, config_hash STRING, extra STRING
+snapshot, signature config hash, pair counts") hold every stage fact the
+catalog keeps, in one table: stage outputs, maintenance events and the
+stream's batch-completion markers.  ``LINEAGE_COLUMNS`` is their format.
 """
 
 from __future__ import annotations
@@ -33,10 +32,36 @@ from pyspark.sql import functions as F
 LINEAGE_TABLE = "_lineage"
 # the Spark SQL catalog an IcebergCatalog writes to
 ICEBERG_CATALOG = "local"
-_LINEAGE_SCHEMA = (
-    "stage string, partition_id int, rows long, input_snapshot string,"
-    " config_hash string, extra string"
+# (name, Spark DDL type) of each lineage column: the one definition both
+# the Spark DDL and the pyarrow schema are derived from
+LINEAGE_COLUMNS = (
+    ("stage", "string"), ("partition_id", "int"), ("rows", "long"),
+    ("input_snapshot", "string"), ("config_hash", "string"), ("extra", "string"),
 )
+_LINEAGE_SCHEMA = ", ".join(f"{n} {t}" for n, t in LINEAGE_COLUMNS)
+
+
+def _lineage_arrow_schema():
+    import pyarrow as pa
+
+    arrow = {"string": pa.string(), "int": pa.int32(), "long": pa.int64()}
+    return pa.schema([(n, arrow[t]) for n, t in LINEAGE_COLUMNS])
+
+
+def parquet_file_rows(path: str) -> list[int]:
+    """Row count of each parquet data file under ``path`` (a file or a
+    directory tree, files in sorted path order), read from the FOOTERS on
+    the driver: no Spark job, no data scan (Iceberg equivalent: manifest
+    record counts).  Files named ``_*`` or ``.*`` are not data."""
+    import pyarrow.parquet as pq
+
+    files = [path] if os.path.isfile(path) else sorted(
+        os.path.join(root, f)
+        for root, _dirs, fs in os.walk(path)
+        for f in fs
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
+    return [pq.ParquetFile(f).metadata.num_rows for f in files]
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -59,37 +84,78 @@ def make_catalog(spark: SparkSession, warehouse: str):
 
 
 class _Catalog:
-    """The resume gate both backends share; each backend supplies
-    ``exists``, ``read`` and ``snapshot_id``."""
+    """The lineage writers, reader and resume gate both backends share;
+    each backend supplies ``exists``, ``read``, ``snapshot_id``,
+    ``_file_rows`` (per-data-file row counts from metadata) and
+    ``_append_lineage`` (commit lineage rows)."""
 
-    def lineage(self) -> DataFrame:
-        return self.read(LINEAGE_TABLE)
+    def row_count(self, table: str) -> int:
+        """Committed row count from file metadata, no data scan.  Used for
+        byte-guard decisions (broadcast-or-shuffle) that previously cost a
+        full count() job per stage."""
+        return sum(self._file_rows(table))
+
+    def log_lineage_for_table(
+        self,
+        table: str,
+        stage: str,
+        config_hash: str,
+        input_snapshot: str = "",
+        extra: dict | None = None,
+    ) -> None:
+        """Per-partition lineage of a committed table: one row per data
+        file, row counts from metadata (parquet footers, Iceberg manifest
+        entries), no data scan.  ``output_snapshot`` in ``extra`` records
+        WHICH table contents the rows describe (see ``current_lineage``)."""
+        extra_json = json.dumps(
+            {**(extra or {}), "output_snapshot": self.snapshot_id(table)},
+            sort_keys=True,
+        )
+        self._append_lineage([
+            (stage, idx, n, input_snapshot, config_hash, extra_json)
+            for idx, n in enumerate(self._file_rows(table))
+        ] or [(stage, -1, 0, input_snapshot, config_hash, extra_json)])
+
+    def log_event(
+        self, stage: str, config_hash: str, extra: dict | None = None
+    ) -> None:
+        """Single lineage row for audits, counters and markers not tied to
+        a table write."""
+        self._append_lineage(
+            [(stage, -1, 0, "", config_hash, json.dumps(extra or {}, sort_keys=True))]
+        )
+
+    def lineage(self) -> list[dict]:
+        """Every lineage row, as dicts keyed by ``LINEAGE_COLUMNS``.  This
+        default collects the table through Spark (the Iceberg path);
+        ``ParquetCatalog`` reads its files on the driver instead."""
+        if not self.exists(LINEAGE_TABLE):
+            return []
+        return [r.asDict() for r in self.read(LINEAGE_TABLE).collect()]
+
+    def current_lineage(self, stage: str) -> list[dict]:
+        """The lineage rows describing table ``stage``'s CURRENT contents:
+        their ``output_snapshot`` (in ``extra``) is the table's snapshot.
+        Lineage is append-only, so after a config flip A->B->A the old A
+        rows remain while the table holds B data; a row without the key
+        (events, older warehouses) vouches for nothing."""
+        if not self.exists(stage):
+            return []
+        snap = self.snapshot_id(stage)
+        return [
+            r
+            for r in self.lineage()
+            if r["stage"] == stage
+            and json.loads(r["extra"]).get("output_snapshot") == snap
+        ]
 
     def stage_complete(self, stage: str, config_hash: str, input_snapshot: str) -> bool:
-        """Resume gate: stage output exists AND the lineage row describing
-        the table's CURRENT contents carries the same config hash and the
-        same input snapshot (what the stage read).  Hash alone is not
-        enough: lineage is append-only, so after a config flip A->B->A the
-        old A row still exists while the table holds B data — rows written
-        by ``log_lineage_for_table`` therefore carry ``output_snapshot`` in
-        their extra JSON and must match the table's current snapshot.  A
-        row without one (older warehouses) vouches for nothing: the stage
-        recomputes."""
-        if not self.exists(stage) or not self.exists(LINEAGE_TABLE):
-            return False
-        snap = self.snapshot_id(stage)
-        n = (
-            self.lineage()
-            .where(
-                (F.col("stage") == stage)
-                & (F.col("config_hash") == config_hash)
-                & (F.col("input_snapshot") == input_snapshot)
-            )
-            .where(F.get_json_object("extra", "$.output_snapshot") == snap)
-            .limit(1)
-            .count()
+        """Resume gate: a current lineage row of ``stage`` carries the same
+        config hash and the same input snapshot (what the stage read)."""
+        return any(
+            r["config_hash"] == config_hash and r["input_snapshot"] == input_snapshot
+            for r in self.current_lineage(stage)
         )
-        return n > 0
 
 
 class ParquetCatalog(_Catalog):
@@ -200,20 +266,8 @@ class ParquetCatalog(_Catalog):
         # for appended tables
         open(os.path.join(final, "_SUCCESS"), "a").close()
 
-    def row_count(self, table: str) -> int:
-        """Committed row count straight from parquet FOOTERS, driver-side —
-        no Spark job, no data scan (Iceberg equivalent: manifest record
-        counts).  Used for byte-guard decisions (broadcast-or-shuffle) that
-        previously cost a full count() job per stage."""
-        import pyarrow.parquet as pq
-
-        p = self._path(table)
-        total = 0
-        for root, _dirs, files in os.walk(p):
-            for f in files:
-                if f.endswith(".parquet") and not f.startswith(("_", ".")):
-                    total += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-        return total
+    def _file_rows(self, table: str) -> list[int]:
+        return parquet_file_rows(self._path(table))
 
     def read(self, table: str) -> DataFrame:
         # appended tables hold one committed subdir per batch
@@ -249,10 +303,21 @@ class ParquetCatalog(_Catalog):
         return hashlib.sha256(json.dumps(sorted(entries)).encode()).hexdigest()[:16]
 
     # -- lineage -----------------------------------------------------------
-    def _append_rows_local(self, rows: list[tuple], table: str) -> None:
-        """Append small driver-side row lists (lineage/events) WITHOUT a
-        Spark job: one pyarrow parquet file committed through the same
-        batch-dir rename as :meth:`append`.  Round-6 optimization — every
+    def lineage(self) -> list[dict]:
+        """Every lineage row, read on the driver with pyarrow, the same way
+        :meth:`_append_lineage` writes them: no Spark job."""
+        import pyarrow.parquet as pq
+
+        if not self.exists(LINEAGE_TABLE):
+            return []
+        return pq.read_table(
+            self._path(LINEAGE_TABLE), schema=_lineage_arrow_schema()
+        ).to_pylist()
+
+    def _append_lineage(self, rows: list[tuple]) -> None:
+        """Append driver-side lineage rows WITHOUT a Spark job: one pyarrow
+        parquet file committed through the same batch-dir rename as
+        :meth:`append`.  Round-6 optimization — every
         pipeline stage used to pay a createDataFrame + distributed-write
         job to record a handful of lineage rows; this backend is local-fs
         by construction (the Iceberg backend handles real clusters), so a
@@ -262,21 +327,12 @@ class ParquetCatalog(_Catalog):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        schema = pa.schema(
-            [
-                ("stage", pa.string()),
-                ("partition_id", pa.int32()),
-                ("rows", pa.int64()),
-                ("input_snapshot", pa.string()),
-                ("config_hash", pa.string()),
-                ("extra", pa.string()),
-            ]
-        )
+        schema = _lineage_arrow_schema()
         cols = list(zip(*rows))
         tbl = pa.table(
             {f.name: list(c) for f, c in zip(schema, cols)}, schema=schema
         )
-        final = self._path(table)
+        final = self._path(LINEAGE_TABLE)
         tmp = final + "_tmp_append_" + uuid.uuid4().hex[:8]
         os.makedirs(tmp)
         pq.write_table(tbl, os.path.join(tmp, "part-00000.parquet"))
@@ -309,52 +365,6 @@ class ParquetCatalog(_Catalog):
             )
         )
         self.append(per_part, LINEAGE_TABLE)
-
-    def log_lineage_for_table(
-        self,
-        table: str,
-        stage: str,
-        config_hash: str,
-        input_snapshot: str = "",
-        extra: dict | None = None,
-    ) -> None:
-        """Per-partition lineage from parquet FOOTERS of a committed table —
-        one row per data file, row counts read driver-side from metadata (no
-        Spark job, no data scan; Iceberg equivalent: manifest entries)."""
-        import pyarrow.parquet as pq
-
-        p = self._path(table)
-        rows = []
-        files = sorted(
-            os.path.join(root, f)
-            for root, _dirs, fs in os.walk(p)
-            for f in fs
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-        # record WHICH table contents this lineage row describes: the
-        # resume gate (stage_complete) matches it against the table's
-        # current snapshot, so a historical row from an earlier config
-        # can never vouch for data written under a different one
-        extra = dict(extra or {})
-        extra["output_snapshot"] = self.snapshot_id(table)
-        extra_json = json.dumps(extra, sort_keys=True)
-        for idx, f in enumerate(files):
-            n = pq.ParquetFile(f).metadata.num_rows
-            rows.append((stage, idx, n, input_snapshot, config_hash, extra_json))
-        if not rows:
-            rows = [(stage, -1, 0, input_snapshot, config_hash, extra_json)]
-        # rows were assembled driver-side from footers — commit them the
-        # same way, without a Spark job (see _append_rows_local)
-        self._append_rows_local(rows, LINEAGE_TABLE)
-
-    def log_event(
-        self, stage: str, config_hash: str, extra: dict | None = None
-    ) -> None:
-        """Single lineage row for audits/counters not tied to a table write."""
-        self._append_rows_local(
-            [(stage, -1, 0, "", config_hash, json.dumps(extra or {}, sort_keys=True))],
-            LINEAGE_TABLE,
-        )
 
 
 class IcebergCatalog(_Catalog):
@@ -421,48 +431,14 @@ class IcebergCatalog(_Catalog):
         ).collect()
         return str(rows[0][0]) if rows else ""
 
-    def row_count(self, table: str) -> int:
-        """Row count from the ``.files`` manifest metadata — no data scan."""
-        rows = self.spark.sql(
-            f"SELECT COALESCE(SUM(record_count), 0) AS n FROM {self._tbl(table)}.files"
-        ).collect()
-        return int(rows[0]["n"])
-
     # -- lineage ------------------------------------------------------------
-    def log_lineage_for_table(
-        self,
-        table: str,
-        stage: str,
-        config_hash: str,
-        input_snapshot: str = "",
-        extra: dict | None = None,
-    ) -> None:
-        """Per-data-file lineage from the Iceberg ``.files`` metadata table —
-        manifest record counts, no data scan (the real version of the
-        ParquetCatalog's footer read)."""
+    def _file_rows(self, table: str) -> list[int]:
+        """Per-data-file record counts from the ``.files`` manifest metadata
+        table (the real version of the ParquetCatalog's footer read)."""
         files = self.spark.sql(
             f"SELECT record_count FROM {self._tbl(table)}.files ORDER BY file_path"
         ).collect()
-        # output snapshot goes in extra (as in ParquetCatalog) — NOT into
-        # input_snapshot, which names the data a stage READ, not wrote;
-        # the backends previously diverged here (empty string vs own
-        # snapshot), mislabeling output as input on this one
-        extra = dict(extra or {})
-        extra["output_snapshot"] = self.snapshot_id(table)
-        extra_json = json.dumps(extra, sort_keys=True)
-        rows = [
-            (stage, idx, int(r["record_count"]), input_snapshot, config_hash,
-             extra_json)
-            for idx, r in enumerate(files)
-        ] or [(stage, -1, 0, input_snapshot, config_hash, extra_json)]
+        return [int(r["record_count"]) for r in files]
+
+    def _append_lineage(self, rows: list[tuple]) -> None:
         self.append(self.spark.createDataFrame(rows, _LINEAGE_SCHEMA), LINEAGE_TABLE)
-
-    def log_event(
-        self, stage: str, config_hash: str, extra: dict | None = None
-    ) -> None:
-        row = self.spark.createDataFrame(
-            [(stage, -1, 0, "", config_hash, json.dumps(extra or {}, sort_keys=True))],
-            _LINEAGE_SCHEMA,
-        )
-        self.append(row, LINEAGE_TABLE)
-

@@ -13,12 +13,16 @@ batch and streaming — the lambda-architecture killer).  Its batch body,
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from image_deduplication_3m_images_spark.config import DedupConfig
 from image_deduplication_3m_images_spark.plans.dedupe import ID
 
+# the lineage event that commits a micro-batch (its extra holds the batch id)
+BATCH_COMPLETE = "batch_complete"
 # auto-compaction folds clusters_delta into the base once the delta holds
 # at least this fraction of the base's rows (and compact_min_rows rows)
 COMPACT_FRAC = 0.5
@@ -70,18 +74,19 @@ def ingest_neardup_batch(
        ``/root/reference/pipeline.py:464-471``), and per-batch write bytes
        are proportional to the touched clusters, never the corpus.
 
-    Exactly-once: ``foreachBatch`` is at-least-once, so each completed batch
-    id is recorded in ``_batches`` and a replay of a completed batch is a
-    no-op.  A crash mid-batch may leave partial appends that the replay
-    appends again.  Those duplicates are byte-identical (the re-crawl guard
+    Exactly-once: ``foreachBatch`` is at-least-once, so the last commit of
+    a batch is a ``batch_complete`` lineage event carrying its batch id, and
+    a replay of a batch with that marker is a no-op (the check reads the
+    lineage rows; on ``ParquetCatalog`` that runs no Spark job).  A crash
+    mid-batch may leave partial appends that the replay appends again.
+    Those duplicates are byte-identical (the re-crawl guard
     keeps a url in one batch, the within-batch pick is deterministic) and
     every consumer ignores them — ``melt_assemble``'s ``max(when(...))``,
     the band join's pair ``dropDuplicates``, CC and ``read_clusters`` work
-    on sets — so nothing is de-duplicated on read.  A ``bands`` table left
-    by an older version is never read and can be deleted.
+    on sets — so nothing is de-duplicated on read.  A ``bands`` or
+    ``_batches`` table left by an older version is never read and can be
+    deleted.
     """
-    from pyspark.sql import functions as F
-
     from image_deduplication_3m_images_spark.operators.cluster import (
         connected_components,
     )
@@ -92,10 +97,12 @@ def ingest_neardup_batch(
     if cfg.canonicalize_urls:
         raise ValueError("the stream does not canonicalize urls; "
                          "set canonicalize_urls=False")
-    if cat.exists("_batches"):
-        done = {r["batch_id"] for r in cat.read("_batches").collect()}
-        if batch_id in done:
-            return
+    if any(
+        r["stage"] == BATCH_COMPLETE
+        and json.loads(r["extra"]).get("batch_id") == batch_id
+        for r in cat.lineage()
+    ):
+        return
 
     has_old = cat.exists("signatures")
     if has_old:
@@ -302,9 +309,7 @@ def ingest_neardup_batch(
                 "base_rows_before": int(base_rows),
             },
         )
-    cat.append(
-        spark.createDataFrame([(int(batch_id),)], "batch_id long"), "_batches"
-    )
+    cat.log_event(BATCH_COMPLETE, cfg.config_hash(), {"batch_id": int(batch_id)})
 
 
 def read_clusters(cat) -> DataFrame:
@@ -342,7 +347,9 @@ def read_clusters(cat) -> DataFrame:
     # footer-count byte guard (driver-side, no job): broadcast the delta id
     # set so the base anti-join stays a map-side scan; a compaction-overdue
     # delta falls back to a shuffle anti-join instead of OOMing the broadcast
-    if cat.row_count("clusters_delta") * 64 < 256 * 1024 * 1024:
+    from image_deduplication_3m_images_spark.session import broadcast_fits
+
+    if broadcast_fits(cat.spark, cat.row_count("clusters_delta") * 64):
         delta_ids = F.broadcast(delta_ids)
     return base.join(delta_ids, ID, "left_anti").unionByName(delta_latest)
 

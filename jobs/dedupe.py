@@ -109,31 +109,22 @@ def main() -> None:
         }
     )
     # per-stage walls straight from the lineage table (written by the stage
-    # wrapper) — the scaling harness uses these to attribute scaling loss
+    # wrapper) — the scaling harness uses these to attribute scaling loss.
+    # Only rows describing each table's CURRENT contents count: lineage is
+    # append-only, and a --no-resume re-run in a reused warehouse would
+    # otherwise report the max over all historical runs.
     from image_deduplication_3m_images_spark.sources.checkpoint import make_catalog
 
     cat = make_catalog(spark, args.warehouse)
-    lineage = cat.lineage()
     stage_walls: dict = {}
-    snap_cache: dict = {}
-    for r in lineage.select("stage", "extra").distinct().collect():
-        e = json.loads(r["extra"])
-        w = e.get("wall_s")
-        if w is None:
-            continue
-        # lineage is append-only: filter to the row describing the table's
-        # CURRENT snapshot, else a --no-resume re-run in a reused warehouse
-        # reports the max over ALL historical runs (stale attribution)
-        snap = e.get("output_snapshot")
-        if snap is not None:
-            # NOT setdefault(stage, cat.snapshot_id(...)): Python evaluates
-            # the default eagerly, which would fingerprint the table dir
-            # once per lineage row instead of once per stage
-            if r["stage"] not in snap_cache:
-                snap_cache[r["stage"]] = cat.snapshot_id(r["stage"])
-            if snap != snap_cache[r["stage"]]:
-                continue
-        stage_walls[r["stage"]] = max(w, stage_walls.get(r["stage"], 0.0))
+    for stage in sorted({r["stage"] for r in cat.lineage()}):
+        walls = [
+            json.loads(r["extra"]).get("wall_s")
+            for r in cat.current_lineage(stage)
+        ]
+        walls = [w for w in walls if w is not None]
+        if walls:
+            stage_walls[stage] = max(walls)
     summary["stage_walls"] = stage_walls
     print(json.dumps(summary))
     spark.stop()

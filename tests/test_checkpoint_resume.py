@@ -12,8 +12,12 @@ from pyspark.sql import functions as F
 from image_deduplication_3m_images_spark.config import DedupConfig
 from image_deduplication_3m_images_spark.plans.dedupe import run_dedupe
 from image_deduplication_3m_images_spark.sources.checkpoint import (
+    _LINEAGE_SCHEMA,
+    LINEAGE_COLUMNS,
+    LINEAGE_TABLE,
     IcebergCatalog,
     ParquetCatalog,
+    _Catalog,
     iceberg_available,
 )
 from image_deduplication_3m_images_spark.sources.pages_fixture import (
@@ -68,7 +72,7 @@ def test_atomic_overwrite_and_snapshot_changes(spark, tmp_path, backend):
 def test_log_event_row(spark, tmp_path, backend):
     cat = _make_cat(backend, spark, str(tmp_path / "wh"))
     cat.log_event("extraction_audit", "cfg1", extra={"mismatched_rows": 0})
-    rows = cat.lineage().collect()
+    rows = cat.lineage()
     assert len(rows) == 1
     assert rows[0]["stage"] == "extraction_audit"
     assert '"mismatched_rows": 0' in rows[0]["extra"]
@@ -85,10 +89,7 @@ def test_config_drift_recomputes_not_resumes(spark, tmp_path):
     r2 = run_dedupe(spark, pages, wh, cfg2)
     assert r2.count() == n1  # row preservation under both configs
     cat = ParquetCatalog(spark, wh)
-    hashes = {
-        r["config_hash"]
-        for r in cat.lineage().select("config_hash").distinct().collect()
-    }
+    hashes = {r["config_hash"] for r in cat.lineage()}
     assert DedupConfig().config_hash() in hashes
     assert cfg2.config_hash() in hashes
 
@@ -113,7 +114,7 @@ def test_new_input_files_recompute_not_resume(spark, tmp_path):
 
     def n_signature_rows():
         lineage = ParquetCatalog(spark, wh).lineage()
-        return lineage.where(F.col("stage") == "signatures").count()
+        return sum(r["stage"] == "signatures" for r in lineage)
 
     before = n_signature_rows()
     assert report(spark.read.parquet(str(tmp_path / "pages_6")), wh) == resumed
@@ -256,3 +257,82 @@ def test_failed_stage_leaves_no_cached_blocks(spark, tmp_path, monkeypatch, fail
         run_dedupe(spark, pages, str(tmp_path / "wh"), DedupConfig())
     leaked = persisted_ids() - before
     assert not leaked, f"failed run leaked cached RDD ids {sorted(leaked)}"
+
+
+def _spark_jobs(spark, fn):
+    """(Spark jobs ``fn`` launched, its result), counted with a job group of
+    its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = "jobs_" + uuid.uuid4().hex[:8]
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_parquet_catalog_metadata_runs_no_spark_job(spark, tmp_path):
+    """Catalog metadata is read and written on the driver: lineage(),
+    stage_complete, log_event, row_count and the stream's replay check of a
+    committed batch launch zero Spark jobs (a run report collected from
+    lineage adds none)."""
+    from image_deduplication_3m_images_spark.streaming.incremental import (
+        ingest_neardup_batch,
+    )
+
+    cat = ParquetCatalog(spark, str(tmp_path / "wh"))
+    cfg = DedupConfig()
+    pages = pages_dataframe(spark, generate_pages(n_rows=40, seed=17))
+    ingest_neardup_batch(spark, pages, 0, cat, cfg)
+    cat.write(spark.createDataFrame([(1, "a")], ["id", "v"]), "stage_x")
+    cat.log_lineage_for_table("stage_x", "stage_x", "aaaa", input_snapshot="in1")
+    n_sig = cat.row_count("signatures")
+
+    assert _spark_jobs(spark, cat.lineage)[0] == 0
+    assert _spark_jobs(spark, lambda: cat.stage_complete("stage_x", "aaaa", "in1")) == (0, True)
+    assert _spark_jobs(spark, lambda: cat.stage_complete("stage_x", "bbbb", "in1")) == (0, False)
+    assert _spark_jobs(spark, lambda: cat.log_event("e", "cfg1", {"n": 1})) == (0, None)
+    assert _spark_jobs(spark, lambda: cat.row_count("stage_x")) == (0, 1)
+    # the replay of a committed batch is a no-op decided from lineage
+    assert _spark_jobs(spark, lambda: ingest_neardup_batch(spark, pages, 0, cat, cfg))[0] == 0
+    assert cat.row_count("signatures") == n_sig
+
+
+def test_resumed_run_reads_tables_only(spark, tmp_path):
+    """A fully resumed run_dedupe decides every resume from lineage on the
+    driver: the Spark jobs left are the reads of its checkpointed tables
+    (the four resume gates used to run three jobs each), and its report
+    equals the fresh run's."""
+    wh = str(tmp_path / "wh")
+    pages = pages_dataframe(spark, generate_pages(n_rows=150, seed=7)).cache()
+    fresh = sorted(map(tuple, run_dedupe(spark, pages, wh).collect()))
+    n_jobs, resumed = _spark_jobs(spark, lambda: run_dedupe(spark, pages, wh))
+    assert n_jobs <= 6, n_jobs
+    assert sorted(map(tuple, resumed.collect())) == fresh
+    pages.unpersist()
+
+
+def test_spark_lineage_reader_matches_pyarrow_reader(spark, tmp_path):
+    """The shared Spark reader (the Iceberg path) returns the same rows as
+    ParquetCatalog's driver-side reader on one warehouse, including a row
+    appended through Spark with the DDL schema."""
+    cat = ParquetCatalog(spark, str(tmp_path / "wh"))
+    cat.write(spark.createDataFrame([(1, "a"), (2, "b")], ["id", "v"]), "stage_x")
+    cat.log_lineage_for_table("stage_x", "stage_x", "aaaa", input_snapshot="in1")
+    cat.log_event("batch_complete", "aaaa", {"batch_id": 3})
+    cat.append(
+        spark.createDataFrame([("s", 7, 9, "in2", "bbbb", "{}")], _LINEAGE_SCHEMA),
+        LINEAGE_TABLE,
+    )
+    names = [n for n, _ in LINEAGE_COLUMNS]
+    arrow_rows, spark_rows = cat.lineage(), _Catalog.lineage(cat)
+    assert all(list(r) == names for r in arrow_rows + spark_rows)
+
+    def key(rows):
+        return sorted(tuple(r[n] for n in names) for r in rows)
+
+    assert key(arrow_rows) == key(spark_rows)
+    assert {r["stage"] for r in arrow_rows} == {"stage_x", "batch_complete", "s"}

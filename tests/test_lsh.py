@@ -62,6 +62,34 @@ def test_mega_bucket_star_only_connected(spark):
     assert comp.count() == n
 
 
+def test_candidate_pairs_fast_path_equals_tier_plan(spark):
+    """On a skew-free input (every bucket at or below the star cap) the
+    fast plan (``hot=False``) emits exactly the tier plan's rows, n_bands
+    included.  Band 0 holds buckets of exactly the cap; the other bands
+    hold small buckets of varying sizes, so pairs share 1..n bands."""
+    n = 300
+    rows = [
+        (i, [i // CFG.bucket_star_cap] + [
+            b * 1000 + i // (2 + b % 5) for b in range(1, CFG.bands)
+        ])
+        for i in range(n)
+    ]
+    sig = spark.createDataFrame(rows, SIG_SCHEMA)
+
+    def pairs(hot):
+        return sorted(
+            tuple(r)
+            for r in candidate_pairs(sig, CFG, id_col="doc_id", hot=hot)
+            .select("id_a", "id_b", "n_bands")
+            .collect()
+        )
+
+    fast, tiered = pairs(False), pairs(True)
+    assert fast == tiered
+    assert len(fast) > 64 * 63 // 2  # the cap-sized buckets' full pairs
+    assert len({n_bands for _, _, n_bands in fast}) > 2
+
+
 def test_band_keys_deterministic(spark):
     from image_deduplication_3m_images_spark.operators.lsh import explode_bands
 

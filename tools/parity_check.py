@@ -141,21 +141,20 @@ def main():
 
     # The pair-query oracles emit FULL within-bucket O(n^2) pairs, while the
     # engine substitutes salted/star edges above bucket_star_cap — parity on
-    # those queries is only meaningful when no fixture bucket exceeds the
-    # cap.  Fail loudly here instead of letting a fixture change silently
+    # those queries is only meaningful when the engine plans the skew-free
+    # path.  The guard reads the same memoized skew verdict the catalog's
+    # candidate stage plans with, so it fails loudly exactly when the engine
+    # would take the tier plan, instead of letting a fixture change silently
     # turn hash mismatches into a head-scratcher.
-    from image_deduplication_3m_images_spark.config import DedupConfig
-    from image_deduplication_3m_images_spark.operators.lsh import hot_bucket_stats
-    from image_deduplication_3m_images_spark.plans.queries import _sig
+    from image_deduplication_3m_images_spark.plans.queries import _bucket_profile
 
-    cfg = DedupConfig()
-    prof = hot_bucket_stats(_sig(spark, sf_dir), cfg).collect()[0]
-    if prof["max_bucket"] > cfg.bucket_star_cap:
+    prof = _bucket_profile(spark, sf_dir)
+    if prof["hot_detected"]:
         sys.exit(
-            f"FIXTURE INVALID FOR PARITY: max band bucket {prof['max_bucket']} "
-            f"> bucket_star_cap {cfg.bucket_star_cap}; the engine would take "
-            "the star/salt tiers while the DuckDB oracle models full "
-            "within-bucket pairs. Shrink the fixture or raise the cap."
+            f"FIXTURE INVALID FOR PARITY: skew probe {prof} calls a band bucket "
+            "hot; the engine would take the star/salt tiers while the DuckDB "
+            "oracle models full within-bucket pairs. Shrink the fixture or "
+            "raise the cap."
         )
 
     qmap = entrymod.queries()
