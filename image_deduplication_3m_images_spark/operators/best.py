@@ -13,29 +13,42 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def pick_best(assignments: DataFrame, quality_df: DataFrame) -> DataFrame:
-    """(doc_id, cluster_id) + (doc_id, quality) -> adds quality,
-    cluster_size, is_best.
+def pick_best(
+    members: DataFrame, assignments: DataFrame, node_col: str, id_col: str
+) -> DataFrame:
+    """Members (node_col, id_col, quality) + connected-component assignments
+    (id, cluster_id) over ``node_col`` ids -> (id_col, cluster_id, quality,
+    cluster_size, is_best).
+
+    Singleton attach, cluster id, size and best pick in ONE pass: a LEFT
+    join (a node absent from ``assignments`` is its own cluster, the
+    ``attach_singletons`` rule), then one window partitioned by the
+    node-space cluster computes ``cluster_id`` = min ``id_col`` of the
+    cluster (deterministic, and invariant to how node ids were assigned),
+    ``cluster_size`` and the quality-argmax ``is_best`` together — a single
+    exchange + sort for all three.
 
     Exactly one ``is_best`` per cluster; ties broken by ascending id —
     deterministic (FIXTURES.md §4 best-pick determinism; reference tie-break
-    was dict-iteration order, a nondeterminism we fix).
-
-    LEFT join on quality: a member missing from ``quality_df`` (quality
-    computed over a filtered subset) keeps its row with NULL quality —
-    ``desc`` ordering puts NULLs last, so a quality-less member never wins
-    ``is_best`` unless the whole cluster lacks quality (then min-id wins).
-    An inner join here would silently shrink ``cluster_size`` and could
-    delete a cluster's only ``is_best`` row.
+    was dict-iteration order, a nondeterminism we fix).  ``desc`` ordering
+    puts NULL quality last, so a quality-less member never wins ``is_best``
+    unless the whole cluster lacks quality (then min-id wins).
     """
-    w = Window.partitionBy("cluster_id").orderBy(
-        F.col("quality").desc(), F.col("doc_id").asc()
+    joined = members.join(
+        assignments.withColumnRenamed("id", node_col), node_col, "left"
+    ).select(
+        id_col, "quality", F.coalesce("cluster_id", F.col(node_col)).alias("_c")
     )
-    sized = Window.partitionBy("cluster_id")
-    return (
-        assignments.join(quality_df.select("doc_id", "quality"), "doc_id", "left")
-        .withColumn("cluster_size", F.count(F.lit(1)).over(sized))
-        .withColumn("is_best", F.row_number().over(w) == 1)
+    w_sz = Window.partitionBy("_c")
+    w_rank = Window.partitionBy("_c").orderBy(
+        F.col("quality").desc(), F.col(id_col).asc()
+    )
+    return joined.select(
+        id_col,
+        F.min(id_col).over(w_sz).alias("cluster_id"),
+        "quality",
+        F.count(F.lit(1)).over(w_sz).alias("cluster_size"),
+        (F.row_number().over(w_rank) == 1).alias("is_best"),
     )
 
 

@@ -18,6 +18,7 @@ from image_deduplication_3m_images_spark.functions.text import (
     tokens_expr,
     word_ngrams_window_expr,
 )
+from image_deduplication_3m_images_spark.operators.lsh import _bucket_pairs_expr
 
 
 def exact_duplicates(df: DataFrame) -> DataFrame:
@@ -123,33 +124,20 @@ def hamming_block_pairs(
         F.posexplode(chunks).alias("chunk_id", "chunk"),
     )
 
-    # small buckets: collect_list bounded by bucket_cap, pairs expanded by a
-    # codegen'd (i < j) array expression — sort_array on (id, h) structs
-    # orders by id, so id_a < id_b holds by construction
+    # small buckets: collect_list bounded by bucket_cap, pairs expanded by
+    # the LSH stage's codegen'd (i < j) array expression — sort_array on
+    # (id, h) structs orders by id, so id_a < id_b holds by construction
     members = F.sort_array(
         F.collect_list(F.struct(F.col(id_col).alias("id"), F.col("h")))
     ).alias("members")
-    ms = F.col("members")
 
     def _expand(grouped: DataFrame) -> DataFrame:
         return grouped.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        ms,
-                        lambda x, i: F.transform(
-                            F.slice(ms, i + 2, F.size(ms)),
-                            lambda y: F.struct(
-                                x["id"].alias("id_a"),
-                                x["h"].alias("h_a"),
-                                y["id"].alias("id_b"),
-                                y["h"].alias("h_b"),
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        ).select("p.id_a", "p.h_a", "p.id_b", "p.h_b")
+            F.explode(_bucket_pairs_expr(F.col("members"))).alias("p")
+        ).select(
+            F.col("p.id_a.id").alias("id_a"), F.col("p.id_a.h").alias("h_a"),
+            F.col("p.id_b.id").alias("id_b"), F.col("p.id_b.h").alias("h_b"),
+        )
 
     if max_bucket_hint is not None and max_bucket_hint <= bucket_cap:
         # profile-proven clean corpus: one shuffle, no tier machinery

@@ -28,10 +28,8 @@ array.  Spark-first shape:
    DuckDB oracle).
 
 Scale notes: the fingerprint shuffle is ~2·chars/(window+1) longs per doc;
-a boilerplate string shared by millions of docs makes one hot bucket — the
-``max_bucket`` cap mirrors the LSH tiers (star edges preserve pair
-CONNECTIVITY for clustering use but change the exact pair set, so it is
-opt-in and lineage should record it; the default keeps exact semantics).
+a boilerplate string shared by millions of docs makes one hot bucket whose
+exact pair set is quadratic in its size.
 Reference analog: the local-keypoint exact-match verification tier
 (/root/reference/modules/deduplication.py FLANN local-feature pass),
 re-expressed as substring evidence for text.
@@ -209,51 +207,19 @@ def _shares_gram_udf(min_len: int):
     return _shares
 
 
-def _candidate_pairs(
-    fps: DataFrame, id_col: str, hot_cap: int | None = None
-) -> DataFrame:
-    """(id, fp) rows -> distinct candidate (id_a < id_b) pairs.
-
-    ``hot_cap=None`` (exact): every bucket expands to all pairs — required
-    when the EXACT pair set is the result (`shared_substring_pairs`).
-
-    ``hot_cap=K`` (star tier, the 100 TB guard): a boilerplate string shared
-    by millions of docs is ONE fingerprint bucket, and all-pairs there is
-    O(n^2) — the same failure mode the LSH stage caps (`operators/lsh.py`
-    tiers).  Buckets over K instead emit one STAR edge per member to the
-    bucket's min id.  That preserves per-doc span DETECTION whenever the
-    bucket min also carries the surrounding context (always true for
-    whole-boilerplate buckets) and component connectivity for clustering,
-    but is not the exact pair set — callers whose semantics are per-pair
-    must keep None.  Cost: one extra stats shuffle, exactly like the LSH
-    stats-driven tiering."""
-    if hot_cap is None:
-        grouped = (
-            fps.groupBy("fp")
-            .agg(F.sort_array(F.collect_set(id_col)).alias("ids"))
-            .where(F.size("ids") >= 2)
-        )
-        return (
-            grouped.select(F.explode(_bucket_pairs_expr(F.col("ids"))).alias("p"))
-            .select("p.id_a", "p.id_b")
-            .dropDuplicates(["id_a", "id_b"])
-        )
-    stats = fps.groupBy("fp").agg(
-        F.count(F.lit(1)).alias("_n"), F.min(id_col).alias("_m")
-    )
-    tagged = fps.join(stats.where(F.col("_n") >= 2), "fp")
-    small = (
-        tagged.where(F.col("_n") <= hot_cap)
-        .groupBy("fp")
+def _candidate_pairs(fps: DataFrame, id_col: str) -> DataFrame:
+    """(id, fp) rows -> distinct candidate (id_a < id_b) pairs: every
+    bucket expands to all pairs, so the EXACT pair set is the result."""
+    grouped = (
+        fps.groupBy("fp")
         .agg(F.sort_array(F.collect_set(id_col)).alias("ids"))
-        .select(F.explode(_bucket_pairs_expr(F.col("ids"))).alias("p"))
+        .where(F.size("ids") >= 2)
+    )
+    return (
+        grouped.select(F.explode(_bucket_pairs_expr(F.col("ids"))).alias("p"))
         .select("p.id_a", "p.id_b")
+        .dropDuplicates(["id_a", "id_b"])
     )
-    hot = (
-        tagged.where((F.col("_n") > hot_cap) & (F.col(id_col) != F.col("_m")))
-        .select(F.col("_m").alias("id_a"), F.col(id_col).alias("id_b"))
-    )
-    return small.unionByName(hot).dropDuplicates(["id_a", "id_b"])
 
 
 def _pairs_with_texts(
@@ -309,7 +275,6 @@ def duplicated_spans(
     window: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hot_cap: int | None = None,
 ) -> DataFrame:
     """Span-level duplication (the actual Lee et al. 2022 deliverable):
     per doc, the MERGED character ranges covered by >= ``min_len``-char
@@ -324,15 +289,11 @@ def duplicated_spans(
     (doc, pos) -> interval merge with two JVM window passes (running max of
     pos+min_len flags island starts; running sum numbers islands).  Window
     partitions are per-doc and bounded by doc length, so no skew risk
-    beyond the corpus's max doc length.
-
-    ``hot_cap`` (opt-in): star-tier huge fingerprint buckets (see
-    ``_candidate_pairs``) — span detection in a hot bucket is then
-    evidenced against the bucket's min-id doc only."""
+    beyond the corpus's max doc length."""
     from pyspark.sql import Window
 
     fps = winnowed_fingerprints(docs, min_len, window, id_col, text_col)
-    cand = _candidate_pairs(fps, id_col, hot_cap)  # id_a < id_b: b-side spans
+    cand = _candidate_pairs(fps, id_col)  # id_a < id_b: b-side spans
     withtext = _pairs_with_texts(cand, docs.select(id_col, text_col), id_col, text_col)
     positions = _shared_positions_udf(min_len)
     pos = (
@@ -421,18 +382,11 @@ def remove_duplicated_spans(
     )
 
 
-def shared_substring_pairs(
-    docs: DataFrame, min_len: int = 40, hot_cap: int | None = None
-) -> DataFrame:
+def shared_substring_pairs(docs: DataFrame, min_len: int = 40) -> DataFrame:
     """EXACT (id_a < id_b) pairs of (doc_id, text) docs sharing a verbatim
-    substring of >= ``min_len`` characters (winnowing window 8) — with
-    ``hot_cap=None``, the default.
-    ``hot_cap=K`` star-tiers oversize fingerprint buckets (see
-    ``_candidate_pairs``): connectivity-preserving for clustering use, but
-    no longer the exact pair set, so leave None when per-pair semantics
-    matter."""
+    substring of >= ``min_len`` characters (winnowing window 8)."""
     fps = winnowed_fingerprints(docs, min_len, 8, "doc_id", "text")
-    cand = _candidate_pairs(fps, "doc_id", hot_cap)
+    cand = _candidate_pairs(fps, "doc_id")
     withtext = _pairs_with_texts(
         cand, docs.select("doc_id", "text"), "doc_id", "text"
     )

@@ -32,6 +32,7 @@ from image_deduplication_3m_images_spark.functions.text import (
     sha256_expr,
     with_quality,
 )
+from image_deduplication_3m_images_spark.operators.best import pick_best
 from image_deduplication_3m_images_spark.operators.cluster import connected_components
 from image_deduplication_3m_images_spark.operators.lsh import (
     candidate_pairs,
@@ -133,12 +134,22 @@ def run_dedupe(
     def reads(*tables: str) -> str:
         return ",".join(f"{t}={cat.snapshot_id(t)}" for t in tables)
 
-    def stage(name: str, builder, inputs: str, extra: dict | None = None) -> DataFrame:
+    def stage(
+        name: str, builder, inputs: str, extra: dict | None = None,
+        release: list | None = None,
+    ) -> DataFrame:
+        """Resume ``name`` or build, write and log it.  ``extra`` is read
+        after the builder returns, so a builder may fill it; frames the
+        builder appends to ``release`` are unpersisted once the table is
+        written, or when building or writing fails."""
         if resume and cat.stage_complete(name, chash, inputs):
             return cat.read(name)
         t0 = time.time()
-        df = builder()
-        cat.write(df, name)
+        try:
+            cat.write(builder(), name)
+        finally:
+            for df in release or []:
+                df.unpersist(blocking=False)
         out = cat.read(name)
         # lineage from parquet footers: no extra scan of the fresh table
         cat.log_lineage_for_table(
@@ -187,35 +198,34 @@ def run_dedupe(
         .select("sid", "band_keys")
     )
 
-    cands_inputs = reads("signatures")
-    if resume and cat.stage_complete("candidate_pairs", chash, cands_inputs):
-        cands = cat.read("candidate_pairs")
-    else:
-        # sampled band-bucket skew probe: drives plan selection (with no hot
-        # buckets the skew tiers are skipped — stats-driven physical plan
-        # choice) and goes into lineage so hot-key starring is never silent
-        # (reference's bucket skip was, deduplication.py:314-317).  Sampled
-        # because the exact profile duplicated the candidate stage's
-        # heaviest shuffle just to pick the plan (see hot_bucket_probe).
-        # The probe collapses its own narrow input, so rep_bands stays an
-        # unpersisted one-consumer frame.
-        bucket_profile = hot_bucket_probe(
+    # sampled band-bucket skew probe: drives plan selection (with no hot
+    # buckets the skew tiers are skipped — stats-driven physical plan
+    # choice) and goes into lineage so hot-key starring is never silent
+    # (reference's bucket skip was, deduplication.py:314-317).  Sampled
+    # because the exact profile duplicated the candidate stage's heaviest
+    # shuffle just to pick the plan (see hot_bucket_probe).  The probe
+    # collapses its own narrow input, so rep_bands stays an unpersisted
+    # one-consumer frame.  It runs inside the builder, so a resumed stage
+    # never pays it.
+    bucket_profile: dict = {}
+
+    def _candidates() -> DataFrame:
+        bucket_profile.update(hot_bucket_probe(
             signatures.select("sid", "text_sha256", "band_keys"),
             cfg,
             n_rows=cat.row_count("signatures"),
-        )
+        ))
         # the pipeline reads only the pair ids: projecting away n_bands lets
         # the optimizer prune its count_distinct and that aggregate's
         # (id_a, id_b, band_id) exchange.  Readers select id_a/id_b, so
         # tables written with n_bands still resume.
-        cands = stage(
-            "candidate_pairs",
-            lambda: candidate_pairs(
-                rep_bands, cfg, id_col="sid", hot=bucket_profile["hot_detected"]
-            ).select("id_a", "id_b"),
-            cands_inputs,
-            extra=bucket_profile,
-        )
+        return candidate_pairs(
+            rep_bands, cfg, id_col="sid", hot=bucket_profile["hot_detected"]
+        ).select("id_a", "id_b")
+
+    cands = stage(
+        "candidate_pairs", _candidates, reads("signatures"), extra=bucket_profile
+    )
 
     # Verification: the pairs table is usually tiny relative to the corpus —
     # broadcast it so the signatures side is filtered MAP-SIDE (no wide
@@ -239,33 +249,29 @@ def run_dedupe(
     est_bytes = n_pairs * 96
     small_pairs = broadcast_fits(spark, est_bytes)
     pairs_in = F.broadcast(cands) if small_pairs else cands
-    _vp_release: list = []
-    try:
-        verified = stage(
-            "verified_pairs",
-            lambda: verify_pairs(
-                pairs_in,
-                signatures,
-                cfg,
-                id_col="sid",
-                # when pairs are broadcastable, verify runs its two-pass plan:
-                # the corpus-wide table never shuffles and only the
-                # sim-failing residue pays a text assembly (see verify.py).
-                # The checkpointed `containment` column is therefore the
-                # rescue verdict (False for sim-passing pairs); `verified` is
-                # identical to the two-join plan.
-                prefilter_broadcast=small_pairs,
-                release=_vp_release,
-            ),
-            reads("signatures", "candidate_pairs"),
-        )
-    finally:
-        # the stage is checkpointed (written + re-read), or it failed:
-        # verify's internal pass-A cache is dead weight either way — without
-        # this, every run_dedupe call on a long-lived driver leaks one
-        # cached frame
-        for _df in _vp_release:
-            _df.unpersist(blocking=False)
+    # verify's internal pass-A cache is dead weight once the stage is
+    # written (or failed): stage() releases it — without that, every
+    # run_dedupe call on a long-lived driver leaks one cached frame
+    vp_release: list = []
+    verified = stage(
+        "verified_pairs",
+        lambda: verify_pairs(
+            pairs_in,
+            signatures,
+            cfg,
+            id_col="sid",
+            # when pairs are broadcastable, verify runs its two-pass plan:
+            # the corpus-wide table never shuffles and only the sim-failing
+            # residue pays a text assembly (see verify.py).  The
+            # checkpointed `containment` column is therefore the rescue
+            # verdict (False for sim-passing pairs); `verified` is
+            # identical to the two-join plan.
+            prefilter_broadcast=small_pairs,
+            release=vp_release,
+        ),
+        reads("signatures", "candidate_pairs"),
+        release=vp_release,
+    )
 
     # Reliable checkpoints only help when executors can die independently of
     # the driver; on local[*] masters (single JVM) localCheckpoint is equally
@@ -299,29 +305,10 @@ def run_dedupe(
         # (localCheckpoint blocks live only on executors).  CC runs entirely
         # in sid space: every iteration shuffles (long, long) rows.
         assignments = connected_components(edges, checkpoint_dir=cc_ckpt_dir)
-        # Map back to urls + singleton attach + best pick in ONE pass:
-        # left join (the attach_singletons definition inlined — absent sid
-        # keeps itself as cluster) on the narrow (sid, url, quality)
-        # projection, then one window partitioning by the sid-space cluster
-        # computes min(url) (the deterministic, sid-assignment-invariant
-        # final cluster id), cluster_size, and the quality-argmax is_best
-        # together — a single exchange+sort for all three.
-        m = signatures.select("sid", ID, "quality")
-        joined = m.join(
-            assignments.withColumnRenamed("id", "sid"), "sid", "left"
-        ).select(
-            ID, "quality", F.coalesce("cluster_id", F.col("sid")).alias("csid")
-        )
-        w_sz = Window.partitionBy("csid")
-        w_rank = Window.partitionBy("csid").orderBy(
-            F.col("quality").desc(), F.col(ID).asc()
-        )
-        return joined.select(
-            ID,
-            F.min(ID).over(w_sz).alias("cluster_id"),
-            "quality",
-            F.count(F.lit(1)).over(w_sz).alias("cluster_size"),
-            (F.row_number().over(w_rank) == 1).alias("is_best"),
+        # map back to urls + singleton attach + best pick in ONE window
+        # pass; min(url) per sid-space cluster is the final cluster id
+        return pick_best(
+            signatures.select("sid", ID, "quality"), assignments, "sid", ID
         )
 
     # CC + singleton attach + url map-back + best pick fused into ONE

@@ -429,9 +429,9 @@ def q_dup_clusters(spark, sf_dir):
 
 
 def q_best_pick(spark, sf_dir):
-    clusters = q_dup_clusters(spark, sf_dir)
+    clusters = q_dup_clusters(spark, sf_dir).withColumnRenamed("doc_id", "id")
     quality = q_quality(spark, sf_dir)
-    return pick_best(clusters, quality).select(
+    return pick_best(quality, clusters, "doc_id", "doc_id").select(
         "doc_id",
         "cluster_id",
         "quality",

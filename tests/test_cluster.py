@@ -5,6 +5,8 @@ variants at /root/reference/modules/deduplication.py:284-346,454-481.
 
 from __future__ import annotations
 
+import os
+
 from image_deduplication_3m_images_spark.operators.cluster import (
     attach_singletons,
     connected_components,
@@ -108,7 +110,9 @@ def test_cc_local_finish_matches_loop(spark):
 
 def test_connected_components_reliable_checkpoint_same_result(spark, tmp_path):
     """checkpoint_dir variant (the real-cluster path) must produce identical
-    assignments to the localCheckpoint default."""
+    assignments to the localCheckpoint default.  ``max_local_edges=0``
+    forces the distributed loop, the only path that checkpoints; the
+    directory holding files afterwards proves the reliable checkpoint ran."""
     from image_deduplication_3m_images_spark.operators.cluster import (
         connected_components,
     )
@@ -120,10 +124,12 @@ def test_connected_components_reliable_checkpoint_same_result(spark, tmp_path):
     base = {
         (r["id"], r["cluster_id"]) for r in connected_components(edges).collect()
     }
+    ckpt_dir = tmp_path / "cc_ckpt"
     reliable = {
         (r["id"], r["cluster_id"])
         for r in connected_components(
-            edges, checkpoint_dir=str(tmp_path / "cc_ckpt")
+            edges, checkpoint_dir=str(ckpt_dir), max_local_edges=0
         ).collect()
     }
     assert base == reliable
+    assert [f for _, _, files in os.walk(ckpt_dir) for f in files]

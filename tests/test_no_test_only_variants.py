@@ -40,8 +40,6 @@ PARAM_ALLOWLIST = {
     ("contamination_flags", "join_threshold"): "test hook: forces the broadcast hash-join form",
     ("hamming_block_pairs", "bucket_cap"): "test hook: forces the hot self-join tier",
     ("hot_bucket_probe", "target_sample"): "test hook: forces the sampled probe",
-    ("duplicated_spans", "hot_cap"): "test hook: forces the star tier for hot fingerprint buckets",
-    ("shared_substring_pairs", "hot_cap"): "test hook: forces the star tier for hot fingerprint buckets",
 }
 
 

@@ -190,6 +190,92 @@ def test_ingest_neardup_delta_proportional_to_touched_cluster(spark, tmp_path):
     assert after == got
 
 
+def _bridge_pages(spark):
+    """Five pages: clusters {a0, a1} and {b0, b1}, and a bridge page ``c``.
+    ``c``'s text is contained in a1's and in b1's (each adds its own 40
+    tokens) and shares a band with each; a0 and b0 edit three tokens of
+    ``c``'s run, so neither contains it.  With these tokens no a-page shares
+    a band with a b-page, and neither a0 nor b0 shares one with ``c`` (the
+    test asserts the edges this gives)."""
+    import random
+    from datetime import datetime
+
+    from image_deduplication_3m_images_spark.sources.pages_fixture import (
+        expected_text,
+        render_html,
+    )
+
+    rng = random.Random(12)
+
+    def words(n):
+        return [f"w{rng.randrange(100000)}" for _ in range(n)]
+
+    def edit(toks, positions):
+        out = list(toks)
+        for p in positions:
+            out[p] = f"e{rng.randrange(100000)}"
+        return out
+
+    core, extra_a, extra_b = words(120), words(40), words(40)
+    bodies = {
+        "a0": edit(core, (20, 60, 100)) + extra_a,
+        "a1": core + extra_a,
+        "b0": edit(core, (30, 70, 110)) + extra_b,
+        "b1": core + extra_b,
+        "c": core,
+    }
+    ts = datetime(2024, 1, 1)
+    rows = [
+        (url, ts, render_html("bridge page", " ".join(b)),
+         expected_text("bridge page", " ".join(b)), "en")
+        for url, b in bodies.items()
+    ]
+    return spark.createDataFrame(
+        rows, "url string, warc_ts timestamp, html binary, text string, lang string"
+    )
+
+
+def test_ingest_bridge_page_merges_two_stored_clusters(spark, tmp_path):
+    """A new page that verifies against a non-label page of each of two
+    stored clusters merges them: every member ends under the smaller label,
+    the batch rewrites only the members of the cluster whose label moved
+    (plus the page itself), and the partition equals the batch pipeline's."""
+    from image_deduplication_3m_images_spark.config import DedupConfig
+    from image_deduplication_3m_images_spark.plans.dedupe import run_dedupe
+    from image_deduplication_3m_images_spark.sources.checkpoint import ParquetCatalog
+    from image_deduplication_3m_images_spark.streaming.incremental import (
+        ingest_neardup_batch,
+    )
+
+    pages = _bridge_pages(spark)
+    cfg = DedupConfig()
+    cat = ParquetCatalog(spark, str(tmp_path / "wh"))
+    ingest_neardup_batch(spark, pages.where(F.col("url") != "c"), 0, cat, cfg)
+    # precondition 1: batch 0 stores two separate two-page clusters
+    assert dict(_sorted_clusters(cat)) == {
+        "a0": "a0", "a1": "a0", "b0": "b0", "b1": "b0",
+    }
+
+    ingest_neardup_batch(spark, pages.where(F.col("url") == "c"), 1, cat, cfg)
+    # precondition 2: the page verifies against one non-label page of each
+    edges1 = {
+        (r["id_a"], r["id_b"])
+        for r in cat.read("edges").where("batch_id = 1").collect()
+    }
+    assert edges1 == {("a1", "c"), ("b1", "c")}
+
+    got = dict(_sorted_clusters(cat))
+    assert got == {u: "a0" for u in ("a0", "a1", "b0", "b1", "c")}
+    delta1 = {
+        (r["url"], r["cluster_id"])
+        for r in cat.read("clusters_delta").where("batch_id = 1").collect()
+    }
+    assert delta1 == {("b0", "a0"), ("b1", "a0"), ("c", "a0")}
+
+    batch = run_dedupe(spark, pages, str(tmp_path / "wh_batch"))
+    assert {r["url"]: r["cluster_id"] for r in batch.collect()} == got
+
+
 def test_read_clusters_plan_has_no_corpus_exchange(spark, tmp_path):
     """VERDICT r4 item 3's done-criterion: the merge-on-read resolution must
     shuffle ONLY the delta — the corpus-sized base is scanned (anti-join

@@ -186,36 +186,6 @@ def test_remove_duplicated_spans_cuts_exactly(spark):
     assert got[3] == rows[2][1]        # loner untouched (JVM-only path)
 
 
-def test_hot_cap_star_tier_preserves_detection_and_connectivity(spark):
-    """A boilerplate string shared by 30 docs is one hot fingerprint bucket;
-    with hot_cap=5, pairs collapse to a star on the bucket min — every doc
-    must still be span-detected (against the min) and the component must
-    stay connected, while the pair count drops from O(n^2) to O(n)."""
-    from image_deduplication_3m_images_spark.operators.substring import (
-        duplicated_spans,
-    )
-
-    rng = random.Random(29)
-    boiler = _rand_text(rng, 80)
-    rows = [(i, _rand_text(rng, 20) + boiler + _rand_text(rng, 20))
-            for i in range(30)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-
-    exact = shared_substring_pairs(df, MIN_LEN).collect()
-    star = shared_substring_pairs(df, MIN_LEN, hot_cap=5).collect()
-    assert len(exact) == 30 * 29 // 2
-    # winnow selection differs per doc, so hot buckets are SUBSETS with
-    # different mins — still O(n) star edges overall vs O(n^2) exact pairs
-    assert 29 <= len(star) <= len(exact) // 3
-    assert {r["id_a"] for r in star} | {r["id_b"] for r in star} == set(range(30))
-
-    spans = duplicated_spans(df, MIN_LEN, hot_cap=5).collect()
-    # every doc except the bucket min (first occurrence) is span-detected
-    assert {r["doc_id"] for r in spans} == set(range(1, 30))
-    for r in spans:
-        assert r["span_len"] >= 80
-
-
 def test_fingerprint_density_and_determinism():
     s = "the quick brown fox jumps over the lazy dog " * 20
     a = _fingerprints_one(s, 33, 8)
