@@ -249,10 +249,21 @@ def _cc_local(pdf, schema, spark) -> DataFrame:
     path-halving union-find and returns the SAME (id, cluster_id) frame
     the distributed loop would — cluster_id = min member id, only
     edge-touched nodes present.  Works for any orderable id type (the
-    loop's contract); collection size is pre-guarded by the caller."""
+    loop's contract); collection size is pre-guarded by the caller.
+
+    The result goes back as a pandas frame, which Arrow turns into a
+    JVM-side local table: a list of tuples would plan a scan of pickled
+    rows, and every consumer would re-run Python workers to read it."""
+    import pandas as pd
     from pyspark.sql.types import StructField, StructType
 
     a_type = schema["id_a"].dataType
+    if pdf.empty:
+        # an empty pandas frame falls back to the pickled-row scan
+        return spark.range(0).select(
+            F.col("id").cast(a_type).alias("id"),
+            F.col("id").cast(a_type).alias("cluster_id"),
+        )
     parent: dict = {}
 
     def find(x):
@@ -272,7 +283,9 @@ def _cc_local(pdf, schema, spark) -> DataFrame:
             # final labels are deterministic for any edge arrival order
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
-    out = [(node, find(node)) for node in parent]
+    out = pd.DataFrame(
+        {"id": list(parent), "cluster_id": [find(node) for node in parent]}
+    )
     out_schema = StructType(
         [StructField("id", a_type, False), StructField("cluster_id", a_type, False)]
     )

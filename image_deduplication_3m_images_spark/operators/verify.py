@@ -44,10 +44,9 @@ def melt_assemble(
     non-broadcast fallback is the plain two-join path in join_signatures.
 
     ``max(when(...))`` per side is exact: each (id_a, id_b, side) group has
-    one payload row (or byte-identical copies of it, which a streaming
-    crash-replay can leave), so max just selects it —
-    and Max is a declarative spill-safe aggregate for every payload type
-    used here (binary / long / string / array).
+    one payload row, so max just selects it — and Max is a declarative
+    spill-safe aggregate for every payload type used here (binary / long /
+    string / array).
     """
     m = pairs.select(
         F.explode(
@@ -159,6 +158,17 @@ def _contains():
     )
 
 
+def verdict(assembled: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """The pair verdict over assembled sides: ``minhash_bin``, ``simhash``
+    and ``text`` as ``<col>_a``/``<col>_b`` (all three tests are symmetric,
+    so which side is which does not matter) -> (id_a, id_b, sig_matches,
+    hamming, containment, verified)."""
+    out = assembled.select(
+        "id_a", "id_b", *_evidence(), _contains().alias("containment")
+    )
+    return out.withColumn("verified", _sim_ok(cfg) | F.col("containment"))
+
+
 def verify_pairs(
     pairs: DataFrame,
     sig_df: DataFrame,
@@ -198,9 +208,7 @@ def verify_pairs(
         return _verify_deferred(pairs, sig_df, cfg, id_col, release=release)
     # one join per side carrying signatures AND text together — half the
     # shuffles of separate signature/text joins
-    joined = join_signatures(pairs, sig_df, id_col)
-    out = joined.select("id_a", "id_b", *_evidence(), _contains().alias("containment"))
-    return out.withColumn("verified", _sim_ok(cfg) | F.col("containment"))
+    return verdict(join_signatures(pairs, sig_df, id_col), cfg)
 
 
 def _verify_deferred(

@@ -55,13 +55,30 @@ def parquet_file_rows(path: str) -> list[int]:
     record counts).  Files named ``_*`` or ``.*`` are not data."""
     import pyarrow.parquet as pq
 
-    files = [path] if os.path.isfile(path) else sorted(
+    return [pq.ParquetFile(f).metadata.num_rows for f in _data_files(path)]
+
+
+def _data_files(path: str) -> list[str]:
+    return [path] if os.path.isfile(path) else sorted(
         os.path.join(root, f)
         for root, _dirs, fs in os.walk(path)
         for f in fs
         if f.endswith(".parquet") and not f.startswith(("_", "."))
     )
-    return [pq.ParquetFile(f).metadata.num_rows for f in files]
+
+
+def _spark_row_schema(path: str):
+    """The Spark schema a Spark writer stored in the footer of the first
+    data file under ``path`` (the ``org.apache.spark.sql.parquet.row.metadata``
+    key, the one Spark's own schema inference reads), read on the driver;
+    None when there is no such file or key (a pyarrow-written table)."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    files = _data_files(path)
+    meta = pq.read_metadata(files[0]).metadata if files else None
+    row = (meta or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+    return StructType.fromJson(json.loads(row)) if row else None
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -270,11 +287,15 @@ class ParquetCatalog(_Catalog):
         return parquet_file_rows(self._path(table))
 
     def read(self, table: str) -> DataFrame:
-        # appended tables hold one committed subdir per batch
+        # appended tables hold one committed subdir per batch.  Handing
+        # Spark the footer's schema saves the one-task schema-inference job
+        # every read would otherwise launch.
         self._heal(table)
-        return self.spark.read.option("recursiveFileLookup", "true").parquet(
-            self._path(table)
-        )
+        reader = self.spark.read.option("recursiveFileLookup", "true")
+        schema = _spark_row_schema(self._path(table))
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(self._path(table))
 
     def drop(self, table: str) -> None:
         # remove crash-leftover siblings too: a surviving _old_ dir would

@@ -56,12 +56,17 @@ def ingest_neardup_batch(
        the batch (first-write-wins),
     1. sign the new pages (same ``build_signatures`` as the batch pipeline —
        one code path),
-    2. band them and join against the stored signatures' ``band_keys``
-       (exploded on read); the new side is tiny, so it broadcasts and the
-       corpus band keys explode map-side (no corpus shuffle).  Every emitted
-       pair touches >= 1 new doc, so no pair is re-verified across batches,
-    3. verify with the same ``verify_pairs`` as the batch pipeline (its
-       two-pass plan when the byte guard lets the pair set broadcast),
+    2. band them and probe the stored signatures with them: when the
+       batch's band rows and payload fit the broadcast guard, ONE map-side
+       pass over stored signatures ∪ batch explodes the band keys against
+       the broadcast batch band rows, attaches the broadcast batch payload,
+       keeps each pair once (at its first shared band; a new-new pair from
+       one end) and computes ``verify.verdict`` on it — the corpus is read
+       once and never shuffled.  Every emitted pair touches >= 1 new doc,
+       so no pair is re-verified across batches,
+    3. a batch too big to broadcast (a backlog delivered as one batch)
+       takes shuffle joins instead: band join -> distinct pairs ->
+       ``verify_pairs``' two-join plan,
     4. append new signatures/edges, then maintain clusters
        INCREMENTALLY: run CC once over the new edges plus one label edge
        (stored cluster id, page) per touched stored page (a batch-sized
@@ -82,8 +87,8 @@ def ingest_neardup_batch(
     mid-batch may leave partial appends that the replay appends again.
     Those duplicates are byte-identical (the re-crawl guard
     keeps a url in one batch, the within-batch pick is deterministic) and
-    every consumer ignores them — ``melt_assemble``'s ``max(when(...))``,
-    the band join's pair ``dropDuplicates``, CC and ``read_clusters`` work
+    every consumer ignores them — the verified edges' ``dropDuplicates``,
+    the fallback's pair ``dropDuplicates``, CC and ``read_clusters`` work
     on sets — so nothing is de-duplicated on read.  A ``bands`` or
     ``_batches`` table left by an older version is never read and can be
     deleted.
@@ -93,7 +98,10 @@ def ingest_neardup_batch(
         connected_components,
     )
     from image_deduplication_3m_images_spark.operators.lsh import explode_bands
-    from image_deduplication_3m_images_spark.operators.verify import verify_pairs
+    from image_deduplication_3m_images_spark.operators.verify import (
+        verdict,
+        verify_pairs,
+    )
     from image_deduplication_3m_images_spark.plans.dedupe import build_signatures
 
     if cfg.canonicalize_urls:
@@ -146,7 +154,12 @@ def ingest_neardup_batch(
         F.xxhash64(F.col("text")).asc_nulls_first(),
     )
     batch_df = (
-        batch_df.withColumn("_rn", F.row_number().over(w_dedup))
+        # an explicit partition count, which AQE does not coalesce and the
+        # window reuses: left to AQE, the window's tiny exchange shrinks to
+        # one partition and the fused html->signature UDF below signs the
+        # whole batch in one task
+        batch_df.repartition(spark.sparkContext.defaultParallelism, ID)
+        .withColumn("_rn", F.row_number().over(w_dedup))
         .where(F.col("_rn") == 1)
         .drop("_rn")
     )
@@ -154,78 +167,102 @@ def ingest_neardup_batch(
     sig_new = (
         build_signatures(batch_df, cfg)
         .withColumn("batch_id", F.lit(batch_id))
-        # lazy: the count below materializes the checkpoint in the same
-        # job (used 4x below; batch-sized, not corpus-sized)
+        # lazy: the size aggregate below materializes the checkpoint in the
+        # same job (batch-sized, not corpus-sized)
         .localCheckpoint(eager=False)
     )
-    n_new = sig_new.count()
-    bands_new = explode_bands(sig_new.select(ID, "band_keys"), id_col=ID)
+    # what the probe broadcasts, measured: per doc, one band row per band
+    # (id, band_id, band_key, row overhead) and one payload row (id, text,
+    # minhash_bin, band_keys, simhash, row overhead); the fixed-width
+    # parts are ~56 bytes per band plus 64
+    size = sig_new.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(
+            F.octet_length(ID) * (cfg.bands + 1)
+            + F.octet_length("text")
+            + F.octet_length("minhash_bin")
+        ).alias("bytes"),
+    ).first()
+    est_bytes = (size["bytes"] or 0) + size["n"] * (cfg.bands * 56 + 64)
 
     sig_all = cat.read("signatures").unionByName(sig_new) if has_old else sig_new
-    bands_all = explode_bands(sig_all.select(ID, "band_keys"), id_col=ID)
-
-    # Broadcast the NEW side only when it fits cluster-wide (same two-level
-    # byte guard as the batch pipeline: object size AND size x executors —
-    # a broadcast is fetched+held PER EXECUTOR).  A normal micro-batch is
-    # tiny and broadcasts (corpus band keys explode map-side, no shuffle); a
-    # huge backfill batch (availableNow over a pre-existing directory delivers
-    # the WHOLE backlog as one batch) falls back to a plain shuffle join,
-    # which is the right plan at that size rather than an >8 GB broadcast.
+    bands_new = explode_bands(sig_new.select(ID, "band_keys"), id_col=ID).select(
+        "band_id", "band_key", F.col(ID).alias("id_n")
+    )
+    # Broadcast the NEW side only when it fits cluster-wide (object size
+    # AND size x executors — a broadcast is fetched+held PER EXECUTOR).  A
+    # normal micro-batch is tiny and takes the fused probe; a huge backfill
+    # batch (availableNow over a pre-existing directory delivers the WHOLE
+    # backlog as one batch) falls back to shuffle joins, the right plan at
+    # that size rather than an >8 GB broadcast.
     from image_deduplication_3m_images_spark.session import broadcast_fits
 
-    # id + band_id + band_key longs + row overhead
-    small_bands = broadcast_fits(spark, n_new * cfg.bands * 64)
-    new_side = bands_new.select("band_id", "band_key", F.col(ID).alias("id_n"))
-    pairs = (
-        (F.broadcast(new_side) if small_bands else new_side)
-        .join(
-            bands_all.select("band_id", "band_key", F.col(ID).alias("id_o")),
-            ["band_id", "band_key"],
+    if broadcast_fits(spark, est_bytes):
+        # ONE map-side pass over stored signatures ∪ batch: the corpus band
+        # keys explode against the broadcast batch band rows, the broadcast
+        # batch payload attaches the new side, and the verdict runs on the
+        # probe's output — the corpus never shuffles and is read once.
+        cols = ("band_keys", "minhash_bin", "simhash", "text")
+        probe = sig_all.select(
+            F.col(ID).alias("id_o"),
+            F.col("batch_id").alias("batch_o"),
+            *[F.col(c).alias(f"{c}_b") for c in cols],
+            F.posexplode("band_keys").alias("band_id", "band_key"),
         )
-        .where(F.col("id_n") != F.col("id_o"))
-        .select(
-            F.least("id_n", "id_o").alias("id_a"),
-            F.greatest("id_n", "id_o").alias("id_b"),
+        payload = sig_new.select(
+            F.col(ID).alias("id_n"), *[F.col(c).alias(f"{c}_a") for c in cols]
         )
+        # a pair sharing k bands matches k times: keep its first shared band
+        first_band = F.array_position(
+            F.zip_with("band_keys_a", "band_keys_b", lambda x, y: x == y), True
+        ) - 1
+        pairs = (
+            probe.join(F.broadcast(bands_new), ["band_id", "band_key"])
+            # no self pairs; a new-new pair (both sides carry this batch
+            # id, as do rows a crashed attempt of it stored) is met from
+            # both ends — keep one
+            .where(
+                (F.col("id_n") < F.col("id_o"))
+                | ((F.col("batch_o") < batch_id) & (F.col("id_n") != F.col("id_o")))
+            )
+            .join(F.broadcast(payload), "id_n")
+            .where(F.col("band_id") == first_band)
+            .withColumn("id_a", F.least("id_n", "id_o"))
+            .withColumn("id_b", F.greatest("id_n", "id_o"))
+        )
+        verified = verdict(pairs, cfg)
+    else:
+        pairs = (
+            bands_new.join(
+                explode_bands(sig_all.select(ID, "band_keys"), id_col=ID)
+                .select("band_id", "band_key", F.col(ID).alias("id_o")),
+                ["band_id", "band_key"],
+            )
+            .where(F.col("id_n") != F.col("id_o"))
+            .select(
+                F.least("id_n", "id_o").alias("id_a"),
+                F.greatest("id_n", "id_o").alias("id_b"),
+            )
+            .dropDuplicates(["id_a", "id_b"])
+        )
+        verified = verify_pairs(pairs, sig_all, cfg, id_col=ID)
+    new_edges = (
+        verified.where(F.col("verified"))
+        .select("id_a", "id_b")
+        # a crash-replay stores a batch's rows twice: one row per edge
         .dropDuplicates(["id_a", "id_b"])
-        # consumed twice (byte-guard stats agg + verify): lazy, so the stats
-        # agg below materializes the checkpoint in its own job and the band
-        # join runs once per batch, mirroring sig_new's treatment
+        # consumed by the edge append AND the CC input below; lazy, so the
+        # byte-guard aggregate materializes it (batch-sized)
         .localCheckpoint(eager=False)
     )
-
-    # same byte guard as the batch pipeline: broadcast the pair set (so the
-    # corpus-wide signatures never shuffle) unless a pathological band
-    # explosion makes it large
-    stats = pairs.agg(
+    # byte guard of the cluster-maintenance broadcasts, sized from the edges
+    stats = new_edges.agg(
         F.count(F.lit(1)).alias("n"),
         F.avg(F.length("id_a") + F.length("id_b")).alias("avg_id_bytes"),
-    ).collect()[0]
-    est_bytes = (stats["n"] or 0) * ((stats["avg_id_bytes"] or 0.0) + 16)
-    small_pairs = broadcast_fits(spark, est_bytes)
-    vp_release: list = []
-    try:
-        verified = verify_pairs(
-            F.broadcast(pairs) if small_pairs else pairs,
-            sig_all,
-            cfg,
-            id_col=ID,
-            prefilter_broadcast=small_pairs,
-            release=vp_release,
-        )
-        new_edges = (
-            verified.where(F.col("verified"))
-            .select("id_a", "id_b")
-            # consumed by the edge append AND the CC input below;
-            # batch-sized
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        # new_edges is checkpointed (or verify failed): verify's pass-A
-        # cache is dead weight — one leaked frame per micro-batch otherwise
-        for _df in vp_release:
-            _df.unpersist(blocking=False)
-
+    ).first()
+    small_edges = broadcast_fits(
+        spark, (stats["n"] or 0) * ((stats["avg_id_bytes"] or 0.0) + 16)
+    )
     cat.append(sig_new, "signatures")
     cat.append(new_edges.withColumn("batch_id", F.lit(batch_id)), "edges")
 
@@ -242,7 +279,7 @@ def ingest_neardup_batch(
     # the delta into the base).  The stored clusters table is SCANNED
     # map-side (broadcast batch-sized sets) but never shuffled and never
     # rewritten.
-    maybe_bcast = F.broadcast if small_pairs else (lambda df: df)
+    maybe_bcast = F.broadcast if small_edges else (lambda df: df)
     if cat.exists("clusters") or cat.exists("clusters_delta"):
         current = read_clusters(cat)
     else:

@@ -299,6 +299,16 @@ def test_parquet_catalog_metadata_runs_no_spark_job(spark, tmp_path):
     # the replay of a committed batch is a no-op decided from lineage
     assert _spark_jobs(spark, lambda: ingest_neardup_batch(spark, pages, 0, cat, cfg))[0] == 0
     assert cat.row_count("signatures") == n_sig
+    # a table read takes its schema from the footer: no inference job, and
+    # the schema and rows Spark's own reader returns
+    for table in ("signatures", "edges", "clusters_delta", "stage_x"):
+        n_jobs, df = _spark_jobs(spark, lambda t=table: cat.read(t))
+        assert n_jobs == 0, table
+        ref = spark.read.option("recursiveFileLookup", "true").parquet(
+            str(tmp_path / "wh" / table)
+        )
+        assert df.schema == ref.schema, table
+        assert sorted(map(str, df.collect())) == sorted(map(str, ref.collect()))
 
 
 def test_resumed_run_reads_tables_only(spark, tmp_path):

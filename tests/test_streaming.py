@@ -531,8 +531,8 @@ def test_crash_replay_reprocesses_own_partial_appends(
     clusters as a crash-free run.  A LATER batch then bands against and
     verifies over the twice-stored rows of N; the corpus is not
     de-duplicated on read, so the clusters must still equal the crash-free
-    run's — on the broadcast (melt) verify path and on the shuffle-join
-    path that the byte guard picks for oversized batches."""
+    run's — on the fused broadcast probe and on the shuffle-join fallback
+    that the byte guard picks for oversized batches."""
     from image_deduplication_3m_images_spark import session
     from image_deduplication_3m_images_spark.config import DedupConfig
     from image_deduplication_3m_images_spark.sources.checkpoint import ParquetCatalog
@@ -595,10 +595,11 @@ def test_crash_replay_reprocesses_own_partial_appends(
 
 
 def test_ingest_verify_input_has_no_corpus_exchange(spark, tmp_path, monkeypatch):
-    """Per-batch work must not be proportional to the corpus: the stored
-    ``signatures`` table reaches verify as a plain scan — no shuffle
-    Exchange above it (a corpus-wide dropDuplicates would put one there and
-    shuffle every stored text each micro-batch)."""
+    """Per-batch work must not be proportional to the corpus: in the fused
+    band-probe + verdict plan the stored ``signatures`` table is scanned
+    once, with no shuffle Exchange above it (a corpus-wide dropDuplicates
+    or a shuffle join would put one there and shuffle every stored text
+    each micro-batch)."""
     from image_deduplication_3m_images_spark.config import DedupConfig
     from image_deduplication_3m_images_spark.operators import verify
     from image_deduplication_3m_images_spark.sources.checkpoint import ParquetCatalog
@@ -607,13 +608,13 @@ def test_ingest_verify_input_has_no_corpus_exchange(spark, tmp_path, monkeypatch
     )
 
     captured = []
-    orig = verify.verify_pairs
+    orig = verify.verdict
 
-    def _capture(pairs, sig_df, *a, **kw):
-        captured.append(sig_df)
-        return orig(pairs, sig_df, *a, **kw)
+    def _capture(assembled, cfg):
+        captured.append(orig(assembled, cfg))
+        return captured[-1]
 
-    monkeypatch.setattr(verify, "verify_pairs", _capture)
+    monkeypatch.setattr(verify, "verdict", _capture)
     pages = pages_dataframe(spark, generate_pages(n_rows=80, seed=43))
     b0, b1 = _split_batches(pages, 2)
     cfg = DedupConfig()
@@ -646,5 +647,130 @@ def test_ingest_verify_input_has_no_corpus_exchange(spark, tmp_path, monkeypatch
         for roots, shuffled in scans(plan, False)
         if roots.endswith(sig_path)
     ]
-    assert stored, plan.toString()  # verify reads the stored table
+    assert len(stored) == 1, plan.toString()  # the probe reads it once
     assert not any(stored), plan.toString()
+
+
+def _spark_jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` launched, counted with a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = "jobs_" + uuid.uuid4().hex[:8]
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_ingest_batch_job_budget(spark, tmp_path):
+    """A micro-batch onto a stored corpus runs a bounded number of Spark
+    jobs: verification happens inside the band probe (no pair set, stats
+    or verify-pass jobs) and table reads take their schema from the
+    footers (no schema-inference job per read)."""
+    from image_deduplication_3m_images_spark.config import DedupConfig
+    from image_deduplication_3m_images_spark.sources.checkpoint import ParquetCatalog
+    from image_deduplication_3m_images_spark.streaming.incremental import (
+        ingest_neardup_batch,
+    )
+
+    pages = pages_dataframe(spark, generate_pages(n_rows=80, seed=43))
+    b0, b1 = _split_batches(pages, 2)
+    cfg = DedupConfig()
+    cat = ParquetCatalog(spark, str(tmp_path / "wh"))
+    ingest_neardup_batch(spark, b0, 0, cat, cfg)
+    n_jobs = _spark_jobs(spark, lambda: ingest_neardup_batch(spark, b1, 1, cat, cfg))
+    assert n_jobs <= 26, n_jobs
+
+
+@pytest.mark.parametrize("guard", ["broadcast", "shuffle"])
+def test_ingest_edges_equal_verify_pairs_over_band_join(
+    spark, tmp_path, monkeypatch, guard
+):
+    """The fused probe (broadcast) and its shuffle fallback append, for a
+    batch onto a stored corpus, exactly the edges ``verify_pairs`` accepts
+    over the plain band join of the batch against everything stored — one
+    row per edge.  The fixture's batch holds containment-only matches,
+    candidates the verdict rejects and new-new pairs, so every branch of
+    the probe's pair rules and of the verdict is compared."""
+    from image_deduplication_3m_images_spark import session
+    from image_deduplication_3m_images_spark.config import DedupConfig
+    from image_deduplication_3m_images_spark.operators.lsh import explode_bands
+    from image_deduplication_3m_images_spark.operators.verify import verify_pairs
+    from image_deduplication_3m_images_spark.sources.checkpoint import ParquetCatalog
+    from image_deduplication_3m_images_spark.streaming.incremental import (
+        ingest_neardup_batch,
+    )
+
+    pages = pages_dataframe(spark, generate_pages(n_rows=150, seed=7))
+    b0, b1 = _split_batches(pages, 2)
+    cfg = DedupConfig()
+    cat = ParquetCatalog(spark, str(tmp_path / "wh"))
+    ingest_neardup_batch(spark, b0, 0, cat, cfg)
+    if guard == "shuffle":
+        monkeypatch.setattr(session, "broadcast_fits", lambda *a, **kw: False)
+    ingest_neardup_batch(spark, b1, 1, cat, cfg)
+
+    sig = cat.read("signatures")
+
+    def bands(df, name):
+        return explode_bands(df.select("url", "band_keys"), id_col="url").select(
+            "band_id", "band_key", F.col("url").alias(name)
+        )
+
+    pairs = (
+        bands(sig.where(F.col("batch_id") == 1), "id_n")
+        .join(bands(sig, "id_o"), ["band_id", "band_key"])
+        .where(F.col("id_n") != F.col("id_o"))
+        .select(
+            F.least("id_n", "id_o").alias("id_a"),
+            F.greatest("id_n", "id_o").alias("id_b"),
+        )
+        .distinct()
+    )
+    ref = verify_pairs(pairs, sig, cfg, id_col="url").collect()
+    got = [
+        (r["id_a"], r["id_b"])
+        for r in cat.read("edges").where(F.col("batch_id") == 1).collect()
+    ]
+    assert len(got) == len(set(got))
+    assert set(got) == {(r["id_a"], r["id_b"]) for r in ref if r["verified"]}
+
+    b1_urls = {r["url"] for r in b1.select("url").collect()}
+    sim_ok = [
+        r["sig_matches"] >= 90 or r["hamming"] <= cfg.hamming_max for r in ref
+    ]
+    assert any(r["containment"] and not ok for r, ok in zip(ref, sim_ok))
+    assert any(not r["verified"] for r in ref)
+    assert any(
+        r["verified"] and r["id_a"] in b1_urls and r["id_b"] in b1_urls
+        for r in ref
+    )
+
+
+def test_batch_is_signed_on_every_core(spark, tmp_path, monkeypatch):
+    """The batch reaches the fused html->signature UDF in the session's
+    parallelism: left to AQE, the within-batch pick's tiny window exchange
+    is coalesced to one partition and one task signs the whole batch."""
+    from image_deduplication_3m_images_spark.config import DedupConfig
+    from image_deduplication_3m_images_spark.plans import dedupe
+    from image_deduplication_3m_images_spark.sources.checkpoint import ParquetCatalog
+    from image_deduplication_3m_images_spark.streaming.incremental import (
+        ingest_neardup_batch,
+    )
+
+    captured = []
+    orig = dedupe.build_signatures
+
+    def _capture(pages, cfg):
+        captured.append(pages)
+        return orig(pages, cfg)
+
+    monkeypatch.setattr(dedupe, "build_signatures", _capture)
+    pages = pages_dataframe(spark, generate_pages(n_rows=40, seed=17))
+    cat = ParquetCatalog(spark, str(tmp_path / "wh"))
+    ingest_neardup_batch(spark, pages, 0, cat, DedupConfig())
+    n_parts = captured[0].rdd.getNumPartitions()
+    assert n_parts == spark.sparkContext.defaultParallelism, n_parts
