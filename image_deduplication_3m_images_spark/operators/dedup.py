@@ -199,8 +199,7 @@ def ngram_jaccard_pairs(
     only for docs that actually appear in a pair, and the corpus-wide gram
     arrays never enter a shuffle.  OPT-IN (default False): an unconditional
     broadcast of an unbounded pair set risks OOM, so callers enable it only
-    when the pair set is known/measured small — the same contract as
-    verify_pairs, whose callers gate on estimated pair-set bytes.
+    when the pair set is known/measured small.
     """
     if prefilter_broadcast:
         ids = (

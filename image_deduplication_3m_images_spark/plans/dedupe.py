@@ -39,10 +39,7 @@ from image_deduplication_3m_images_spark.operators.lsh import (
     hot_bucket_probe,
 )
 from image_deduplication_3m_images_spark.operators.verify import verify_pairs
-from image_deduplication_3m_images_spark.session import (
-    broadcast_fits,
-    hadoop_delete,
-)
+from image_deduplication_3m_images_spark.session import hadoop_delete
 from image_deduplication_3m_images_spark.sources.checkpoint import make_catalog
 
 ID = "url"
@@ -135,21 +132,14 @@ def run_dedupe(
         return ",".join(f"{t}={cat.snapshot_id(t)}" for t in tables)
 
     def stage(
-        name: str, builder, inputs: str, extra: dict | None = None,
-        release: list | None = None,
+        name: str, builder, inputs: str, extra: dict | None = None
     ) -> DataFrame:
         """Resume ``name`` or build, write and log it.  ``extra`` is read
-        after the builder returns, so a builder may fill it; frames the
-        builder appends to ``release`` are unpersisted once the table is
-        written, or when building or writing fails."""
+        after the builder returns, so a builder may fill it."""
         if resume and cat.stage_complete(name, chash, inputs):
             return cat.read(name)
         t0 = time.time()
-        try:
-            cat.write(builder(), name)
-        finally:
-            for df in release or []:
-                df.unpersist(blocking=False)
+        cat.write(builder(), name)
         out = cat.read(name)
         # lineage from parquet footers: no extra scan of the fresh table
         cat.log_lineage_for_table(
@@ -227,50 +217,16 @@ def run_dedupe(
         "candidate_pairs", _candidates, reads("signatures"), extra=bucket_profile
     )
 
-    # Verification: the pairs table is usually tiny relative to the corpus —
-    # broadcast it so the signatures side is filtered MAP-SIDE (no wide
-    # shuffle of text/minhash columns).  Guarded by ESTIMATED BYTES, not row
-    # count (10M rows of ids would be a multi-GB broadcast); the count comes
-    # from the committed table's parquet footers driver-side — zero Spark
-    # jobs (the old count() was one more fixed-cost action per run).  The
-    # per-row constant assumes sid pairs (two longs): assert the schema so a
-    # regression back to string ids fails loudly instead of under-guarding
-    # the broadcast (ADVICE r4 item 3).  A pathological pair explosion falls
-    # back to a shuffle join rather than OOMing the broadcast.
-    from pyspark.sql.types import LongType
-
-    pair_types = {f.name: f.dataType for f in cands.schema.fields}
-    assert isinstance(pair_types["id_a"], LongType) and isinstance(
-        pair_types["id_b"], LongType
-    ), f"pair byte-guard assumes long ids, got {pair_types}"
-    n_pairs = cat.row_count("candidate_pairs")
-    # melt form: 2 broadcast rows per pair, each (3 longs + flag) + row
-    # overhead — conservative per-pair constant
-    est_bytes = n_pairs * 96
-    small_pairs = broadcast_fits(spark, est_bytes)
-    pairs_in = F.broadcast(cands) if small_pairs else cands
-    # verify's internal pass-A cache is dead weight once the stage is
-    # written (or failed): stage() releases it — without that, every
-    # run_dedupe call on a long-lived driver leaks one cached frame
-    vp_release: list = []
+    # Verification: one join per pair side.  Both inputs are committed
+    # parquet tables, so Spark sees their sizes and picks broadcast or
+    # sort-merge for each join itself (file statistics, then AQE's runtime
+    # sizes): the narrow pair ids broadcast, and a side too big to
+    # broadcast (a pair explosion, a large corpus) takes a spillable
+    # sort-merge join instead of an oversized broadcast.
     verified = stage(
         "verified_pairs",
-        lambda: verify_pairs(
-            pairs_in,
-            signatures,
-            cfg,
-            id_col="sid",
-            # when pairs are broadcastable, verify runs its two-pass plan:
-            # the corpus-wide table never shuffles and only the sim-failing
-            # residue pays a text assembly (see verify.py).  The
-            # checkpointed `containment` column is therefore the rescue
-            # verdict (False for sim-passing pairs); `verified` is
-            # identical to the two-join plan.
-            prefilter_broadcast=small_pairs,
-            release=vp_release,
-        ),
+        lambda: verify_pairs(cands, signatures, cfg, id_col="sid"),
         reads("signatures", "candidate_pairs"),
-        release=vp_release,
     )
 
     # Reliable checkpoints only help when executors can die independently of

@@ -406,8 +406,8 @@ def q_verified_pairs(spark, sf_dir):
 
 
 def q_containment_pairs(spark, sf_dir):
-    """J7 verdict per candidate pair — the catalog verifies without
-    deferral, so containment is evaluated on every pair."""
+    """J7 verdict per candidate pair: ``verify_pairs`` evaluates
+    containment on every pair."""
     return _verified(spark, sf_dir).select("id_a", "id_b", "containment")
 
 
@@ -693,7 +693,7 @@ def q_simhash_pairs(spark, sf_dir):
 
 def q_ngram_jaccard(spark, sf_dir):
     # prefilter opt-in: the LSH pair set at any tested SF is measured tiny
-    # relative to the corpus (the pipeline's byte guard makes the same call)
+    # relative to the corpus
     pairs = _cands(spark, sf_dir).select("id_a", "id_b")
     return ngram_jaccard_pairs(
         _docs(spark, sf_dir), pairs, prefilter_broadcast=True

@@ -44,8 +44,9 @@ def get_spark(
         # let AQE re-plan INSIDE cached plans too (off by default): without
         # it every .persist()/.cache() materialization keeps the static
         # shuffle-partition count — measured as 128-tiny-task stages on
-        # cached intermediates (verify pass-A, CC edge probes) and a
-        # consistent ~1 s on the 20k-doc pipeline in an alternated A/B.
+        # cached intermediates (CC edge probes, a since-deleted verify
+        # cache) and a consistent ~1 s on the 20k-doc pipeline in an
+        # alternated A/B.
         # The trade (a consumer may lose output-partitioning reuse and
         # re-shuffle) doesn't bite here: cached frames feed aggregations/
         # joins that AQE replans anyway, at every scale.

@@ -283,8 +283,11 @@ def ingest_neardup_batch(
     if cat.exists("clusters") or cat.exists("clusters_delta"):
         current = read_clusters(cat)
     else:
-        # first batch: no stored labels, every id labels itself
-        current = spark.createDataFrame([], f"{ID} string, cluster_id string")
+        # first batch: no stored labels, every id labels itself.  An empty
+        # JVM-side frame: createDataFrame([]) would plan a pickled-row scan
+        # that starts Python workers to read nothing.
+        empty = F.lit(None).cast("string")
+        current = spark.range(0).select(empty.alias(ID), empty.alias("cluster_id"))
     nodes = (
         new_edges.select(F.col("id_a").alias(ID))
         .unionByName(new_edges.select(F.col("id_b").alias(ID)))

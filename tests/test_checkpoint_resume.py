@@ -227,9 +227,9 @@ def test_drop_removes_crash_leftovers_no_resurrection(spark, tmp_path):
 
 @pytest.mark.parametrize("failing_stage", ["candidate_pairs", "verified_pairs"])
 def test_failed_stage_leaves_no_cached_blocks(spark, tmp_path, monkeypatch, failing_stage):
-    """run_dedupe persists one intermediate: verify's pass-A frame across
-    the verified stage.  A run whose candidate or verified stage raises must
-    leave no cached block behind — a long-lived driver retrying failed runs
+    """A run whose candidate or verified stage raises leaves no cached
+    block behind: run_dedupe persists nothing (every stage reads its inputs
+    from committed tables), and a long-lived driver retrying failed runs
     would otherwise accumulate one dead cached frame per attempt."""
     import image_deduplication_3m_images_spark.plans.dedupe as dedupe
 
@@ -246,7 +246,7 @@ def test_failed_stage_leaves_no_cached_blocks(spark, tmp_path, monkeypatch, fail
         real_verify = dedupe.verify_pairs
 
         def boom(*args, **kwargs):
-            real_verify(*args, **kwargs)  # persists pass A into ``release``
+            real_verify(*args, **kwargs)  # plans verify; persists nothing
             raise RuntimeError("simulated verify-stage failure")
 
         monkeypatch.setattr(dedupe, "verify_pairs", boom)
@@ -323,6 +323,46 @@ def test_resumed_run_reads_tables_only(spark, tmp_path):
     assert n_jobs <= 6, n_jobs
     assert sorted(map(tuple, resumed.collect())) == fresh
     pages.unpersist()
+
+
+def test_pipeline_verified_pairs_equal_verify_pairs(spark, tmp_path):
+    """run_dedupe's verified_pairs table holds, row for row, what
+    verify_pairs computes over the run's own candidate_pairs and
+    signatures — containment included, which is evaluated on every pair.
+    The fixture holds pairs that pass the signature tests AND contain one
+    another, so a plan that skips containment where the verdict no longer
+    needs it cannot match."""
+    from image_deduplication_3m_images_spark.operators.verify import verify_pairs
+
+    wh = str(tmp_path / "wh")
+    cfg = DedupConfig()
+    pages = pages_dataframe(spark, generate_pages(n_rows=120, seed=13))
+    run_dedupe(spark, pages, wh, cfg)
+    cat = ParquetCatalog(spark, wh)
+    got = cat.read("verified_pairs")
+    want = verify_pairs(
+        cat.read("candidate_pairs"), cat.read("signatures"), cfg, id_col="sid"
+    )
+    assert got.columns == want.columns
+    want_rows = want.collect()
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want_rows))
+    min_matches = cfg.jaccard_threshold * cfg.num_perm
+    assert any(
+        r["containment"]
+        and (r["sig_matches"] >= min_matches or r["hamming"] <= cfg.hamming_max)
+        for r in want_rows
+    )
+
+
+def test_fresh_run_job_budget(spark, tmp_path):
+    """A fresh run_dedupe runs a bounded number of Spark jobs.  Verify is
+    one plan whose join strategies Spark picks from size statistics: no
+    pair-count, cache-materialization or second-pass jobs."""
+    pages = pages_dataframe(spark, generate_pages(n_rows=120, seed=13))
+    n_jobs, _ = _spark_jobs(
+        spark, lambda: run_dedupe(spark, pages, str(tmp_path / "wh"))
+    )
+    assert n_jobs <= 18, n_jobs
 
 
 def test_spark_lineage_reader_matches_pyarrow_reader(spark, tmp_path):

@@ -129,9 +129,8 @@ def test_pipeline_verify_stage_single_python_boundary(spark):
     row-at-a-time BatchEvalPython ever appears.  (A zero-Python variant, 128
     binary-substring compares summed in one expression, was measured slower
     at 128 perms — pages e2e 11-13 s -> 33-67 s at 20k docs — so exactly one
-    ArrowEvalPython is the intended shape.)  The pipeline's two-pass plan
-    runs the kernel inside the cached pass A; the residue branch and the
-    final join read that cache, so the plan around it has no Python."""
+    ArrowEvalPython is the intended shape.)  The one plan caches nothing:
+    no InMemoryRelation sits anywhere in it."""
     from image_deduplication_3m_images_spark.operators.verify import verify_pairs
 
     pages = pages_dataframe(spark, generate_pages(n_rows=60, seed=5))
@@ -140,14 +139,11 @@ def test_pipeline_verify_stage_single_python_boundary(spark):
         [(r1, r2) for r1, r2 in zip(*[iter(sorted(x["url"] for x in sig.select("url").collect()))] * 2)][:10],
         ["id_a", "id_b"],
     )
-    release: list = []
-    out = verify_pairs(
-        F.broadcast(pairs), sig, CFG, id_col="url", prefilter_broadcast=True,
-        release=release,
-    )
+    out = verify_pairs(pairs, sig, CFG, id_col="url")
+    assert out.count() == 10
 
     def node_names(node):
-        """Physical operator names, not descending into cached relations."""
+        """Physical operator names, through AQE's final plan."""
         name = node.getClass().getSimpleName()
         if name == "AdaptiveSparkPlanExec":
             return node_names(node.executedPlan())
@@ -158,48 +154,9 @@ def test_pipeline_verify_stage_single_python_boundary(spark):
             n for k in range(kids.size()) for n in node_names(kids.apply(k))
         ]
 
-    try:
-        assert len(release) == 1
-        cached = release[0]._jdf.queryExecution().withCachedData()
-        assert cached.getClass().getSimpleName() == "InMemoryRelation"
-        pass_a = node_names(cached.cachedPlan())
-        outside = node_names(out._jdf.queryExecution().executedPlan())
-        assert pass_a.count("ArrowEvalPythonExec") == 1, pass_a
-        assert "InMemoryTableScanExec" in outside, outside
-        assert "ArrowEvalPythonExec" not in outside, outside
-        assert "BatchEvalPythonExec" not in pass_a + outside
-    finally:
-        for df in release:
-            df.unpersist(blocking=False)
-
-
-def test_verify_deferred_containment_equivalent_verdicts(spark):
-    """The two-pass plan (prefilter_broadcast): identical (id_a, id_b,
-    sig_matches, hamming, verified) to the two-join plan, which evaluates
-    containment on every pair; `containment` may be False where the
-    two-join plan says True ONLY for pairs that already pass the signature
-    tests (the rescue was not needed) — never the other way around."""
-    from image_deduplication_3m_images_spark.operators.lsh import candidate_pairs
-    from image_deduplication_3m_images_spark.operators.verify import verify_pairs
-
-    pages = pages_dataframe(spark, generate_pages(n_rows=200, seed=7))
-    sig = build_signatures(pages, CFG).localCheckpoint(eager=True)
-    pairs = candidate_pairs(sig, CFG, id_col="url").select("id_a", "id_b")
-    full = verify_pairs(pairs, sig, CFG, id_col="url").collect()
-    defer = verify_pairs(
-        F.broadcast(pairs), sig, CFG, id_col="url", prefilter_broadcast=True
-    ).collect()
-    fm = {(r["id_a"], r["id_b"]): r for r in full}
-    dm = {(r["id_a"], r["id_b"]): r for r in defer}
-    assert fm.keys() == dm.keys() and fm, f"{len(fm)} vs {len(dm)} pairs"
-    # the fixture must actually exercise the rescue path
-    assert any(r["containment"] and not (r["sig_matches"] >= 90 or r["hamming"] <= 3) for r in full)
-    for k, f in fm.items():
-        d = dm[k]
-        assert (f["sig_matches"], f["hamming"], f["verified"]) == (
-            d["sig_matches"], d["hamming"], d["verified"]
-        ), (k, f, d)
-        if f["containment"] != d["containment"]:
-            # only allowed on sim-passing pairs, and only full=True/defer=False
-            assert f["containment"] and not d["containment"], (k, f, d)
-            assert f["sig_matches"] >= 90 or f["hamming"] <= 3, (k, f, d)
+    qe = out._jdf.queryExecution()
+    names = node_names(qe.executedPlan())
+    assert names.count("ArrowEvalPythonExec") == 1, names
+    assert "BatchEvalPythonExec" not in names, names
+    assert "InMemoryTableScanExec" not in names, names
+    assert "InMemoryRelation" not in qe.withCachedData().toString()

@@ -124,51 +124,6 @@ def test_no_f_customers_is_anti_join(spark):
     assert "o_orderstatus" in plan and "PushedFilters" in plan
 
 
-def test_verify_two_pass_reads_signatures_once(spark):
-    """With prefilter_broadcast verify runs its two-pass plan, and the
-    corpus-sized signatures table is read ONCE with its signature columns:
-    pass A melt-assembles (minhash_bin, simhash) against a broadcast of the
-    narrow pair ids and is cached; pass B assembles only the text column,
-    only for the pairs failing the signature tests.  Both assemblies are
-    map-side broadcast joins, so no sort-merge join appears, and NO
-    broadcast may carry a wide payload (text / packed minhash) — a
-    broadcast costs build+fetch PER EXECUTOR (verify's measured ~60-70 s
-    fixed cost at 2M docs, VERDICT r4 item 1b).
-    """
-    from image_deduplication_3m_images_spark.operators.verify import verify_pairs
-
-    from pyspark.sql import functions as F
-
-    sig = Q._sig(spark, SF)
-    pairs = spark.createDataFrame([(0, 1), (2, 3)], ["id_a", "id_b"])
-    release: list = []
-    try:
-        out = verify_pairs(
-            F.broadcast(pairs), sig, DedupConfig(), id_col="doc_id",
-            prefilter_broadcast=True, release=release,
-        )
-        plan = plan_of(out)
-        # exactly one scan of the cached signatures outputs minhash_bin
-        # (pass A's; the nested documents-cache scan under it does not
-        # count), map-side joined against the broadcast pair ids
-        import re
-
-        scans = re.findall(
-            r"\(\d+\) InMemoryTableScan\nOutput \[\d+\]: \[[^\]]*minhash_bin", plan
-        )
-        assert len(scans) == 1, plan[:2000]
-        assert "BroadcastHashJoin" in plan, plan[:2000]
-        # no wide sort-merge join of slivers
-        assert "SortMergeJoin" not in plan, plan[:2000]
-        # every BroadcastExchange input must be NARROW: no text/minhash columns
-        for section in plan.split("\n\n"):
-            if ") BroadcastExchange" in section.split("\n")[0]:
-                assert "text" not in section and "minhash" not in section, section
-    finally:
-        for df in release:
-            df.unpersist(blocking=False)
-
-
 def test_pipeline_candidate_stage_writes_pair_ids_only(spark, tmp_path, monkeypatch):
     """run_dedupe reads only the pair ids of its candidate stage, so the
     stage projects ``candidate_pairs``' output to (id_a, id_b): the unread

@@ -685,6 +685,42 @@ def test_ingest_batch_job_budget(spark, tmp_path):
     assert n_jobs <= 26, n_jobs
 
 
+def test_first_batch_cc_input_scans_no_python_rows(spark, tmp_path, monkeypatch):
+    """The first batch has no stored labels, and its empty label frame is a
+    JVM-side frame: the only existing-RDD scans in batch 0's CC input read
+    the batch's checkpointed (id_a, id_b) edges.  A ``createDataFrame([])``
+    label frame would add a scan of pickled Python rows over (url,
+    cluster_id), starting Python workers to read nothing."""
+    import re
+
+    from image_deduplication_3m_images_spark.config import DedupConfig
+    from image_deduplication_3m_images_spark.operators import cluster
+    from image_deduplication_3m_images_spark.sources.checkpoint import ParquetCatalog
+    from image_deduplication_3m_images_spark.streaming.incremental import (
+        ingest_neardup_batch,
+    )
+
+    captured = []
+    orig = cluster.connected_components
+
+    def _capture(edges, *args, **kwargs):
+        captured.append(edges)
+        return orig(edges, *args, **kwargs)
+
+    monkeypatch.setattr(cluster, "connected_components", _capture)
+    pages = pages_dataframe(spark, generate_pages(n_rows=60, seed=43))
+    cat = ParquetCatalog(spark, str(tmp_path / "wh"))
+    ingest_neardup_batch(spark, pages, 0, cat, DedupConfig())
+    assert len(captured) == 1
+
+    plan = captured[0]._jdf.queryExecution().executedPlan().toString()
+    scans = re.findall(r"Scan ExistingRDD\[([^\]]*)\]", plan)
+    assert scans, plan  # the checkpointed edges
+    for cols in scans:
+        names = [c.split("#")[0] for c in cols.split(",")]
+        assert names == ["id_a", "id_b"], plan
+
+
 @pytest.mark.parametrize("guard", ["broadcast", "shuffle"])
 def test_ingest_edges_equal_verify_pairs_over_band_join(
     spark, tmp_path, monkeypatch, guard
